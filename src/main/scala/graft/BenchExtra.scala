@@ -10,7 +10,11 @@ package graft
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.BenchExtra [plans=<dir>] [reps=N] [q1 q2 ...]"
   * With no query args, runs all declared queries. With plans=<dir>, also
-  * writes <dir>/<query>.txt containing the formatted plan.
+  * writes <dir>/<query>.txt containing the formatted plan and then the
+  * FINAL (post-execution, AQE-resolved) plan with its reused and shuffle
+  * query-stage counts: the pre-execution explain shows duplicated
+  * subtrees that AQE's runtime stage cache may already dedup, so
+  * optimization decisions must read the plan that actually ran.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -32,10 +36,18 @@ object BenchExtra {
     val out = qs.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"bench-extra: $name")
       plansDir.foreach { d =>
-        val plan = fn(spark, sfDir).queryExecution.explainString(
+        val df = fn(spark, sfDir)
+        val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
+        // run THIS QueryExecution so its adaptive plan reaches its final form
+        df.collect()
+        val fin = df.queryExecution.executedPlan.toString
+        val reused = fin.linesIterator.count(_.contains("ReusedQueryStage"))
+        val stages = fin.linesIterator.count(_.contains("ShuffleQueryStage"))
         val w = new java.io.PrintWriter(s"$d/$name.txt")
-        try w.write(plan) finally w.close()
+        try w.write(plan + "\n== Final Plan (post-execution) ==\n" +
+          s"reusedStages=$reused shuffleStages=$stages\n" + fin)
+        finally w.close()
       }
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

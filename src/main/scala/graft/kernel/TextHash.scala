@@ -13,6 +13,10 @@ object TextHash {
   val LshBands = 16      // 16 bands x 4 rows = 64
   val LshRows = 4
 
+  // the \s+ token separator of topBigramFrac and langId, compiled once
+  // (String.split recompiles a multi-char regex on every call)
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
   // xxhash-like 64-bit avalanche (splitmix64 finalizer) over a seed+value
   @inline def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
@@ -145,7 +149,7 @@ object TextHash {
     */
   def topBigramFrac(lowered: String): Double = {
     if (lowered == null) return 0.0
-    val raw = lowered.split("\\s+", -1)
+    val raw = Whitespace.split(lowered, -1)
     var n = 0
     var i = 0
     while (i < raw.length) { if (raw(i).nonEmpty) n += 1; i += 1 }
@@ -205,6 +209,11 @@ object TextHash {
     "de" -> Set("der", "die", "das", "und", "ist", "von", "mit", "den", "ein", "nicht"),
     "zh" -> Set("的", "是", "在", "了", "和", "有", "我", "不", "这", "他"))
 
+  // langId's argmax order: languages sorted by name (first wins a tie),
+  // zh excluded (it is decided by the CJK ratio instead)
+  private val StopWordsByLang: Seq[(String, Set[String])] =
+    StopWords.toSeq.sortBy(_._1).filter(_._1 != "zh")
+
   /** Heuristic language ID: CJK char ratio short-circuits to zh; else the
     * language whose stopword set covers the most tokens; ties and
     * no-signal -> "und" (undetermined).
@@ -223,10 +232,10 @@ object TextHash {
       i += 1
     }
     if (total > 0 && cjk.toDouble / total > 0.2) return "zh"
-    val tokens = text.toLowerCase.split("\\s+")
+    val tokens = Whitespace.split(text.toLowerCase)
     var best = "und"
     var bestN = 0
-    for ((lang, sw) <- StopWords.toSeq.sortBy(_._1) if lang != "zh") {
+    for ((lang, sw) <- StopWordsByLang) {
       val n = tokens.count(sw.contains)
       if (n > bestN) { best = lang; bestN = n }
     }

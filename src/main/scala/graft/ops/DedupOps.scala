@@ -45,7 +45,7 @@ object DedupOps {
     * bucket self-join needs anyway; the self-join's two sides then share
     * that exchange via ReuseExchange (both sides are the identical
     * subtree), so the hashing below it evaluates ONCE per row —
-    * plan-asserted in BandingSpec, win quantified by BandProbe.
+    * plan-asserted and counted in BandingSpec.
     * Keeps rows whose bucket has 2..maxBucket members (same filter as
     * the old valve: singleton buckets yield no pairs; mega-buckets are
     * exact-dedup's job).
@@ -571,8 +571,8 @@ object DedupOps {
     */
   /** The nPlanes-bit bucket key for LSH table `t` over the embedding
     * column `emb`, folding the precomputed sign rows. Shared by
-    * embeddingCandidates and the HyperProbe A/B harness so the probe
-    * cannot drift from what production runs. The column is a parameter —
+    * embeddingCandidates, the streaming near-dup path and BandingSpec, so
+    * none can drift from what production runs. The column is a parameter —
     * the helper must not silently couple to a column NAME while taking
     * everything else explicitly (round-3 hygiene item).
     */

@@ -57,20 +57,21 @@ object CorpusPipeline {
       DedupOps.exactDedup(docs).select(col("keep_id").as("doc_id")),
       Seq("doc_id"), "left_semi")
 
-  /** The composed tail over a MATERIALIZED docs table (persisted or
-    * read back from storage — passing a raw lazy extraction plan here
-    * would re-run it once per consumer). Returns the kept corpus with
-    * gate annotations: docs columns + (quality, lang_pred).
-    */
   /** The shared post-pairs tail: clusters -> survivors -> gate (one
-    * definition, so corpus() and runCorpus() cannot drift).
+    * definition, so corpus(), runCorpus() and SparkEntry's x_corpus
+    * queries cannot drift).
     */
-  private def gateTail(exact: DataFrame, pairs: DataFrame,
+  private[graft] def gateTail(exact: DataFrame, pairs: DataFrame,
       minQuality: Double, langs: Seq[String]): DataFrame =
     TextOps.qualityFilter(
       DedupOps.dedupSurvivors(exact, DedupOps.clusterLabels(pairs)),
       minQuality, langs)
 
+  /** The composed tail over a MATERIALIZED docs table (persisted or
+    * read back from storage — passing a raw lazy extraction plan here
+    * would re-run it once per consumer). Returns the kept corpus with
+    * gate annotations: docs columns + (quality, lang_pred).
+    */
   def corpus(docs: DataFrame, minJaccard: Double = 0.5,
       minQuality: Double = 0.8,
       langs: Seq[String] = Seq("en")): DataFrame = {

@@ -99,7 +99,7 @@ object ExtractPipeline {
     * carries the RAW payload (extraction runs downstream of it), and
     * extraction parallelism becomes nPart instead of input splits — so
     * this variant is for clustered layouts; keep extract() for uniform
-    * ones (EqualizeProbe A/Bs the two).
+    * ones.
     */
   def extractEqualized(turns: DataFrame, nPart: Int = 0): DataFrame = {
     val p = if (nPart > 0) nPart

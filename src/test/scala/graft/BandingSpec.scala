@@ -15,8 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Evidence here: (a) the candidate SETS are bit-identical to the old
   * recipe (inlined below), (b) the final plan reads the corpus ONCE and
-  * carries a ReusedExchange. The wall-clock win is quantified by
-  * graft.BandProbe (BENCH.md).
+  * carries a ReusedExchange. The wall-clock win measured when the shape
+  * landed is in BENCH.md.
   */
 class BandingSpec extends AnyFunSuite {
 

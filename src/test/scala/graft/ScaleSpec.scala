@@ -365,4 +365,40 @@ class ScaleSpec extends AnyFunSuite {
     assert(!exch.get.contains(", text#"),
       s"exchange input must not carry the raw payload column:\n${exch.get}")
   }
+
+  test("flagship plan: the scan reads 4 of 6 columns, extract_turn runs in whole-stage codegen") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_planclaims").toString
+    SparkEntry.transcripts(spark, nConvs = 8, cap = 16)
+      .write.mode("overwrite").parquet(dir)
+    val df = ExtractPipeline.extract(spark.read.parquet(dir))
+    df.collect() // force execution so the final (AQE-resolved) plan exists
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val all = nodes(df.queryExecution.executedPlan)
+    // column pruning: role and tool never leave the parquet reader
+    val scans = all.collect { case f: FileSourceScanExec => f }
+    assert(scans.nonEmpty, s"no parquet scan in:\n${df.queryExecution.executedPlan}")
+    scans.foreach { f =>
+      val cols = f.requiredSchema.fieldNames.toSet
+      assert(cols.size == 4 && !cols("role") && !cols("tool"),
+        s"scan must read 4 of 6 columns without role/tool, read: $cols")
+    }
+    // the operators a WholeStageCodegen stage compiles: its subtree down
+    // to the InputAdapter boundaries
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(fused)
+    }
+    val inCodegen = all.collect { case w: WholeStageCodegenExec => w }
+      .flatMap(w => fused(w.child))
+    assert(inCodegen.exists(_.expressions.exists(_.toString.contains("extract_turn"))),
+      s"extract_turn must be evaluated inside a WholeStageCodegen stage:\n" +
+        df.queryExecution.executedPlan)
+  }
 }
