@@ -17,11 +17,13 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   *    The rank filter compiles to WindowGroupLimit (Spark >= 3.5), so
   *    each map task keeps only its local top-k before the exchange —
   *    the shuffle carries O(k x partitions) rows per query, not N x Q.
-  *  - IVF: build once (nearest-centroid assignment, corpus written
-  *    `partitionBy(centroid_id)`), probe per query batch — the probed
-  *    cells become a PARTITION-PRUNED read of the index, never a corpus
-  *    scan. Centroid count is FIXED (independent of corpus size), so the
-  *    centroid table broadcasts at any scale.
+  *  - IVF: one self-describing index (pinned centroids + corpus written
+  *    `partitionBy(centroid_id)` + a digest meta) that ivfTopK ensures
+  *    and reuses, buildIvfIndexed/ivfAppendIndexed build and grow, and
+  *    every probe reads — the probed cells become a PARTITION-PRUNED
+  *    read of the index, never a corpus scan. Centroid count is FIXED
+  *    (independent of corpus size), so the centroid table broadcasts at
+  *    any scale.
   */
 object SimilarityOps {
 
@@ -163,164 +165,71 @@ object SimilarityOps {
     corpus.select(avg(best)).head().getDouble(0)
   }
 
-  /** Index build: assign every corpus vector map-side, write
-    * partitionBy(centroid_id) — probes then prune partitions. One narrow
-    * pass + one write; on a real cluster this is the Iceberg table
-    * `PARTITIONED BY centroid_id`.
-    */
-  def buildIvfIndex(corpus: DataFrame, cents: Array[(Long, Array[Float])],
-      path: String): Unit =
-    buildIvfIndexBc(corpus, broadcastCentroids(corpus.sparkSession, cents),
-      path)
-
-  private def buildIvfIndexBc(corpus: DataFrame,
-      bc: Broadcast[CentroidKernel.Centroids], path: String): Unit =
-    corpus.select(col("vec_id"), col("embedding"))
-      .withColumn("centroid_id", nearestCentroid(col("embedding"), bc))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-
-  /** IVF search over a built index: per query, probe the nProbe nearest
-    * cells; the distinct probed cell set (<= nCentroids values, tiny) is
-    * collected and pushed as a static partition filter — the index read
-    * is partition pruning, not a scan. Exact cosine re-rank inside the
-    * probed cells only.
-    */
-  def ivfProbeIndex(spark: SparkSession, indexPath: String,
-      cents: Array[(Long, Array[Float])], queries: DataFrame,
-      k: Int = 10, nProbe: Int = 4): DataFrame =
-    ivfProbeIndexBc(spark, indexPath, broadcastCentroids(spark, cents),
-      queries, k, nProbe)
-
-  private def ivfProbeIndexBc(spark: SparkSession, indexPath: String,
-      bc: Broadcast[CentroidKernel.Centroids], queries: DataFrame,
-      k: Int, nProbe: Int): DataFrame = {
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("centroid_id",
-        explode(probeCentroids(col("q_emb"), bc, nProbe)))
-    // static partition filter: <= nCentroids longs — partition PRUNING on
-    // the index (matches the partitionBy layout), robust at tiny scale
-    // where dynamic partition pruning would not trigger
-    val cells = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0))
-    val indexed = spark.read.parquet(indexPath)
-      .filter(col("centroid_id").cast("long").isin(cells.toIndexedSeq: _*))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    indexed.join(broadcast(probes),
-        indexed("centroid_id").cast("long") === probes("centroid_id"))
-      .select(col("query_id"), indexed("vec_id").as("vec_id"),
-        cosine_sim(indexed("embedding"), col("q_emb")).as("cos"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  /** Order-invariant corpus digest: (row count, XOR of
-    * xxhash64(vec_id, embedding)) — the hash covers the VECTOR CONTENT,
-    * not just the id: an in-place re-embedding under unchanged ids (and
-    * unchanged centroid sample) must also break the fingerprint, or a
-    * stale index with the old vectors would be silently probed. One agg
-    * pass over (id, embedding); the index build scans the same columns
-    * anyway, so the digest at most doubles the build-side read and is
-    * the whole price of safe reuse. Required in the reuse fingerprint
-    * because the centroid set alone is a SAMPLE (the k min-md5 rows): a
-    * corpus changing rows outside that sample leaves the centroids
-    * identical (round-3 ADVICE item + round-4 review extension).
-    */
-  /** (count, XOR fold, SUM fold) — the SUM (exact, unlimited decimal, so
-    * no overflow and no ANSI failure at any corpus size) is
-    * multiplicity-sensitive where XOR is not: XOR cancels even-repeated
-    * rows, so a corpus of exact-duplicate (vec_id, embedding) rows could
-    * drift (e.g. {a,a,b} -> {b,c,c}) under identical count+XOR unless
-    * vec_id uniqueness were an enforced contract — which it is not
-    * (round-4 ADVICE item).
-    */
-  private[ops] def corpusDigest(corpus: DataFrame): (Long, Long, String) = {
-    val r = corpus.agg(count(lit(1)),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)),
-      coalesce(sum(xxhash64(col("vec_id"), col("embedding"))
-        .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))).head()
-    (r.getLong(0), r.getLong(1), r.getDecimal(2).toBigInteger.toString)
-  }
-
-  /** Content fingerprint of an index configuration: nCentroids, the full
-    * centroid payload (ids AND vectors), and the corpus digest. A stale
-    * index dir left by a different corpus or parameterization must never
-    * be probed against freshly computed centroids (round-2 ADVICE: the
-    * bare _SUCCESS check silently returned wrong neighbors on reuse;
-    * round-3 ADVICE: same failure when the corpus changes under an
-    * unchanged centroid sample).
-    */
-  private[ops] def indexFingerprint(cents: Array[(Long, Array[Float])],
-      nCentroids: Int, corpus: (Long, Long, String)): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(8)
-    def putLong(l: Long): Unit = {
-      buf.clear(); buf.putLong(l); md.update(buf.array()); ()
-    }
-    putLong(nCentroids.toLong)
-    putLong(corpus._1)
-    putLong(corpus._2)
-    md.update(corpus._3.getBytes("UTF-8"))
-    cents.foreach { case (id, emb) =>
-      putLong(id)
-      emb.foreach(f => putLong(java.lang.Float.floatToIntBits(f).toLong))
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private def metaPath(indexPath: String) = s"$indexPath/_graft_ivf_meta"
-
-  // --- self-describing (appendable) IVF index artifact -----------------
+  // --- the IVF index artifact ------------------------------------------
   //
-  // ivfTopK above derives centroids from the corpus argument on every
-  // call — right for the build-and-probe flow, wrong for the
-  // operational APPEND job (new vectors arriving daily must join the
-  // EXISTING cells; re-deriving centroids over the union would silently
-  // shift the sample and force a rebuild). The indexed flavor pins the
-  // centroid payload INSIDE the artifact (cents/ parquet) next to the
-  // data (data/, partitionBy(centroid_id)) and a combinable corpus
-  // digest (count:xor:sum — each component merges associatively, so an
-  // append updates the digest WITHOUT rescanning the existing corpus).
-  // Probing needs no corpus argument at all: the index is the corpus.
-  // Centroids stay pinned across appends — the standard IVF contract
-  // (recall drifts as the appended distribution drifts from the
-  // original sample; rebuild to re-center).
+  // One self-describing format under `indexPath`: the PINNED centroid
+  // payload (cents/ parquet), the assigned vectors (data/,
+  // partitionBy(centroid_id)) and `_graft_ivf_idx_meta`, whose first
+  // line is the combinable corpus digest (count:xor:sum — each part
+  // merges associatively, so an append updates it WITHOUT rescanning the
+  // existing corpus) and whose `batch:` lines log appended batches. The
+  // digest covers the VECTOR content, not just the ids: the centroid set
+  // is a SAMPLE (the k min-md5 rows), so a corpus changing outside it —
+  // or an in-place re-embedding under unchanged ids — must still break
+  // reuse (round-3/round-4 ADVICE). Probing needs no corpus argument:
+  // the index is the corpus. Centroids stay pinned across appends — the
+  // standard IVF contract (recall drifts as the appended distribution
+  // drifts from the original sample; rebuild to re-center).
 
   private def idxMetaPath(p: String) = s"$p/_graft_ivf_idx_meta"
 
-  /** Raw combinable digest components of a corpus. */
-  private def rawDigest(corpus: DataFrame): (Long, Long, BigInt) = {
-    val r = corpus.agg(count(lit(1)),
-      coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L)),
-      coalesce(sum(xxhash64(col("vec_id"), col("embedding"))
-        .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))).head()
-    (r.getLong(0), r.getLong(1), BigInt(r.getDecimal(2).toBigInteger))
-  }
-  private def digestString(d: (Long, Long, BigInt)) =
-    s"${d._1}:${d._2}:${d._3}"
-  private def combineDigest(a: (Long, Long, BigInt),
-      b: (Long, Long, BigInt)): (Long, Long, BigInt) =
-    (a._1 + b._1, a._2 ^ b._2, a._3 + b._3)
+  private def vecDigest(corpus: DataFrame): String =
+    DedupOps.contentDigest(corpus, "vec_id", "embedding")
+
   private def parseDigest(s: String): (Long, Long, BigInt) = {
     val Array(c, x, m) = s.split(":")
     (c.toLong, x.toLong, BigInt(m))
   }
+
+  /** Assign `vecs` map-side against the broadcast centroids and write
+    * them partitionBy(centroid_id) under data/ — probes then prune
+    * partitions. One narrow pass + one write; on a real cluster this is
+    * the Iceberg table `PARTITIONED BY centroid_id`.
+    */
+  private def writeCells(vecs: DataFrame,
+      bc: Broadcast[CentroidKernel.Centroids], indexPath: String,
+      mode: String): Unit =
+    vecs.select(col("vec_id"), col("embedding"))
+      .withColumn("centroid_id", nearestCentroid(col("embedding"), bc))
+      .write.mode(mode).partitionBy("centroid_id")
+      .parquet(s"$indexPath/data")
 
   /** Build the self-describing index: pinned centroid payload + assigned
     * data + combinable digest.
     */
   def buildIvfIndexed(spark: SparkSession, corpus: DataFrame,
       indexPath: String, nCentroids: Int): Unit = {
+    buildIvf(spark, corpus, indexPath, nCentroids, vecDigest(corpus))
+    ()
+  }
+
+  /** buildIvfIndexed with the corpus digest already in hand; returns the
+    * centroid broadcast so a caller probing right after ships it once.
+    * The meta is removed first and written last, so a build that dies
+    * midway leaves no meta and the next ivfTopK rebuilds.
+    */
+  private def buildIvf(spark: SparkSession, corpus: DataFrame,
+      indexPath: String, nCentroids: Int,
+      digest: String): Broadcast[CentroidKernel.Centroids] = {
+    graft.io.FsUtil.deleteRecursive(idxMetaPath(indexPath))
     val cents = centroids(corpus, nCentroids)
     import spark.implicits._
     cents.toSeq.toDF("vec_id", "embedding")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/cents")
-    buildIvfIndexBc(corpus, broadcastCentroids(spark, cents),
-      s"$indexPath/data")
-    graft.io.FsUtil.writeString(idxMetaPath(indexPath),
-      digestString(rawDigest(corpus)))
+    val bc = broadcastCentroids(spark, cents)
+    writeCells(corpus, bc, indexPath, "overwrite")
+    graft.io.FsUtil.writeString(idxMetaPath(indexPath), digest)
+    bc
   }
 
   private def loadCents(spark: SparkSession,
@@ -351,16 +260,15 @@ object SimilarityOps {
       throw new IllegalStateException(
         s"no index meta at $indexPath — build before appending"))
     val lines = meta.linesIterator.toSeq
-    val batchDigest = digestString(rawDigest(newVecs))
+    val batchDigest = vecDigest(newVecs)
     if (lines.exists(_ == s"batch:$batchDigest")) return // replayed append
-    val old = parseDigest(lines.head)
-    val bc = broadcastCentroids(spark, loadCents(spark, indexPath))
-    newVecs.select(col("vec_id"), col("embedding"))
-      .withColumn("centroid_id", nearestCentroid(col("embedding"), bc))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$indexPath/data")
+    val (c0, x0, s0) = parseDigest(lines.head)
+    val (c1, x1, s1) = parseDigest(batchDigest)
+    writeCells(newVecs,
+      broadcastCentroids(spark, loadCents(spark, indexPath)), indexPath,
+      "append")
     graft.io.FsUtil.writeString(idxMetaPath(indexPath),
-      (digestString(combineDigest(old, parseDigest(batchDigest))) +:
+      (s"${c0 + c1}:${x0 ^ x1}:${s0 + s1}" +:
         (lines.tail :+ s"batch:$batchDigest")).mkString("\n"))
   }
 
@@ -371,49 +279,72 @@ object SimilarityOps {
     graft.io.FsUtil.readString(idxMetaPath(indexPath))
       // line 1 is the combined digest; batch: lines follow (append log)
       .map(_.linesIterator.next())
-      .contains(digestString(rawDigest(corpus)))
+      .contains(vecDigest(corpus))
 
   /** Probe the self-describing index — no corpus argument: centroids and
-    * data both come from the artifact (partition-pruned read, same
-    * probe machinery as ivfTopK).
+    * data both come from the artifact.
     */
   def ivfProbeIndexed(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int = 10, nProbe: Int = 4): DataFrame =
-    ivfProbeIndexBc(spark, s"$indexPath/data",
+    probe(spark, indexPath,
       broadcastCentroids(spark, loadCents(spark, indexPath)),
       queries, k, nProbe)
 
-  /** Convenience: build (or reuse) the index under `indexPath`, probe.
-    * Reuse requires BOTH the _SUCCESS marker and a matching metadata
-    * fingerprint (centroid content + nCentroids); anything else rebuilds.
-    * ONE broadcast of the centroid set is shared by build and probe (at
-    * k ~ 65k x high-dim the payload is hundreds of MB — shipping it
-    * twice per call is real money). Not destroyed here: the returned
-    * DataFrame is lazy and still references it; the ContextCleaner
-    * releases it once the handle is unreachable.
+  /** IVF search over a built index: per query, probe the nProbe nearest
+    * cells; the distinct probed cell set (<= nCentroids values, tiny) is
+    * collected and pushed as a static partition filter — the index read
+    * is partition pruning, not a scan. Exact cosine re-rank inside the
+    * probed cells only.
+    */
+  private def probe(spark: SparkSession, indexPath: String,
+      bc: Broadcast[CentroidKernel.Centroids], queries: DataFrame,
+      k: Int, nProbe: Int): DataFrame = {
+    val probes = queries
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      .withColumn("centroid_id",
+        explode(probeCentroids(col("q_emb"), bc, nProbe)))
+    // static partition filter: <= nCentroids longs — partition PRUNING on
+    // the index (matches the partitionBy layout), robust at tiny scale
+    // where dynamic partition pruning would not trigger
+    val cells = probes.select(col("centroid_id")).distinct()
+      .collect().map(_.getLong(0))
+    val indexed = spark.read.parquet(s"$indexPath/data")
+      .filter(col("centroid_id").cast("long").isin(cells.toIndexedSeq: _*))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("vec_id"))
+    indexed.join(broadcast(probes),
+        indexed("centroid_id").cast("long") === probes("centroid_id"))
+      .select(col("query_id"), indexed("vec_id").as("vec_id"),
+        cosine_sim(indexed("embedding"), col("q_emb")).as("cos"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  /** Ensure, then probe. The index under `indexPath` is reused only when
+    * its meta is exactly this corpus's digest — no `batch:` line: an
+    * appended index pins centroids sampled from a subset, not from this
+    * corpus — and it stores min(nCentroids, count) centroids; anything
+    * else rebuilds (buildIvfIndexed's steps). The centroid sample runs
+    * only on a rebuild, and then build and probe share ONE broadcast of
+    * the centroid set (at k ~ 65k x high-dim the payload is hundreds of
+    * MB — shipping it twice per call is real money). Not destroyed here:
+    * the returned DataFrame is lazy and still references it; the
+    * ContextCleaner releases it once the handle is unreachable.
     */
   def ivfTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       indexPath: String, k: Int = 10, nProbe: Int = 4,
       nCentroids: Int = 32): DataFrame = {
-    // the centroid sample and the reuse digest are INDEPENDENT corpus
-    // scans — submit both jobs concurrently so the second rides the
-    // first's idle tail instead of waiting behind it (guide §2.6:
-    // actions are only sequential because driver code calls them
-    // sequentially). Deterministic: each job's result is unaffected by
-    // the other.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val digestF = Future(corpusDigest(corpus))
-    val cents = centroids(corpus, nCentroids)
-    val fp = indexFingerprint(cents, nCentroids,
-      Await.result(digestF, scala.concurrent.duration.Duration.Inf))
-    val bc = broadcastCentroids(spark, cents)
-    val reusable = graft.io.FsUtil.successExists(indexPath) &&
-      graft.io.FsUtil.readString(metaPath(indexPath)).contains(fp)
-    if (!reusable) {
-      buildIvfIndexBc(corpus, bc, indexPath)
-      graft.io.FsUtil.writeString(metaPath(indexPath), fp)
-    }
-    ivfProbeIndexBc(spark, indexPath, bc, queries, k, nProbe)
+    val digest = vecDigest(corpus)
+    val stored =
+      if (graft.io.FsUtil.readString(idxMetaPath(indexPath)).contains(digest))
+        loadCents(spark, indexPath)
+      else Array.empty[(Long, Array[Float])]
+    val bc =
+      if (stored.nonEmpty &&
+          stored.length == math.min(nCentroids.toLong, parseDigest(digest)._1))
+        broadcastCentroids(spark, stored)
+      else buildIvf(spark, corpus, indexPath, nCentroids, digest)
+    probe(spark, indexPath, bc, queries, k, nProbe)
   }
 }

@@ -20,11 +20,11 @@ import org.apache.spark.storage.StorageLevel
   * Composition discipline at 100 TB:
   *  - the docs table is the multi-consumer hub (exact-dedup agg, the
   *    sig pass, the verify text joins, the survivor anti-join, the
-  *    gate). It is MATERIALIZED exactly once — corpusFromTranscripts
-  *    persists it; the driver query dumps it to parquet (the production
-  *    job writes the real table via TableIO.runCheckpointed) — so no
-  *    stage re-extracts what a prior stage already computed
-  *    (CorpusSpec asserts extract_turn is absent from the tail plan).
+  *    gate). It is MATERIALIZED exactly once — the driver query dumps
+  *    it to parquet (the production job writes the real table via
+  *    TableIO.runCheckpointed) — so no stage re-extracts what a prior
+  *    stage already computed (CorpusSpec asserts extract_turn is absent
+  *    from the tail plan).
   *  - every post-docs stage keys by doc_id or band key and moves
   *    ids-only rows except the two verify text joins, which are
   *    proportional to the candidate set, not the corpus.
@@ -83,13 +83,6 @@ object CorpusPipeline {
       .select(col("id_a"), col("id_b"))
     gateTail(exact, pairs, minQuality, langs)
   }
-
-  /** Whole pipeline from raw transcripts; materializes the docs hub. */
-  def corpusFromTranscripts(turns: DataFrame, minJaccard: Double = 0.5,
-      minQuality: Double = 0.8,
-      langs: Seq[String] = Seq("en")): DataFrame =
-    corpus(corpusDocs(turns).persist(StorageLevel.MEMORY_AND_DISK),
-      minJaccard, minQuality, langs)
 
   /** corpus() with cache discipline for LONG-LIVED sessions: the kept
     * corpus is materialized through `action`, then BOTH internal caches

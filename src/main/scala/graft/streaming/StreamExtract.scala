@@ -1,10 +1,14 @@
 package graft.streaming
 
-import graft.expr.Functions
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.expr.{Functions, TextExprKernels}
+import graft.ops.DedupOps
+import org.apache.spark.sql.{Column, DataFrame, Dataset,
+  KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Streaming flavor of the extraction pipeline. The reference is
   * batch-only (bounded epochs, SURVEY.md §2.8), so batch is primary; this
@@ -163,12 +167,47 @@ object StreamExtract {
     * (< ShingleK chars cannot be shingle near-dups); the gate sits
     * AFTER the watermark so gated rows still advance event time.
     */
-  /** The banded event stream feeding the minhash state machine (shared
-    * by the cold-start and index-bootstrapped flavors).
+  def streamDedupMinhashCandidates(spark: SparkSession, rows: DataFrame,
+      textCol: String = "text", idCol: String = "doc_id",
+      tsCol: String = "ts",
+      horizonMs: Long = 10L * 60 * 1000): Dataset[DupCandidate] =
+    anchorRun[Long, DupCandidate](spark,
+      minhashBands(rows, textCol, idCol, tsCol, horizonMs),
+      ("band_idx", "band_key"), "doc_id", lit(0L), horizonMs, minhashEmit)
+
+  /** Run the anchor-state machine (anchorBucketFn) over banded rows:
+    * each row's `keys` bucket, `id`, `payload` and watermarked ts are
+    * one event; `emit` is the flavor's verify/emit rule, and `initial`
+    * seeds bucket anchors (the index-bootstrapped flavor).
     */
-  private def minhashBandEvents(rows: DataFrame, textCol: String,
-      idCol: String, tsCol: String, horizonMs: Long)
-      : DataFrame =
+  private def anchorRun[P: TypeTag, O <: Product : TypeTag](
+      spark: SparkSession, banded: DataFrame, keys: (String, String),
+      id: String, payload: Column, horizonMs: Long,
+      emit: ((Int, Long), Long, P, Long, P) => Option[O],
+      initial: Option[KeyValueGroupedDataset[(Int, Long), AnchorState[P]]] =
+        None): Dataset[O] = {
+    import spark.implicits._
+    val grouped = banded
+      // tuple shape via select (NOT a typed .map — MapElements would
+      // re-serialize and strip the watermark tag off the ts attribute)
+      .select(struct(col(keys._1), col(keys._2)).as("_1"), col(id).as("_2"),
+        payload.as("_3"), col("ts").as("_4"))
+      .as[((Int, Long), Long, P, java.sql.Timestamp)]
+      .groupByKey(_._1)
+    val fn = anchorBucketFn[(Int, Long), P, O](horizonMs, emit)
+    initial match {
+      case Some(init) => grouped.flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout, init)(fn)
+      case None => grouped.flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    }
+  }
+
+  /** The banded (doc_id, ts, band_idx, band_key) stream of both minhash
+    * flavors.
+    */
+  private def minhashBands(rows: DataFrame, textCol: String, idCol: String,
+      tsCol: String, horizonMs: Long): DataFrame =
     rows
       .select(col(idCol).cast("long").as("doc_id"), col(tsCol).as("ts"),
         col(textCol).as("text"))
@@ -177,25 +216,14 @@ object StreamExtract {
       .select(col("doc_id"), col("ts"),
         posexplode(Functions.minhash_bands(col("text")))
           .as(Seq("band_idx", "band_key")))
-      // tuple shape via select (NOT a typed .map — MapElements would
-      // re-serialize and strip the watermark tag off the ts attribute)
-      .select(struct(col("band_idx"), col("band_key")).as("_1"),
-        col("doc_id").as("_2"), lit(0L).as("_3"), col("ts").as("_4"))
 
-  def streamDedupMinhashCandidates(spark: SparkSession, rows: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      tsCol: String = "ts",
-      horizonMs: Long = 10L * 60 * 1000): Dataset[DupCandidate] = {
-    import spark.implicits._
-    minhashBandEvents(rows, textCol, idCol, tsCol, horizonMs)
-      .as[((Int, Long), Long, Long, java.sql.Timestamp)] // payload unused
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        anchorBucketFn[(Int, Long), Long, DupCandidate](horizonMs,
-          (key, aid, _, oid, _) => Some(
-            DupCandidate(math.min(aid, oid), math.max(aid, oid), key._1))))
-  }
+  /** The minhash flavors' one emit rule: every non-anchor doc in a
+    * bucket is a candidate against the anchor, unverified.
+    */
+  private val minhashEmit
+      : ((Int, Long), Long, Long, Long, Long) => Option[DupCandidate] =
+    (key, aid, _, oid, _) =>
+      Some(DupCandidate(math.min(aid, oid), math.max(aid, oid), key._1))
 
   /** streamDedupMinhashCandidates with its anchor state BOOTSTRAPPED
     * from a persisted batch band index (DedupOps.ensureMinhashIndex's
@@ -232,15 +260,10 @@ object StreamExtract {
       .as[((Int, Long), Long)]
       .groupByKey(_._1)
       .mapValues(v => AnchorState[Long](v._2, 0L, 0L))
-    minhashBandEvents(rows, textCol, idCol, tsCol, horizonMs)
-      .as[((Int, Long), Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout,
-        initialState)(
-        anchorBucketFn[(Int, Long), Long, DupCandidate](horizonMs,
-          (key, aid, _, oid, _) => Some(
-            DupCandidate(math.min(aid, oid), math.max(aid, oid), key._1))))
+    anchorRun[Long, DupCandidate](spark,
+      minhashBands(rows, textCol, idCol, tsCol, horizonMs),
+      ("band_idx", "band_key"), "doc_id", lit(0L), horizonMs, minhashEmit,
+      Some(initialState))
   }
 
   /** Streaming SimHash near-dups, VERIFIED in-state: the 64-bit
@@ -259,36 +282,30 @@ object StreamExtract {
       textCol: String = "text", idCol: String = "doc_id",
       tsCol: String = "ts",
       horizonMs: Long = 10L * 60 * 1000): Dataset[SimhashDup] = {
-    import spark.implicits._
     val base = rows.select(col(idCol).cast("long").as("doc_id"),
         col(tsCol).as("ts"), col(textCol).as("text"))
       .withWatermark("ts", s"$horizonMs milliseconds")
-    graft.ops.DedupOps.simhashBands(base, maxHamming, pairBands,
-        passthrough = Seq("ts"))
-      .select(struct(col("chunk_idx"), col("chunk_key")).as("_1"),
-        col("doc_id").as("_2"), col("sh").as("_3"), col("ts").as("_4"))
-      .as[((Int, Long), Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        anchorBucketFn[(Int, Long), Long, SimhashDup](horizonMs,
-          (key, aid, ash, oid, osh) => {
-            val ham = java.lang.Long.bitCount(ash ^ osh)
-            if (ham <= maxHamming)
-              Some(SimhashDup(math.min(aid, oid), math.max(aid, oid),
-                ham, key._1))
-            else None
-          }))
+    anchorRun[Long, SimhashDup](spark,
+      DedupOps.simhashBands(base, maxHamming, pairBands,
+        passthrough = Seq("ts")),
+      ("chunk_idx", "chunk_key"), "doc_id", col("sh"), horizonMs,
+      (key, aid, ash, oid, osh) => {
+        val ham = java.lang.Long.bitCount(ash ^ osh)
+        if (ham <= maxHamming)
+          Some(SimhashDup(math.min(aid, oid), math.max(aid, oid), ham, key._1))
+        else None
+      })
   }
 
   /** Streaming embedding-cosine near-dups, VERIFIED in-state — the last
     * member of the streaming dedup family (exact / minhash-candidates /
     * simhash-verified / embedding-verified): random-hyperplane LSH
-    * buckets via the SAME precomputed sign matrix as batch
-    * (DedupOps.hyperplaneSigns + hyperplaneTableKey, shared code);
-    * bucket state holds the anchor's (id, vector) — ~(4*dim + 16)
-    * bytes — and each later vector is emitted iff the exact double-fold
-    * cosine against the anchor clears minCos (anchorBucketFn).
+    * buckets via the SAME bucketing as batch (DedupOps.hyperplaneBands,
+    * shared code); bucket state holds the anchor's (id, vector) —
+    * ~(4*dim + 16) bytes — and each later vector is emitted iff the
+    * cosine_sim kernel's exact double fold against the anchor clears
+    * minCos (anchorBucketFn; StreamingSpec asserts streamed cosines are
+    * BIT-equal to batch verify).
     *
     * `dim` is a REQUIRED parameter: batch derives the canonical
     * dimension with one agg over the corpus (the index-build step), but
@@ -301,43 +318,22 @@ object StreamExtract {
       embCol: String = "embedding", idCol: String = "vec_id",
       tsCol: String = "ts",
       horizonMs: Long = 10L * 60 * 1000): Dataset[CosineDup] = {
-    import spark.implicits._
     require(dim > 0, "pin the embedding dimension up front")
-    val signs = graft.ops.DedupOps.hyperplaneSigns(nTables, nPlanes, dim)
-    def tableKey(t: Int) =
-      graft.ops.DedupOps.hyperplaneTableKey(signs, t, nPlanes, col("emb"))
-    def cosine(a: Array[Float], b: Array[Float]): Double = {
-      // exact double fold, same recipe as the cosine_sim kernel (the
-      // spec asserts streamed cosines are BIT-equal to batch verify)
-      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i); nx += a(i).toDouble * a(i)
-        ny += b(i).toDouble * b(i); i += 1
-      }
-      if (nx == 0 || ny == 0) 0.0 else dot / math.sqrt(nx * ny)
-    }
-    rows.select(col(idCol).cast("long").as("vec_id"),
-        col(tsCol).as("ts"), col(embCol).as("emb"))
+    val base = rows.select(col(idCol).cast("long").as("vec_id"),
+        col(tsCol).as("ts"), col(embCol).as("embedding"))
       .withWatermark("ts", s"$horizonMs milliseconds")
-      .filter(col("emb").isNotNull && size(col("emb")) === dim)
-      .select(col("vec_id"), col("emb").as("embedding"), col("ts"),
-        posexplode(array((0 until nTables).map(tableKey): _*))
-          .as(Seq("table_idx", "bucket")))
-      .select(struct(col("table_idx"), col("bucket")).as("_1"),
-        col("vec_id").as("_2"), col("embedding").as("_3"),
-        col("ts").as("_4"))
-      .as[((Int, Long), Long, Array[Float], java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        anchorBucketFn[(Int, Long), Array[Float], CosineDup](horizonMs,
-          (key, aid, aemb, oid, oemb) => {
-            val c = cosine(aemb, oemb)
-            if (c >= minCos)
-              Some(CosineDup(math.min(aid, oid), math.max(aid, oid),
-                c, key._1))
-            else None
-          }))
+    anchorRun[Array[Float], CosineDup](spark,
+      DedupOps.hyperplaneBands(base, "embedding", dim, nPlanes, nTables,
+        passthrough = Seq("embedding", "ts")),
+      ("table_idx", "bucket"), "vec_id", col("embedding"), horizonMs,
+      (key, aid, aemb, oid, oemb) => {
+        val c = TextExprKernels.cosine(
+          UnsafeArrayData.fromPrimitiveArray(aemb),
+          UnsafeArrayData.fromPrimitiveArray(oemb))
+        if (c >= minCos)
+          Some(CosineDup(math.min(aid, oid), math.max(aid, oid), c, key._1))
+        else None
+      })
   }
 
   /** Streaming<->batch RECONCILIATION (the operational pairing of the two
@@ -360,7 +356,7 @@ object StreamExtract {
     */
   def reconcileClusters(batchPairs: DataFrame,
       streamedPairs: DataFrame): DataFrame =
-    graft.ops.DedupOps.clusterLabels(
+    DedupOps.clusterLabels(
       batchPairs.select(col("id_a"), col("id_b"))
         .unionByName(streamedPairs.select(col("id_a"), col("id_b")))
         .filter(col("id_a") =!= col("id_b"))

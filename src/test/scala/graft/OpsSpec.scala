@@ -540,7 +540,7 @@ class OpsSpec extends AnyFunSuite {
     val queries = embs.filter(col("vec_id") === 0)
     SimilarityOps.ivfTopK(spark, subset, queries, base, k = 3,
       nProbe = k, nCentroids = k).collect()
-    val metaBefore = graft.io.FsUtil.readString(s"$base/_graft_ivf_meta")
+    val metaBefore = graft.io.FsUtil.readString(s"$base/_graft_ivf_idx_meta")
     // now the FULL corpus against the same indexPath: centroids match,
     // so only the corpus digest distinguishes fresh from stale. With
     // nProbe == nCentroids the probe covers every cell -> must equal
@@ -548,7 +548,7 @@ class OpsSpec extends AnyFunSuite {
     val out = SimilarityOps.ivfTopK(spark, embs, queries, base, k = 3,
         nProbe = k, nCentroids = k)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
-    val metaAfter = graft.io.FsUtil.readString(s"$base/_graft_ivf_meta")
+    val metaAfter = graft.io.FsUtil.readString(s"$base/_graft_ivf_idx_meta")
     assert(metaBefore.isDefined && metaAfter.isDefined &&
       metaBefore.get != metaAfter.get,
       "fingerprint must change when the corpus changes under unchanged centroids")
@@ -583,6 +583,63 @@ class OpsSpec extends AnyFunSuite {
     val brute = SimilarityOps.bruteForceTopK(embs, queries, k = 3)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
     assert(got == brute)
+  }
+
+  test("ANN IVF: a second ivfTopK on an unchanged corpus reuses data/ and the meta untouched") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_ivf_reuse_test").toString + "/index"
+    val queries = embs.filter(pmod(col("vec_id"), lit(101)) === 0)
+    def run() = SimilarityOps.ivfTopK(spark, embs, queries, base, k = 3,
+        nProbe = 4, nCentroids = 8)
+      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id")))
+    // every file under data/ plus the meta, with its mtime: a rebuild
+    // writes fresh part-file names, a meta rewrite moves its mtime
+    def snapshot(): Map[String, Long] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(base)
+      val data = java.nio.file.Files.walk(root.resolve("data"))
+      try (data.iterator().asScala.toSeq :+ root.resolve("_graft_ivf_idx_meta"))
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString ->
+          java.nio.file.Files.getLastModifiedTime(f).toMillis).toMap
+      finally data.close()
+    }
+    val first = run()
+    val before = snapshot()
+    val metaBefore = graft.io.FsUtil.readString(s"$base/_graft_ivf_idx_meta")
+    assert(before.keys.exists(_.startsWith("data/centroid_id=")))
+    Thread.sleep(20) // any rewrite lands on a later mtime
+    val second = run()
+    assert(snapshot() == before, "reuse must not rewrite data/ or the meta")
+    assert(graft.io.FsUtil.readString(s"$base/_graft_ivf_idx_meta") == metaBefore)
+    assert(second.toSeq == first.toSeq)
+  }
+
+  test("ANN IVF: ivfTopK rebuilds an appended index and re-samples centroids from the full corpus") {
+    // built on 80% + appended 20%: the digest line equals the full
+    // corpus, but the pinned centroids were sampled from the 80% — the
+    // batch: line must force a rebuild, not a reuse
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_ivf_append_rebuild_test").toString + "/index"
+    val k = 8
+    val want = SimilarityOps.centroids(embs, k).sortBy(_._1)
+    // the 20% residue class holding a full-corpus centroid
+    val held = pmod(col("vec_id"), lit(5)) === lit(want.head._1 % 5)
+    val existing = embs.filter(!held)
+    SimilarityOps.buildIvfIndexed(spark, existing, base, nCentroids = k)
+    SimilarityOps.ivfAppendIndexed(spark, base, embs.filter(held))
+    assert(SimilarityOps.ivfIndexedMatches(base, embs))
+    assert(want.map(_._1).toSet !=
+      SimilarityOps.centroids(existing, k).map(_._1).toSet,
+      "fixture broken: the 80% subset must sample different centroids")
+    val queries = embs.filter(col("vec_id") === 0)
+    SimilarityOps.ivfTopK(spark, embs, queries, base, k = 3,
+      nProbe = k, nCentroids = k).collect()
+    val got = spark.read.parquet(s"$base/cents").orderBy(col("vec_id"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
+    assert(got.toSeq == want.toSeq.map { case (id, v) => (id, v.toSeq) })
+    assert(!graft.io.FsUtil.readString(s"$base/_graft_ivf_idx_meta").get
+      .contains("batch:"), "a rebuilt index carries no append log")
   }
 
   test("tf-idf keywords: discriminative terms outrank ubiquitous ones") {
@@ -624,11 +681,11 @@ class OpsSpec extends AnyFunSuite {
     val queries = embs.filter(col("vec_id") === 0)
     SimilarityOps.ivfTopK(spark, embs, queries, base, k = 3,
       nProbe = k, nCentroids = k).collect()
-    val metaBefore = graft.io.FsUtil.readString(s"$base/_graft_ivf_meta")
+    val metaBefore = graft.io.FsUtil.readString(s"$base/_graft_ivf_idx_meta")
     val out = SimilarityOps.ivfTopK(spark, mutated, queries, base, k = 3,
         nProbe = k, nCentroids = k)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
-    val metaAfter = graft.io.FsUtil.readString(s"$base/_graft_ivf_meta")
+    val metaAfter = graft.io.FsUtil.readString(s"$base/_graft_ivf_idx_meta")
     assert(metaBefore.isDefined && metaAfter.isDefined &&
       metaBefore.get != metaAfter.get,
       "fingerprint must change when a vector changes under unchanged ids")
