@@ -174,19 +174,22 @@ object Bench {
       queries: Map[String, (SparkSession, String) => DataFrame] =
         SparkEntry.queries): (Seq[(String, Double)], Map[String, String]) = {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // one CacheScope per query; it releases after the timed span closes
     val results = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // NonFatal only: an OutOfMemoryError/StackOverflowError must abort
-      // the whole bench (timings on a compromised JVM are not an
-      // artifact), not be recorded as a per-query -1 (round-4 ADVICE)
-      val ok = try { forceAll(fn(spark, sfDir)); true }
-        catch { case scala.util.control.NonFatal(e) =>
-          errors(name) =
-            s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}"
-              .take(300)
-          false
-        }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      name -> graft.io.CacheScope {
+        val t0 = System.nanoTime()
+        // NonFatal only: an OutOfMemoryError/StackOverflowError must abort
+        // the whole bench (timings on a compromised JVM are not an
+        // artifact), not be recorded as a per-query -1 (round-4 ADVICE)
+        val ok = try { forceAll(fn(spark, sfDir)); true }
+          catch { case scala.util.control.NonFatal(e) =>
+            errors(name) =
+              s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}"
+                .take(300)
+            false
+          }
+        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      }
     }
     (results, errors.toMap)
   }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.io.CacheScope
+
 /** Round-6 optimization harness (guide §1): isolate individual declared
   * queries — time each with the noop sink (same action Bench uses) over
   * several repeats, and dump `.explain("formatted")` for plan-shape
@@ -35,7 +37,7 @@ object BenchExtra {
     plansDir.foreach(d => new java.io.File(d).mkdirs())
     val out = qs.map { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"bench-extra: $name")
-      plansDir.foreach { d =>
+      plansDir.foreach { d => CacheScope {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -48,12 +50,13 @@ object BenchExtra {
         try w.write(plan + "\n== Final Plan (post-execution) ==\n" +
           s"reusedStages=$reused shuffleStages=$stages\n" + fin)
         finally w.close()
-      }
-      val times = (1 to reps).map { _ =>
+      }}
+      // one CacheScope per run, released outside the timed span
+      val times = (1 to reps).map { _ => CacheScope {
         val t0 = System.nanoTime()
         Bench.forceAll(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
-      }
+      }}
       println(f"[bx] $name%-18s min=${times.min}%7.3f  all=" +
         times.map(t => f"$t%.3f").mkString(","))
       name -> times.min

@@ -1,6 +1,8 @@
 package graft
+import graft.io.CacheScope
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -19,10 +21,13 @@ object Verify {
     // Dumps.ensure, and the DuckDB oracle reads them — a stale dump from
     // an older kernel revision must never survive into a driver run
     Dumps.clean(sfDir)
+    // one CacheScope per query releases its caches once its output is
+    // written. NonFatal only: an OutOfMemoryError or StackOverflowError
+    // aborts the run instead of passing as one failed query (Bench's rule)
     SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try CacheScope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

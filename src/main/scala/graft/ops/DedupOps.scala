@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.expr.Functions._
+import graft.io.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -125,16 +126,7 @@ object DedupOps {
     * signatures keyed by doc_id, proportional to candidates, not corpus.
     */
   def minhashCandidates(docs: DataFrame, minJaccard: Double = 0.6,
-      maxBucket: Int = 10000): DataFrame =
-    minhashCandidatesWithCache(docs, minJaccard, maxBucket)._1
-
-  /** (candidates, the internal sig cache) — callers that outlive one
-    * session use the handle to release the cache once candidates are
-    * materialized (runMinhashNearDups / CorpusPipeline.runCorpus do);
-    * one-shot Verify/Bench sessions use minhashCandidates directly.
-    */
-  private[graft] def minhashCandidatesWithCache(docs: DataFrame,
-      minJaccard: Double, maxBucket: Int): (DataFrame, DataFrame) = {
+      maxBucket: Int = 10000): DataFrame = {
     // The 64-min signature is THE expensive per-row pass (shingle the
     // text + 64 running minima). It is computed ONCE and persisted —
     // the band keys DERIVE from the cached signature
@@ -143,19 +135,16 @@ object DedupOps {
     // second branch (round-4 judge item 1; the old shape hashed it for
     // the bucket-size branch, the join probe side, both self-join
     // sides, AND the sig screen). (doc_id, sig) is ~530 B/doc at
-    // MEMORY_AND_DISK — the standard LSH materialization trade; like
-    // the distributed-rank path's documented persist, one-shot
-    // Verify/Bench sessions tolerate the cache (a long-lived cluster
-    // job unpersists once candidates are materialized).
-    val sigs = minhashSigs(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // MEMORY_AND_DISK — the standard LSH materialization trade; the
+    // caller's CacheScope releases it once the candidates are consumed.
+    val sigs = CacheScope.cache(minhashSigs(docs))
     // skew valve: a band bucket of B docs yields B^2/2 candidate pairs;
     // mega-clusters (B > maxBucket, i.e. near-identical boilerplate
     // repeated millions of times) are exact-dedup's job, not LSH's —
     // drop those buckets instead of letting one key own the stage
     // (the max_candidates cap of the dedup world, db_postprocess.py:92)
     val cands = bucketJoin(bandsOfSigs(sigs), BandKeys, "doc_id", maxBucket)
-    (sigScreen(cands, sigs, minJaccard), sigs)
+    sigScreen(cands, sigs, minJaccard)
   }
 
   /** (doc_id, sig) for the eligible docs — the one expensive pass. */
@@ -206,11 +195,11 @@ object DedupOps {
       graft.io.FsUtil.successExists(sigsPath) &&
       graft.io.FsUtil.readString(mhMetaPath(indexPath)).contains(fp)
     if (!reusable) {
-      val sigs = minhashSigs(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sigs.write.mode("overwrite").parquet(sigsPath)
-      bandsOfSigs(sigs).write.mode("overwrite").parquet(bandsPath)
-      sigs.unpersist(blocking = false)
+      CacheScope {
+        val sigs = CacheScope.cache(minhashSigs(docs))
+        sigs.write.mode("overwrite").parquet(sigsPath)
+        bandsOfSigs(sigs).write.mode("overwrite").parquet(bandsPath)
+      }
       graft.io.FsUtil.writeString(mhMetaPath(indexPath), fp)
     }
     (spark.read.parquet(bandsPath), spark.read.parquet(sigsPath))
@@ -231,20 +220,10 @@ object DedupOps {
     */
   def incrementalMinhashCandidates(newDocs: DataFrame,
       indexBands: DataFrame, indexSigs: DataFrame,
-      minJaccard: Double = 0.6, maxBucket: Int = 10000): DataFrame =
-    incrementalMinhashCandidatesWithCache(newDocs, indexBands, indexSigs,
-      minJaccard, maxBucket)._1
-
-  /** (candidates, the new-batch sig cache) — the handle flavor, for
-    * callers that must release the cache after materializing
-    * (runIncrementalMinhashCandidates wraps it; one-shot Verify/Bench
-    * sessions use incrementalMinhashCandidates directly).
-    */
-  private[graft] def incrementalMinhashCandidatesWithCache(
-      newDocs: DataFrame, indexBands: DataFrame, indexSigs: DataFrame,
-      minJaccard: Double, maxBucket: Int): (DataFrame, DataFrame) = {
-    val newSigs = minhashSigs(newDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      minJaccard: Double = 0.6, maxBucket: Int = 10000): DataFrame = {
+    // the new batch's sig pass, persisted for the same reason as
+    // minhashCandidates'; the caller's CacheScope releases it
+    val newSigs = CacheScope.cache(minhashSigs(newDocs))
     val newBanded = bandsOfSigs(newSigs)
     // TOUCHED-bucKET prune: only buckets containing a new-batch doc can
     // produce a pair with a new side, so the index contributes just
@@ -265,37 +244,7 @@ object DedupOps {
       .unionByName(newBanded.withColumn("is_new", lit(true)))
     val cands = bucketJoin(combined, BandKeys, "doc_id", maxBucket,
       extra = Some(col("a.is_new") || col("b.is_new")))
-    (sigScreen(cands, indexSigs.unionByName(newSigs), minJaccard), newSigs)
-  }
-
-  /** incrementalMinhashCandidates with cache discipline for LONG-LIVED
-    * sessions (round-5 judge hygiene item 1 / ADVICE): the DAILY append
-    * job materializes its candidates (or anything derived) through
-    * `action`, then the new-batch sig cache is released — without this,
-    * one persisted frame leaked per batch until the context cleaner got
-    * to it. Same pattern as runMinhashNearDups below.
-    */
-  def runIncrementalMinhashCandidates[A](newDocs: DataFrame,
-      indexBands: DataFrame, indexSigs: DataFrame,
-      minJaccard: Double = 0.6, maxBucket: Int = 10000)(
-      action: DataFrame => A): A = {
-    val (cands, sigCache) = incrementalMinhashCandidatesWithCache(
-      newDocs, indexBands, indexSigs, minJaccard, maxBucket)
-    try action(cands)
-    finally { sigCache.unpersist(blocking = false); () }
-  }
-
-  /** minhashNearDups with cache discipline for LONG-LIVED sessions:
-    * materialize through `action`, then release the internal sig cache
-    * (the runDistributedRank pattern — the lazy entry points cannot
-    * unpersist for you).
-    */
-  def runMinhashNearDups[A](docs: DataFrame, minJaccard: Double = 0.6,
-      maxBucket: Int = 10000)(action: DataFrame => A): A = {
-    val (cands, sigCache) =
-      minhashCandidatesWithCache(docs, minJaccard, maxBucket)
-    try action(verifyJaccard(cands, eligibleDocs(docs), minJaccard))
-    finally { sigCache.unpersist(blocking = false); () }
+    sigScreen(cands, indexSigs.unionByName(newSigs), minJaccard)
   }
 
   /** Verify stage: join texts back for the candidate pairs only, exact
@@ -442,8 +391,10 @@ object DedupOps {
     * node pushes its current label to its neighbors and keeps the min;
     * converges in O(component diameter) rounds. Per round: one
     * ids-only join + groupBy-min shuffle (labels and edges are pairs of
-    * longs — payloads never enter), previous iteration unpersisted
-    * eagerly, convergence checked with a count of changed labels. At
+    * longs — payloads never enter), the superseded round released as
+    * soon as the next one is checkpointed (and the edge list on return;
+    * the returned labels' checkpoint belongs to the caller's
+    * CacheScope), convergence checked with a count of changed labels. At
     * 100 TB the edge list is the verified near-dup pairs — orders of
     * magnitude smaller than the corpus — and near-dup components are
     * near-cliques (diameter 2-4 in practice), so a handful of rounds
@@ -460,16 +411,17 @@ object DedupOps {
     // On a cluster job that must survive executor loss, swap
     // localCheckpoint for checkpoint() with a checkpoint dir — same
     // truncation, replicated blocks.
-    val sym = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
-      .union(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
-      .distinct()
-      .localCheckpoint(true) // sym is re-joined every round
-    // init: label(v) = min(v, min neighbor)
-    var labels = sym.groupBy(col("a"))
+    // sym is re-joined every round
+    val sym = CacheScope.checkpoint(
+      pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+        .union(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
+        .distinct())
+    // init: label(v) = min(v, min neighbor). `round` is the current
+    // round's checkpoint, (doc_id, label[, own_label])
+    var round = CacheScope.checkpoint(sym.groupBy(col("a"))
       .agg(min(col("b")).as("nb"))
       .select(col("a").as("doc_id"),
-        least(col("a"), col("nb")).as("label"))
-      .localCheckpoint(true)
+        least(col("a"), col("nb")).as("label")))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
@@ -482,29 +434,29 @@ object DedupOps {
       // loop's jobs). Now convergence is a filter over the already-
       // checkpointed round output, and isEmpty short-circuits on the
       // first changed row.
+      val labels = round.select(col("doc_id"), col("label"))
       val pushed = sym.join(labels, sym("a") === labels("doc_id"))
         .select(col("b").as("doc_id"), col("label"),
           lit(false).as("own"))
-      val next = labels.select(col("doc_id"), col("label"),
-          lit(true).as("own"))
+      val next = CacheScope.checkpoint(labels.select(col("doc_id"),
+          col("label"), lit(true).as("own"))
         .union(pushed)
         .groupBy(col("doc_id"))
         .agg(min(col("label")).as("label"),
-          min(when(col("own"), col("label"))).as("own_label"))
-        .localCheckpoint(true)
+          min(when(col("own"), col("label"))).as("own_label")))
       converged = next.filter(col("label") < col("own_label")).isEmpty
-      labels.unpersist(blocking = false)
-      labels = next.select(col("doc_id"), col("label"))
+      // next is self-contained: the superseded round can go now
+      CacheScope.release(round)
+      round = next
       iter += 1
     }
-    // the final labels checkpoint is self-contained; release the edges
-    sym.unpersist(blocking = false)
+    CacheScope.release(sym)
     if (!converged)
       throw new IllegalStateException(
         s"clusterLabels did not converge in $maxIters rounds — component " +
           "diameter exceeds the hash-min budget; raise maxIters or use a " +
           "star-contraction variant for long-chain graphs")
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+    round.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
   /** Survivor view: docs minus every non-canonical cluster member (the

@@ -1,9 +1,9 @@
 package graft.pipeline
 
+import graft.io.CacheScope
 import graft.ops.{DedupOps, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The END-TO-END training-data pipeline, COMPOSED — the reference's own
   * one-run shape (deploy/pytorch/run_ocr.py:168-231: detect -> crop ->
@@ -31,8 +31,8 @@ import org.apache.spark.storage.StorageLevel
   *  - clusterLabels runs its bounded label-propagation loop over the
   *    verified PAIR list (orders of magnitude smaller than the corpus),
   *    so this composed call is a MULTI-JOB driver program like
-  *    runDistributedRank, not a single lazy plan — the honest shape of
-  *    the production pipeline.
+  *    extractDistributedRank, not a single lazy plan — the honest
+  *    shape of the production pipeline.
   */
 object CorpusPipeline {
 
@@ -70,40 +70,27 @@ object CorpusPipeline {
   /** The composed tail over a MATERIALIZED docs table (persisted or
     * read back from storage — passing a raw lazy extraction plan here
     * would re-run it once per consumer). Returns the kept corpus with
-    * gate annotations: docs columns + (quality, lang_pred).
+    * gate annotations: docs columns + (quality, lang_pred). Consume it
+    * inside a CacheScope (runCorpus does) to release what it cached.
     */
   def corpus(docs: DataFrame, minJaccard: Double = 0.5,
       minQuality: Double = 0.8,
       langs: Seq[String] = Seq("en")): DataFrame = {
     // exact survivors feed four consumers (sig pass, 2x verify join,
-    // anti-join, gate): persisted for the same hub reason as docs —
-    // one-shot sessions tolerate the cache (x_dist_rank precedent)
-    val exact = exactSurvivors(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = DedupOps.minhashNearDups(exact, minJaccard)
+    // anti-join, gate): persisted for the same hub reason as docs, and
+    // released with the minhash sig pass by the caller's CacheScope
+    val exact = CacheScope.cache(exactSurvivors(docs))
+    val pairs = DedupOps.verifyJaccard(
+        DedupOps.minhashCandidates(exact, minJaccard), exact, minJaccard)
       .select(col("id_a"), col("id_b"))
     gateTail(exact, pairs, minQuality, langs)
   }
 
-  /** corpus() with cache discipline for LONG-LIVED sessions: the kept
-    * corpus is materialized through `action`, then BOTH internal caches
-    * (the exact-survivor hub and the minhash sig pass) are released —
-    * the runDistributedRank pattern; the lazy corpus() cannot unpersist
-    * for you because its result still references the caches.
+  /** corpus() materialized through `action`, then every cache and
+    * checkpoint it took released — the shape for long-lived sessions.
     */
   def runCorpus[A](docs: DataFrame, minJaccard: Double = 0.5,
       minQuality: Double = 0.8, langs: Seq[String] = Seq("en"))(
-      action: DataFrame => A): A = {
-    val exact = exactSurvivors(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val (cands, sigCache) = DedupOps.minhashCandidatesWithCache(
-      exact, minJaccard, maxBucket = 10000)
-    try {
-      val pairs = DedupOps.verifyJaccard(cands, exact, minJaccard)
-        .select(col("id_a"), col("id_b"))
-      action(gateTail(exact, pairs, minQuality, langs))
-    } finally {
-      sigCache.unpersist(blocking = false)
-      exact.unpersist(blocking = false)
-      ()
-    }
-  }
+      action: DataFrame => A): A =
+    CacheScope(action(corpus(docs, minJaccard, minQuality, langs)))
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.expr.Functions
+import graft.io.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -158,11 +159,14 @@ object ExtractPipeline {
     *
     * Output is BYTE-IDENTICAL to extract() (property-tested): same
     * ordering spec, same kernel, different physical rank.
+    *
+    * The ranged dataset MUST stay persisted until the result is
+    * materialized (the rank offsets were computed against its sampled
+    * range layout — a recompute could resample boundaries), so consume
+    * the result inside a CacheScope, which releases it afterwards.
     */
-  def extractDistributedRank(turns: DataFrame, nPart: Int = 0,
-      storage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame =
-    distributedRankWith(turns, nPart, storage, longRank = false)._2
+  def extractDistributedRank(turns: DataFrame, nPart: Int = 0): DataFrame =
+    distributedRank(turns, nPart, longRank = false)
 
   /** The distributed rank with rn as BIGINT — the path that actually
     * ranks past 2^31 (the int path's combineRank fails loudly there by
@@ -170,28 +174,21 @@ object ExtractPipeline {
     * demands). Output matches extractLong() the way
     * extractDistributedRank matches extract().
     */
-  def extractDistributedRankLong(turns: DataFrame, nPart: Int = 0,
-      storage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame =
-    distributedRankWith(turns, nPart, storage, longRank = true)._2
+  def extractDistributedRankLong(turns: DataFrame, nPart: Int = 0): DataFrame =
+    distributedRank(turns, nPart, longRank = true)
 
-  /** Internal: returns (the persisted ranged dataset, the result) so
-    * callers that materialize can release the cache (runDistributedRank).
-    */
-  private def distributedRankWith(turns: DataFrame, nPart: Int,
-      storage: org.apache.spark.storage.StorageLevel,
-      longRank: Boolean)
-      : (org.apache.spark.sql.Dataset[graft.model.Turn], DataFrame) = {
+  private def distributedRank(turns: DataFrame, nPart: Int,
+      longRank: Boolean): DataFrame = {
     val spark = turns.sparkSession
     import spark.implicits._
     val p = if (nPart > 0) nPart else spark.sparkContext.defaultParallelism
-    val ranged = turns
+    // DISK_ONLY at cluster scale (scaladoc above)
+    val ranged = CacheScope.cache(turns
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         col("tool"), col("ts"))
       .as[graft.model.Turn]
       .repartitionByRange(p, col("conv_id"), col("turn_idx"), col("ts"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"), col("ts"))
-      .persist(storage) // DISK_ONLY at cluster scale (scaladoc above)
+      .sortWithinPartitions(col("conv_id"), col("turn_idx"), col("ts")))
 
     // job 1: per-partition boundary conversation counts (<= 2 per task)
     val boundary: Array[(Int, String, Long)] = ranged.mapPartitions { it =>
@@ -248,14 +245,13 @@ object ExtractPipeline {
       rankPartition(it, pid, bOffsets.value, combine)
     }.toDF("t", "rn")
 
-    val result = ranked
+    ranked
       .select(col("t.conv_id").as("conv_id"), col("t.turn_idx").as("turn_idx"),
         col("rn").cast(if (useLong) "long" else "int").as("rn"),
         Functions.extract_turn(col("t.text")).as("ex"))
       .select(col("conv_id"), col("turn_idx"), col("rn"),
         col("ex.kind").as("kind"), col("ex.text").as("text"),
         col("ex.spans").as("spans"), col("ex.ok").as("ok"))
-    (ranged, result)
   }
 
   /** Per-partition rank pass, factored pure so tests can drive it with a
@@ -290,23 +286,6 @@ object ExtractPipeline {
           "use extractDistributedRankLong (rn: bigint) for conversations " +
           "past 2^31 turns")
     rn.toInt
-  }
-
-  /** Run-and-unpersist wrapper for extractDistributedRank (batch use):
-    * the ranged dataset MUST stay persisted until the result is
-    * materialized (the rank offsets were computed against its sampled
-    * range layout — a recompute could resample boundaries), so the
-    * lazy entry point cannot unpersist for you; this one materializes
-    * via `action` and then releases the cache.
-    */
-  def runDistributedRank[A](turns: DataFrame, nPart: Int = 0,
-      storage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
-      longRank: Boolean = false)(
-      action: DataFrame => A): A = {
-    val (ranged, df) = distributedRankWith(turns, nPart, storage, longRank)
-    try action(df)
-    finally { ranged.unpersist(blocking = false); () }
   }
 
   /** Per-block rows — the det->rec explode step (run_ocr.py:185-229):

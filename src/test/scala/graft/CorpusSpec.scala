@@ -158,15 +158,25 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("runCorpus: same result as corpus(), all internal caches released after") {
+    import SparkTestSession.{poll, rddsWithBlocks}
     spark.sharedState.cacheManager.clearCache()
     val freshDocs = CorpusPipeline.corpusDocs(
         SparkEntry.transcripts(spark, 48, 12))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    freshDocs.count()
+    val before = poll(rddsWithBlocks())(_.nonEmpty)
+    var taken = Set.empty[Int]
     val viaRun = CorpusPipeline.runCorpus(freshDocs, minJ, minQ, Seq("en")) {
-      df => df.collect().map(_.getAs[Long]("doc_id")).toSet
+      df =>
+        val kept = df.collect().map(_.getAs[Long]("doc_id")).toSet
+        taken = poll(rddsWithBlocks() -- before)(_.nonEmpty)
+        kept
     }
-    // only the CALLER's docs cache may remain — both internal caches
-    // (exact hub, sig pass) must be gone
+    assert(taken.nonEmpty, "runCorpus holds blocks while its action runs")
+    // only the CALLER's docs cache may remain — the exact hub, the sig
+    // pass and every clusterLabels checkpoint must be gone
+    val left = poll(rddsWithBlocks() -- before)(_.isEmpty)
+    assert(left.isEmpty, s"runCorpus left RDD blocks behind: $left")
     val cached = spark.sharedState.cacheManager
     freshDocs.unpersist(blocking = true)
     assert(cached.isEmpty,
@@ -178,18 +188,23 @@ class CorpusSpec extends AnyFunSuite {
     assert(viaRun == viaLazy && viaRun.nonEmpty)
   }
 
-  test("runMinhashNearDups: pairs == lazy op, sig cache released after") {
-    import spark.implicits._
+  test("CacheScope { minhashNearDups }: pairs == lazy op, sig cache released after") {
+    import SparkTestSession.{poll, rddsWithBlocks}
     spark.sharedState.cacheManager.clearCache()
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val viaRun = graft.ops.DedupOps.runMinhashNearDups(d, minJaccard = 0.6) {
-      pairs => pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val before = rddsWithBlocks()
+    val (viaScope, taken) = graft.io.CacheScope {
+      (graft.ops.DedupOps.minhashNearDups(d, minJaccard = 0.6)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        poll(rddsWithBlocks() -- before)(_.nonEmpty))
     }
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "runMinhashNearDups must release the sig cache")
+    assert(taken.nonEmpty, "the sig cache holds blocks inside the scope")
+    val left = poll(rddsWithBlocks() -- before)(_.isEmpty)
+    assert(left.isEmpty && spark.sharedState.cacheManager.isEmpty,
+      s"the scope must release the sig cache; RDDs holding blocks: $left")
     val viaLazy = graft.ops.DedupOps.minhashNearDups(d, minJaccard = 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaRun == viaLazy && viaRun.nonEmpty)
+    assert(viaScope == viaLazy && viaScope.nonEmpty)
     spark.sharedState.cacheManager.clearCache()
   }
 

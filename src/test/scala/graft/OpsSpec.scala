@@ -269,6 +269,23 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("cluster labels: on return only the labels hold blocks; their scope frees them") {
+    import spark.implicits._
+    import SparkTestSession.{poll, rddsWithBlocks}
+    val chain = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = rddsWithBlocks()
+    val held = graft.io.CacheScope {
+      val labels = DedupOps.clusterLabels(chain)
+      // every superseded round and the edge list are already released
+      val live = poll(rddsWithBlocks() -- before)(_.size == 1)
+      assert(live.size == 1, s"RDDs holding blocks on return: $live")
+      assert(labels.count() == 12)
+      live
+    }
+    assert(poll(rddsWithBlocks() intersect held)(_.isEmpty).isEmpty,
+      "the caller's scope must release the returned labels")
+  }
+
   test("cluster labels == driver-side union-find on real minhash pairs") {
     val pairs = DedupOps.minhashNearDups(docs, minJaccard = 0.6)
       .select(col("id_a"), col("id_b"))

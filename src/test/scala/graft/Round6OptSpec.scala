@@ -221,7 +221,8 @@ class Round6OptSpec extends AnyFunSuite {
 
   // --- incremental dedup cache wrapper ----------------------------------
 
-  test("runIncrementalMinhashCandidates: same pairs, sig cache released") {
+  test("CacheScope { incrementalMinhashCandidates }: same pairs, sig cache released") {
+    import SparkTestSession.{poll, rddsWithBlocks}
     spark.sharedState.cacheManager.clearCache()
     val d = docs
     val existing = d.filter(pmod(col("doc_id"), lit(5)) =!= 0)
@@ -230,16 +231,20 @@ class Round6OptSpec extends AnyFunSuite {
       .createTempDirectory("graft_r6_incr").toString + "/index"
     val (idxBands, idxSigs) =
       DedupOps.ensureMinhashIndex(spark, existing, idxPath)
-    val viaRun = DedupOps.runIncrementalMinhashCandidates(
-      batch, idxBands, idxSigs, 0.6) { cands =>
-      cands.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val before = rddsWithBlocks()
+    val (viaScope, taken) = graft.io.CacheScope {
+      (DedupOps.incrementalMinhashCandidates(batch, idxBands, idxSigs, 0.6)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
+        poll(rddsWithBlocks() -- before)(_.nonEmpty))
     }
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "runIncrementalMinhashCandidates must release the new-batch sig cache")
+    assert(taken.nonEmpty, "the sig cache holds blocks inside the scope")
+    val left = poll(rddsWithBlocks() -- before)(_.isEmpty)
+    assert(left.isEmpty && spark.sharedState.cacheManager.isEmpty,
+      s"the scope must release the new-batch sig cache; RDDs holding blocks: $left")
     val viaLazy = DedupOps.incrementalMinhashCandidates(
         batch, idxBands, idxSigs, 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     spark.sharedState.cacheManager.clearCache()
-    assert(viaRun == viaLazy)
+    assert(viaScope == viaLazy)
   }
 }

@@ -141,20 +141,20 @@ class ScaleSpec extends AnyFunSuite {
     assert(key(dist) == key(win))
   }
 
-  test("distributed rank: runDistributedRank releases the range-layout cache") {
+  test("distributed rank: CacheScope releases the range-layout cache") {
     import spark.implicits._
+    import SparkTestSession.{poll, rddsWithBlocks}
     val turns = graft.data.TranscriptGen.tiny(nConvs = 8, cap = 8)
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val cached0 = spark.sparkContext.getPersistentRDDs.size
-    val n = ExtractPipeline.runDistributedRank(turns, nPart = 4)(_.count())
-    assert(n > 0)
-    // unpersist is async (blocking = false); poll briefly
-    var waited = 0
-    while (spark.sparkContext.getPersistentRDDs.size > cached0 && waited < 50) {
-      Thread.sleep(100); waited += 1
+    val before = rddsWithBlocks()
+    val (n, taken) = graft.io.CacheScope {
+      val n = ExtractPipeline.extractDistributedRank(turns, nPart = 4).count()
+      (n, poll(rddsWithBlocks() -- before)(_.nonEmpty))
     }
-    assert(spark.sparkContext.getPersistentRDDs.size <= cached0,
-      "ranged dataset cache must be released after the action")
+    assert(n > 0 && taken.nonEmpty, "the range layout must be cached while in use")
+    val left = poll(rddsWithBlocks() intersect taken)(_.isEmpty)
+    assert(left.isEmpty,
+      s"ranged dataset cache must be released after the scope; still held: $left")
   }
 
   test("distributed rank: one mega-conversation spans many rank tasks") {

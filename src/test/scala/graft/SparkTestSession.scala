@@ -19,4 +19,22 @@ object SparkTestSession {
     graft.expr.Functions.register(s)
     s
   }
+
+  /** Ids of the RDDs holding blocks: cached frames and localCheckpoints
+    * alike. The session tracks persisted RDDs through weak references, so
+    * a test holds the frames it checks: a collected one would drop out of
+    * this view without its blocks being freed.
+    */
+  def rddsWithBlocks(): Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  /** `f` re-read every 100 ms until `ok` (at most 10 s), then returned:
+    * block updates reach the status store asynchronously.
+    */
+  def poll[A](f: => A)(ok: A => Boolean): A = {
+    var v = f
+    var n = 0
+    while (!ok(v) && n < 100) { Thread.sleep(100); v = f; n += 1 }
+    v
+  }
 }
