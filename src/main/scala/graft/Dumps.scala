@@ -115,10 +115,14 @@ object Dumps {
     * at the sf0.01-oracle scale this helper serves; never reuse it for a
     * corpus-sized materialization (a production dump drops the coalesce
     * and writes partitioned).
+    *
+    * The build and write run in their own CacheScope: what `df` caches
+    * (the minhash sig pass behind mh_cands, say) is freed once the dump
+    * lands, not held to the end of the query that first needed it.
     */
   def ensure(path: String)(df: => DataFrame): String = {
     if (!graft.io.FsUtil.successExists(path))
-      df.coalesce(1).write.mode("overwrite").parquet(path)
+      graft.io.CacheScope(df.coalesce(1).write.mode("overwrite").parquet(path))
     path
   }
 

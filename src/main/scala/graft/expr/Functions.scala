@@ -31,6 +31,9 @@ object Functions {
   def ngram_jaccard(a: Column, b: Column): Column =
     ColumnBridge.column(
       NgramJaccard(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def sig_match_frac(a: Column, b: Column): Column =
+    ColumnBridge.column(
+      SigMatchFrac(ColumnBridge.expression(a), ColumnBridge.expression(b)))
   def shingle_hashes(c: Column): Column =
     ColumnBridge.column(ShingleHashes(ColumnBridge.expression(c)))
   def jaccard_sorted(a: Column, b: Column): Column =

@@ -22,9 +22,12 @@ object TextExprKernels {
     * FACT, not a plan-string inference — BandingSpec resets them, runs a
     * candidate op, and asserts the count equals the row count (local
     * mode only: in a real cluster each executor JVM counts its own rows).
+    * `jaccardEvals` counts the per-pair verify the same way: CorpusSpec
+    * asserts one runCorpus evaluates it once per screened candidate.
     */
   val sigEvals = new java.util.concurrent.atomic.LongAdder
   val simhashEvals = new java.util.concurrent.atomic.LongAdder
+  val jaccardEvals = new java.util.concurrent.atomic.LongAdder
 
   def minhashSig(s: UTF8String): ArrayData = {
     sigEvals.increment()
@@ -40,8 +43,26 @@ object TextExprKernels {
     simhashEvals.increment()
     TextHash.simhash64(s.toString)
   }
-  def ngramJaccard(a: UTF8String, b: UTF8String): Double =
+  def ngramJaccard(a: UTF8String, b: UTF8String): Double = {
+    jaccardEvals.increment()
     TextHash.ngramJaccard(a.toString, b.toString)
+  }
+  /** Positional-match count of two signatures / NumHashes, or -1 where
+    * the recipe it replaces, aggregate(zip_with(a, b, x == y)), is null:
+    * unequal lengths (zip_with pads with nulls) or a null element.
+    */
+  def sigMatchFrac(a: ArrayData, b: ArrayData): Double = {
+    val n = a.numElements()
+    if (b.numElements() != n) return -1.0
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return -1.0
+      if (a.getLong(i) == b.getLong(i)) m += 1
+      i += 1
+    }
+    m / TextHash.NumHashes.toDouble
+  }
   def shingleHashes(s: UTF8String): ArrayData =
     new GenericArrayData(TextHash.shingleHashes(s.toString))
   def jaccardSorted(a: ArrayData, b: ArrayData): Double =
@@ -139,6 +160,32 @@ case class NgramJaccard(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any =
     TextExprKernels.ngramJaccard(
       a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+    copy(left = l, right = r)
+}
+
+/** sig_match_frac(sig_a, sig_b) -> double: the signature screen's
+  * jaccard estimate, positional matches / NumHashes, bit-equal to
+  * aggregate(zip_with(sig_a, sig_b, (x, y) -> int(x = y)), 0, +) /
+  * NumHashes and null wherever that is. The higher-order recipe is
+  * interpreted and took its join out of whole-stage codegen; this stays
+  * in it.
+  */
+case class SigMatchFrac(left: Expression, right: Expression)
+    extends StaticBinary {
+  def staticFn = "sigMatchFrac"
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName = "sig_match_frac"
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val f = TextExprKernels.sigMatchFrac(
+      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (f < 0) null else f
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      s"""${ev.value} = ${TextExprKernels.Ref}.$staticFn($l, $r);
+         |${ev.isNull} = ${ev.value} < 0;""".stripMargin)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }

@@ -53,6 +53,17 @@ object DedupOps {
     * the old valve: singleton buckets yield no pairs; mega-buckets are
     * exact-dedup's job).
     *
+    * The pairs are hash-partitioned on (id_a, id_b) into the context's
+    * defaultParallelism before the distinct, whose aggregate that
+    * partitioning already satisfies, so the plan keeps its two plain
+    * exchanges (banding, pairs). A plain distinct's exchange is an
+    * id-pair shuffle of tens of KB that AQE coalesces into ONE
+    * partition, so the screen and the per-pair verify above it ran on
+    * one core; a repartition to a fixed count is never coalesced. The
+    * cost: raw band collisions (a pair sharing k bands arrives k times)
+    * now shuffle with no map-side partial distinct — ids (and carry
+    * columns) only, one copy per shared band.
+    *
     * Trade made consciously: WindowExec buffers each bucket on its task
     * (spilling past memory) BEFORE the filter drops mega-buckets, where
     * the old agg+join stream-dropped them. Rows here are ~24-byte
@@ -76,6 +87,8 @@ object DedupOps {
     pruned.as("a").join(pruned.as("b"), extra.fold(on)(on && _))
       .select(a(id).as("id_a") +: b(id).as("id_b") +:
         carry.flatMap(c => Seq(a(c).as(s"${c}_a"), b(c).as(s"${c}_b"))): _*)
+      .repartition(banded.sparkSession.sparkContext.defaultParallelism,
+        col("id_a"), col("id_b"))
       .distinct()
   }
 
@@ -95,17 +108,15 @@ object DedupOps {
   }
 
   /** The signature screen (step 4 of minhashCandidates), shared by the
-    * batch and incremental candidate paths.
+    * batch and incremental candidate paths. The estimate is the
+    * sig_match_frac kernel, bit-equal to the aggregate(zip_with(...))
+    * recipe it replaced: that higher-order function is interpreted and
+    * took the per-pair join carrying it out of whole-stage codegen.
     */
   private def sigScreen(cands: DataFrame, sigs: DataFrame,
       minJaccard: Double): DataFrame =
     joinBack(cands, sigs, "doc_id", "sig", "sig")
-      .withColumn("est",
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => (x === y).cast("int")),
-          lit(0), (acc, v) => acc + v) /
-          lit(graft.kernel.TextHash.NumHashes.toDouble))
-      .filter(col("est") >= minJaccard - 0.15)
+      .filter(sig_match_frac(col("sig_a"), col("sig_b")) >= minJaccard - 0.15)
       .select(col("id_a"), col("id_b"))
 
   private val BandKeys = Seq("band_idx", "band_key")
@@ -115,12 +126,14 @@ object DedupOps {
     *      over the text, custom codegen'd expression),
     *   2. explode band keys, self-join on (band_idx, band_key) — the
     *      LSH bucket join; only (doc_id, band) pairs shuffle,
-    *   3. distinct candidate pairs (a < b),
+    *   3. distinct candidate pairs (a < b), hash-partitioned on the
+    *      pair to defaultParallelism (see bucketJoin),
     *   4. signature screen: positional-match fraction of the two 64-long
-    *      signatures is an unbiased jaccard estimator; drop pairs whose
-    *      estimate is >=0.15 below the target BEFORE any text joins
-    *      (sigma ~ sqrt(j(1-j)/64) ~ 0.06, so the margin costs ~0 recall
-    *      and cuts the verify join ~10x on similar-vocabulary corpora).
+    *      signatures (sig_match_frac, codegen'd) is an unbiased jaccard
+    *      estimator; drop pairs whose estimate is >=0.15 below the target
+    *      BEFORE any text joins (sigma ~ sqrt(j(1-j)/64) ~ 0.06, so the
+    *      margin costs ~0 recall and cuts the verify join ~10x on
+    *      similar-vocabulary corpora).
     *
     * At 100 TB: step 2's shuffle is ~16 longs/doc; step 4 joins 64-long
     * signatures keyed by doc_id, proportional to candidates, not corpus.
@@ -389,7 +402,9 @@ object DedupOps {
     *
     * Algorithm: iterative hash-min label propagation — each round every
     * node pushes its current label to its neighbors and keeps the min;
-    * converges in O(component diameter) rounds. Per round: one
+    * converges in O(component diameter) rounds. The symmetric edge
+    * list is built in one explode pass over `pairs`, so a lazy pair plan
+    * runs once (a self-union would run it twice). Per round: one
     * ids-only join + groupBy-min shuffle (labels and edges are pairs of
     * longs — payloads never enter), the superseded round released as
     * soon as the next one is checkpointed (and the edge list on return;
@@ -411,10 +426,15 @@ object DedupOps {
     // On a cluster job that must survive executor loss, swap
     // localCheckpoint for checkpoint() with a checkpoint dir — same
     // truncation, replicated blocks.
-    // sym is re-joined every round
+    // sym is re-joined every round. Both directions come from ONE pass
+    // over `pairs`: a union of two selects over a lazy `pairs` runs its
+    // whole plan (band join -> screen -> verify) once per branch, since
+    // AQE shares neither the exchanges nor the cache stages across them
     val sym = CacheScope.checkpoint(
-      pairs.select(col("id_a").as("a"), col("id_b").as("b"))
-        .union(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
+      pairs.select(explode(array(
+          struct(col("id_a").as("a"), col("id_b").as("b")),
+          struct(col("id_b").as("a"), col("id_a").as("b")))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"))
         .distinct())
     // init: label(v) = min(v, min neighbor). `round` is the current
     // round's checkpoint, (doc_id, label[, own_label])

@@ -48,6 +48,13 @@ class BandingSpec extends AnyFunSuite {
       .distinct()
   }
 
+  // the signature screen's estimate before the sig_match_frac kernel
+  private def hofEst(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column) =
+    aggregate(zip_with(a, b, (x, y) => (x === y).cast("int")),
+      lit(0), (acc, v) => acc + v) /
+      lit(graft.kernel.TextHash.NumHashes.toDouble)
+
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.select(col("id_a"), col("id_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -63,12 +70,7 @@ class BandingSpec extends AnyFunSuite {
         .withColumnRenamed("sig", "sig_a"), Seq("id_a"))
       .join(sigs.withColumnRenamed("doc_id", "id_b")
         .withColumnRenamed("sig", "sig_b"), Seq("id_b"))
-      .withColumn("est",
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => (x === y).cast("int")),
-          lit(0), (acc, v) => acc + v) /
-          lit(graft.kernel.TextHash.NumHashes.toDouble))
-      .filter(col("est") >= minJaccard - 0.15)
+      .filter(hofEst(col("sig_a"), col("sig_b")) >= minJaccard - 0.15)
     val newPairs = pairs(DedupOps.minhashCandidates(docs, minJaccard))
     assert(newPairs == pairs(oldScreened))
     assert(newPairs.nonEmpty)
@@ -166,6 +168,77 @@ class BandingSpec extends AnyFunSuite {
     val cands = DedupOps.minhashCandidates(docs, minJaccard = 0.6)
     assert(finalTree(cands).contains("InMemoryTableScan"),
       "sig cache missing from the plan")
+  }
+
+  // --- the signature screen: sig_match_frac == the HOF recipe ----------
+
+  test("sig_match_frac: bit-equal to the aggregate(zip_with) recipe, nulls included") {
+    import spark.implicits._
+    val n = graft.kernel.TextHash.NumHashes
+    val sig = (0 until n).map(i => 1000L * i + 7L).toArray
+    // the first k positions match, the rest differ
+    def matching(k: Int) = sig.indices.map(i => if (i < k) sig(i) else -sig(i) - 1).toArray
+    // minJaccard 0.5 screens at est >= 0.35: 22/64 falls below, 23/64 passes
+    val forged = Seq(("identical", sig, sig), ("disjoint", sig, matching(0)),
+      ("22of64", sig, matching(22)), ("23of64", sig, matching(23)),
+      ("shorter", sig, sig.take(n - 1)), ("null", sig, null))
+    // real signatures too: every pair of the first 40 eligible docs
+    val real = docs.filter(length(col("text")) >= 5).orderBy("doc_id").limit(40)
+      .select(col("doc_id"), minhash_sig(col("text")).as("sig"))
+    val realPairs = real.as("x").crossJoin(real.as("y"))
+      .select(concat(col("x.doc_id").cast("string"), lit("-"),
+          col("y.doc_id").cast("string")).as("name"),
+        col("x.sig").as("a"), col("y.sig").as("b"))
+    // the repartition keeps the forged rows off the optimizer's
+    // local-relation folding, so both columns run as generated code
+    val both = forged.toDF("name", "a", "b").unionByName(realPairs)
+      .repartition(3)
+      .select(col("name"), sig_match_frac(col("a"), col("b")).as("k"),
+        hofEst(col("a"), col("b")).as("h"))
+      .collect()
+    assert(both.length == forged.length + 40 * 40)
+    def bits(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None
+      else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    both.foreach(r => assert(bits(r, 1) == bits(r, 2),
+      s"${r.getString(0)}: kernel ${r.get(1)} vs recipe ${r.get(2)}"))
+    val byName = both.map(r => r.getString(0) -> r).toMap
+    assert(byName("identical").getDouble(1) == 1.0)
+    assert(byName("disjoint").getDouble(1) == 0.0)
+    assert(byName("22of64").getDouble(1) < 0.5 - 0.15)
+    assert(byName("23of64").getDouble(1) >= 0.5 - 0.15)
+    assert(byName("shorter").isNullAt(1) && byName("null").isNullAt(1))
+    // the interpreted path agrees with the generated one
+    forged.foreach { case (name, a, b) =>
+      val e = graft.expr.SigMatchFrac(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(a),
+        org.apache.spark.sql.catalyst.expressions.Literal.create(b))
+      assert(Option(e.eval()) == Option(byName(name).get(1)), name)
+    }
+  }
+
+  test("minhash candidates: the screen is codegen'd, no lambdafunction in the executed plan") {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+    val cands = DedupOps.minhashCandidates(docs, minJaccard = 0.6)
+    val tree = finalTree(cands)
+    // every executed operator's expressions, each tagged with whether a
+    // whole-stage codegen stage holds the operator
+    def exprs(p: SparkPlan, inCodegen: Boolean): Seq[(Expression, Boolean)] =
+      p match {
+        case a: AdaptiveSparkPlanExec => exprs(a.executedPlan, inCodegen)
+        case q: QueryStageExec => exprs(q.plan, inCodegen)
+        case w: WholeStageCodegenExec => exprs(w.child, inCodegen = true)
+        case other => other.expressions.map(_ -> inCodegen) ++
+          other.children.flatMap(exprs(_, inCodegen))
+      }
+    val all = exprs(cands.queryExecution.executedPlan, inCodegen = false)
+    assert(!all.exists(_._1.exists(_.isInstanceOf[LambdaFunction])),
+      s"a lambdafunction is back in the plan:\n$tree")
+    val screens = all.filter(_._1.exists(_.isInstanceOf[graft.expr.SigMatchFrac]))
+    assert(screens.nonEmpty && screens.forall(_._2),
+      s"screen outside whole-stage codegen (${screens.map(_._2)}):\n$tree")
   }
 
   test("simhash candidates: simhash64 runs EXACTLY once per non-blank row (counted)") {

@@ -208,6 +208,55 @@ class CorpusSpec extends AnyFunSuite {
     spark.sharedState.cacheManager.clearCache()
   }
 
+  test("runCorpus evaluates ngram_jaccard exactly once per screened candidate") {
+    // counted, like BandingSpec's sig pass: clusterLabels' edge list
+    // once came from a self-union of the lazy pair plan, and AQE ran the
+    // band join -> screen -> verify once per union branch (2x)
+    val nCands = graft.io.CacheScope(DedupOps.minhashCandidates(
+      CorpusPipeline.exactSurvivors(docs), minJ).count())
+    assert(nCands > 0, "fixture has no screened candidates — count vacuous")
+    graft.expr.TextExprKernels.jaccardEvals.reset()
+    CorpusPipeline.runCorpus(docs, minJ, minQ, Seq("en"))(_.collect())
+    val evals = graft.expr.TextExprKernels.jaccardEvals.sum()
+    assert(evals == nCands,
+      s"verify ran $evals times for $nCands screened candidates")
+  }
+
+  test("verify reads defaultParallelism partitions, not one coalesced task") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
+    // AQE coalesces a small id-pair shuffle into one partition; the
+    // candidates' repartition to a fixed count must reach the verify
+    val exact = CorpusPipeline.exactSurvivors(docs)
+    graft.io.CacheScope {
+      val verified = DedupOps.verifyJaccard(
+        DedupOps.minhashCandidates(exact, minJ), exact, minJ)
+      verified.collect()
+      def result(p: SparkPlan): SparkPlan = p match {
+        case a: AdaptiveSparkPlanExec => result(a.executedPlan)
+        case q: QueryStageExec => result(q.plan)
+        case other => other
+      }
+      val top = result(verified.queryExecution.executedPlan)
+      // the operator evaluating ngram_jaccard, then the shuffle reads of
+      // its stage (broadcast sides are other stages' outputs)
+      val verify = top.collectFirst {
+        case n if n.expressions.exists(_.exists(
+          _.isInstanceOf[graft.expr.NgramJaccard])) => n
+      }
+      assert(verify.nonEmpty, s"no ngram_jaccard in the final plan:\n$top")
+      def reads(p: SparkPlan): Seq[Int] = p match {
+        case r: AQEShuffleReadExec => Seq(r.partitionSpecs.length)
+        case s: ShuffleQueryStageExec => Seq(s.shuffle.numPartitions)
+        case _: BroadcastQueryStageExec => Nil
+        case other => other.children.flatMap(reads)
+      }
+      val parts = reads(verify.get)
+      assert(parts == Seq(spark.sparkContext.defaultParallelism),
+        s"verify input partitions $parts:\n$top")
+    }
+  }
+
   test("doc_id derivation matches the conv id suffix and is unique") {
     val m = docs.select(col("doc_id"), col("conv_id")).collect()
       .map(r => (r.getLong(0), r.getString(1)))

@@ -23,6 +23,30 @@ class DumpsSpec extends AnyFunSuite {
       Dumps.deriveVersion(params, Dumps.Families))
   }
 
+  test("ensure: caches taken while building a dump are freed once it lands") {
+    import SparkTestSession.{poll, rddsWithBlocks, spark}
+    val d = graft.pipeline.CorpusPipeline.corpusDocs(
+      SparkEntry.transcripts(spark, 48, 12))
+    val path = java.nio.file.Files.createTempDirectory("graft_dump")
+      .toString + "/mh_cands"
+    val before = rddsWithBlocks()
+    var taken = Set.empty[Int]
+    // the outer scope stands for the query that first needs the dump: it
+    // must not be what frees the dump's build caches
+    val left = graft.io.CacheScope {
+      Dumps.ensure(path) {
+        val cands = graft.ops.DedupOps.minhashCandidates(d, minJaccard = 0.6)
+        cands.count() // materializes the sig cache under the candidates
+        taken = poll(rddsWithBlocks() -- before)(_.nonEmpty)
+        cands
+      }
+      poll(rddsWithBlocks() -- before)(_.isEmpty)
+    }
+    assert(taken.nonEmpty, "the dump build holds the sig cache while it runs")
+    assert(graft.io.FsUtil.successExists(path))
+    assert(left.isEmpty, s"RDDs still holding blocks after ensure: $left")
+  }
+
   test("dump root embeds the derived version") {
     assert(Dumps.root("/root/testdata/sf0.01").contains(Dumps.Version))
   }
