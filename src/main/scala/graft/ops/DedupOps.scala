@@ -270,13 +270,20 @@ object DedupOps {
     * screen already cut verify ~10x, and per-pair shingle CPU vs 4-8x
     * join shuffle bytes is at best a wash here (unlike the quadratic
     * baseline, where pairs >> docs and precompute wins outright).
+    *
+    * The kernel runs as a one-element generator because a filter on a
+    * generator's output stays above it. From a projection, the
+    * optimizer pushes `jaccard >= minJaccard` into the text join's
+    * condition and the projection computes a kept column again: two
+    * evaluations per verified pair.
     */
   def verifyJaccard(cands: DataFrame, docs: DataFrame,
       minJaccard: Double): DataFrame =
     joinBack(cands, docs, "doc_id", "text", "text")
-      .withColumn("jaccard", ngram_jaccard(col("text_a"), col("text_b")))
+      .select(col("id_a"), col("id_b"),
+        explode(array(ngram_jaccard(col("text_a"), col("text_b"))))
+          .as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** MinHash + LSH near-dup pairs, verified by exact n-gram Jaccard. */
   def minhashNearDups(docs: DataFrame, minJaccard: Double = 0.6,
@@ -398,85 +405,182 @@ object DedupOps {
     * (doc_id, cluster_id) for every doc appearing in `pairs`, where
     * cluster_id = the MIN doc_id in the connected component (content
     * tie-break, deterministic; docs in no pair are their own implicit
-    * singleton cluster and are simply absent).
+    * singleton cluster and are simply absent). A pair of a doc with
+    * itself links nothing and is dropped.
     *
-    * Algorithm: iterative hash-min label propagation — each round every
-    * node pushes its current label to its neighbors and keeps the min;
-    * converges in O(component diameter) rounds. The symmetric edge
-    * list is built in one explode pass over `pairs`, so a lazy pair plan
-    * runs once (a self-union would run it twice). Per round: one
-    * ids-only join + groupBy-min shuffle (labels and edges are pairs of
-    * longs — payloads never enter), the superseded round released as
-    * soon as the next one is checkpointed (and the edge list on return;
-    * the returned labels' checkpoint belongs to the caller's
-    * CacheScope), convergence checked with a count of changed labels. At
-    * 100 TB the edge list is the verified near-dup pairs — orders of
-    * magnitude smaller than the corpus — and near-dup components are
-    * near-cliques (diameter 2-4 in practice), so a handful of rounds
-    * suffices; for adversarial long-chain graphs swap in the
-    * large-star/small-star variant (O(log n) rounds, same join shape).
-    * Refuses loudly (not silently-wrong) if maxIters rounds do not
-    * converge.
+    * The pair ids are checkpointed once (a lazy pair plan runs once)
+    * and counted in the same job. Then one of two paths, with one
+    * answer:
+    *  - Driver finish, for at most `driverEdges` pairs: collect them and
+    *    run a union-find on the driver, the smaller root always winning.
+    *    The labels come back as a local relation that holds no blocks,
+    *    so `dedupSurvivors`' anti-join broadcasts it. Two jobs in all:
+    *    the checkpoint and the collect.
+    *  - Star rounds, above the bound: alternating large-star/small-star
+    *    rounds (Kiveris et al., "Connected Components in MapReduce and
+    *    Beyond", SoCC 2014) contract every component into a star around
+    *    its min id in O(log n) rounds (on a chain with ascending ids,
+    *    10 rounds at 10^3 nodes and 14 at 10^4, where one-hop label
+    *    propagation needs n - 1). Each round is ids-only shuffles and
+    *    one checkpoint; the superseded round is released once the next
+    *    is taken. An edge stays active while its larger end has another
+    *    neighbor. Once the active edges fit under `driverEdges`, they
+    *    are collected and union-found, and every doc takes the driver
+    *    label of itself, else of its parent pointer (the least of
+    *    itself and its neighbors), else the parent itself. That result
+    *    is the one checkpoint handed to the caller's CacheScope.
+    *
+    * `driverEdges` is `driverEdgeBound()`, sized from the driver heap;
+    * the overload that takes it lets tests force the star rounds.
+    * `maxRounds` is a safety net that O(log n) rounds do not reach on
+    * real input; past it the call refuses loudly rather than return
+    * wrong labels. Jobs are tagged `clusterLabels:edges`,
+    * `clusterLabels:round k` and `clusterLabels:finish`; the caller's
+    * job description is restored on return.
     */
-  def clusterLabels(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    // Lineage MUST be cut every round (eager localCheckpoint): labels
-    // feeds its own next iteration twice, so a bare persist would leave
-    // a logical plan that DOUBLES per round — exponential planning cost
-    // long before any data moves (caught by the 12-node-chain test).
-    // On a cluster job that must survive executor loss, swap
-    // localCheckpoint for checkpoint() with a checkpoint dir — same
-    // truncation, replicated blocks.
-    // sym is re-joined every round. Both directions come from ONE pass
-    // over `pairs`: a union of two selects over a lazy `pairs` runs its
-    // whole plan (band join -> screen -> verify) once per branch, since
-    // AQE shares neither the exchanges nor the cache stages across them
-    val sym = CacheScope.checkpoint(
-      pairs.select(explode(array(
-          struct(col("id_a").as("a"), col("id_b").as("b")),
-          struct(col("id_b").as("a"), col("id_a").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .distinct())
-    // init: label(v) = min(v, min neighbor). `round` is the current
-    // round's checkpoint, (doc_id, label[, own_label])
-    var round = CacheScope.checkpoint(sym.groupBy(col("a"))
-      .agg(min(col("b")).as("nb"))
-      .select(col("a").as("doc_id"),
-        least(col("a"), col("nb")).as("label")))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      // push labels one hop, take the min of (own, incoming). The
-      // convergence signal rides IN the same aggregate (own_label =
-      // min over the unique own row): the round-5 shape re-joined next
-      // against labels just to count changed rows — one extra join +
-      // exchange + count query per round, pure overhead on an O(rounds)
-      // driver loop (round-6 probe: the changed-join was ~1/3 of the
-      // loop's jobs). Now convergence is a filter over the already-
-      // checkpointed round output, and isEmpty short-circuits on the
-      // first changed row.
-      val labels = round.select(col("doc_id"), col("label"))
-      val pushed = sym.join(labels, sym("a") === labels("doc_id"))
-        .select(col("b").as("doc_id"), col("label"),
-          lit(false).as("own"))
-      val next = CacheScope.checkpoint(labels.select(col("doc_id"),
-          col("label"), lit(true).as("own"))
-        .union(pushed)
-        .groupBy(col("doc_id"))
-        .agg(min(col("label")).as("label"),
-          min(when(col("own"), col("label"))).as("own_label")))
-      converged = next.filter(col("label") < col("own_label")).isEmpty
-      // next is self-contained: the superseded round can go now
-      CacheScope.release(round)
-      round = next
-      iter += 1
+  def clusterLabels(pairs: DataFrame): DataFrame =
+    clusterLabels(pairs, driverEdgeBound())
+
+  private[graft] def clusterLabels(pairs: DataFrame, driverEdges: Long,
+      maxRounds: Int = 64): DataFrame = {
+    require(driverEdges >= 0, s"driverEdges must be >= 0, got $driverEdges")
+    val sc = pairs.sparkSession.sparkContext
+    val caller = sc.getLocalProperty(JobDescription)
+    try {
+      sc.setJobDescription("clusterLabels:edges")
+      val (edges, n) = checkpointCounting(
+        pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+          .filter(col("a") =!= col("b")),
+        lit(true))
+      if (n <= driverEdges) {
+        sc.setJobDescription("clusterLabels:finish")
+        val labels = labelRelation(edges)
+        CacheScope.release(edges)
+        labels
+      } else starRounds(edges, driverEdges, maxRounds)
+    } finally sc.setJobDescription(caller)
+  }
+
+  /** Driver heap one edge of the driver finish takes at its peak: the
+    * collected pair, its union-find entries, and up to two label rows
+    * of the local relation as `dedupSurvivors` joins it. Measured on
+    * disjoint pairs (two labels an edge, the worst case), local[2],
+    * Parallel GC: the largest finish that completes grows by about 1.2M
+    * edges per GB of heap (1.25M at -Xmx1g, 2.5M at 2g, 3.5M at 3g;
+    * 1.5M, 3M and 4.2M run out of memory), so about 850 bytes, rounded
+    * up.
+    */
+  private val DriverBytesPerEdge = 1024L
+
+  /** The most edges the driver finish takes: a quarter of the driver
+    * heap (the rest is Spark's and the caller's) at `DriverBytesPerEdge`.
+    */
+  private[graft] def driverEdgeBound(): Long =
+    Runtime.getRuntime.maxMemory / 4 / DriverBytesPerEdge
+
+  private val JobDescription = "spark.job.description"
+
+  /** Eager checkpoint of `df` and the count of its rows matching `p`,
+    * taken by an observation in the same job.
+    */
+  private def checkpointCounting(df: DataFrame, p: Column): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val cp = CacheScope.checkpoint(df.observe(obs, count_if(p).as("n")))
+    (cp, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** A star round's state: every edge seen from both ends, as
+    * (u, v, mn, deg) with mn the min neighbor and deg the neighbor
+    * count of u. Takes distinct (hi, lo) edges, lo < hi.
+    */
+  private def starView(edges: DataFrame): DataFrame = {
+    val w = Window.partitionBy("u")
+    edges.select(explode(array(
+        struct(col("hi").as("u"), col("lo").as("v")),
+        struct(col("lo").as("u"), col("hi").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .withColumn("mn", min(col("v")).over(w))
+      .withColumn("deg", count(lit(1)).over(w))
+  }
+
+  // seen from its larger end, an edge is active while that end has
+  // another neighbor; inactive edges hang a leaf on a smaller node
+  private val ActiveEdge = col("v") < col("u") && col("deg") > 1
+
+  /** One large-star + small-star round over a star view: large-star
+    * links every node's larger neighbors to the least of the node and
+    * its neighbors; small-star links every node and its smaller
+    * neighbors to the least of those. Returns distinct (hi, lo) edges.
+    */
+  private def starRound(view: DataFrame): DataFrame =
+    view.filter(col("v") > col("u"))
+      .select(col("v").as("hi"), least(col("u"), col("mn")).as("lo"))
+      .withColumn("m", min(col("lo")).over(Window.partitionBy("hi")))
+      .select(explode(array(col("hi"), col("lo"))).as("x"), col("m"))
+      .filter(col("x") =!= col("m"))
+      .select(col("x").as("hi"), col("m").as("lo"))
+      .distinct()
+
+  private def starRounds(edges: DataFrame, driverEdges: Long,
+      maxRounds: Int): DataFrame = {
+    val sc = edges.sparkSession.sparkContext
+    sc.setJobDescription("clusterLabels:round 0")
+    var (view, active) = checkpointCounting(starView(
+      edges.select(greatest(col("a"), col("b")).as("hi"),
+        least(col("a"), col("b")).as("lo")).distinct()), ActiveEdge)
+    CacheScope.release(edges)
+    var k = 0
+    while (active > driverEdges) {
+      if (k == maxRounds) {
+        CacheScope.release(view)
+        throw new IllegalStateException(
+          s"clusterLabels: $active edges still active after $maxRounds " +
+            "star rounds; raise maxRounds or driverEdges")
+      }
+      k += 1
+      sc.setJobDescription(s"clusterLabels:round $k")
+      val (next, n) = checkpointCounting(starView(starRound(view)), ActiveEdge)
+      CacheScope.release(view)
+      view = next
+      active = n
     }
-    CacheScope.release(sym)
-    if (!converged)
-      throw new IllegalStateException(
-        s"clusterLabels did not converge in $maxIters rounds — component " +
-          "diameter exceeds the hash-min budget; raise maxIters or use a " +
-          "star-contraction variant for long-chain graphs")
-    round.select(col("doc_id"), col("label").as("cluster_id"))
+    sc.setJobDescription("clusterLabels:finish")
+    val d = labelRelation(view.filter(ActiveEdge).select(col("u"), col("v")))
+    val self = d.select(col("doc_id"), col("cluster_id").as("own"))
+    val parent = d.select(col("doc_id").as("p"), col("cluster_id").as("via"))
+    // one row per doc: its edge towards its min neighbor
+    val labels = CacheScope.checkpoint(view.filter(col("v") === col("mn"))
+      .select(col("u").as("doc_id"), least(col("u"), col("mn")).as("p"))
+      .join(self, Seq("doc_id"), "left")
+      .join(parent, Seq("p"), "left")
+      .select(col("doc_id"),
+        coalesce(col("own"), col("via"), col("p")).as("cluster_id")))
+    CacheScope.release(view)
+    labels
+  }
+
+  /** (doc_id, cluster_id) of a driver union-find over the collected
+    * two-long `edges`, as a local relation. The smaller root always
+    * wins, so every root is its component's min id.
+    */
+  private def labelRelation(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val pairs = edges.as[(Long, Long)].collect()
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    for ((a, b) <- pairs) { parent(a) = a; parent(b) = b }
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.toSeq.map(v => (v, find(v))).toDF("doc_id", "cluster_id")
   }
 
   /** Survivor view: docs minus every non-canonical cluster member (the

@@ -28,11 +28,12 @@ import org.apache.spark.sql.functions._
   *  - every post-docs stage keys by doc_id or band key and moves
   *    ids-only rows except the two verify text joins, which are
   *    proportional to the candidate set, not the corpus.
-  *  - clusterLabels runs its bounded label-propagation loop over the
-  *    verified PAIR list (orders of magnitude smaller than the corpus),
-  *    so this composed call is a MULTI-JOB driver program like
-  *    extractDistributedRank, not a single lazy plan — the honest
-  *    shape of the production pipeline.
+  *  - clusterLabels resolves the verified PAIR list (orders of
+  *    magnitude smaller than the corpus) eagerly: one checkpoint of the
+  *    pairs, then a union-find on the driver when they fit its bound
+  *    (two jobs), else O(log n) star-contraction rounds first. So this
+  *    composed call is a multi-job driver program like
+  *    extractDistributedRank, not a single lazy plan.
   */
 object CorpusPipeline {
 

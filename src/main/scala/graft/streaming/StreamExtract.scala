@@ -352,15 +352,14 @@ object StreamExtract {
     * what the periodic batch run contributes. StreamingSpec pins
     * stream-then-reconcile == pure-batch clusters on a seeded appended
     * corpus. Ids-only shuffles throughout (clusterLabels over the pair
-    * list, not the corpus).
+    * list, not the corpus); clusterLabels drops self-pairs and takes
+    * a pair seen by both sources twice, so the union goes in as is.
     */
   def reconcileClusters(batchPairs: DataFrame,
       streamedPairs: DataFrame): DataFrame =
     DedupOps.clusterLabels(
       batchPairs.select(col("id_a"), col("id_b"))
-        .unionByName(streamedPairs.select(col("id_a"), col("id_b")))
-        .filter(col("id_a") =!= col("id_b"))
-        .distinct())
+        .unionByName(streamedPairs.select(col("id_a"), col("id_b"))))
 
   // --- custom state: streaming conversation-session assembly ------------
 

@@ -222,6 +222,70 @@ class CorpusSpec extends AnyFunSuite {
       s"verify ran $evals times for $nCands screened candidates")
   }
 
+  test("verifyJaccard keeping the jaccard column evaluates ngram_jaccard once per candidate") {
+    // a kept column was computed twice per verified pair: once in the
+    // text join's pushed-down condition, once in the projection
+    val exact = CorpusPipeline.exactSurvivors(docs)
+    graft.io.CacheScope {
+      val cands = graft.io.CacheScope.cache(DedupOps.minhashCandidates(exact, minJ))
+      val nCands = cands.count()
+      graft.expr.TextExprKernels.jaccardEvals.reset()
+      val verified = DedupOps.verifyJaccard(cands, exact, minJ).collect()
+      val evals = graft.expr.TextExprKernels.jaccardEvals.sum()
+      assert(verified.nonEmpty && verified.length < nCands,
+        s"${verified.length} of $nCands candidates verified: one side vacuous")
+      assert(verified.forall(_.getAs[Double]("jaccard") >= minJ))
+      assert(evals == nCands,
+        s"verify ran $evals times for $nCands candidates")
+    }
+  }
+
+  test("cluster labels: driver finish == forced star rounds on the minhash pairs") {
+    val exact = CorpusPipeline.exactSurvivors(docs)
+    graft.io.CacheScope {
+      val pairs = graft.io.CacheScope.cache(
+        DedupOps.minhashNearDups(exact, minJ).select(col("id_a"), col("id_b")))
+      def labels(driverEdges: Long) =
+        DedupOps.clusterLabels(pairs, driverEdges = driverEdges)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val viaDriver = labels(Long.MaxValue)
+      assert(viaDriver.values.toSet.size < viaDriver.size,
+        "fixture has no near-dup cluster")
+      assert(viaDriver == labels(0L))
+    }
+  }
+
+  test("runCorpus resolves a 40-hop revision chain instead of refusing") {
+    import spark.implicits._
+    // doc i is blocks i..i+6 of random words: each revision drops one
+    // block and appends one, so consecutive docs are near-dups and docs
+    // two hops apart are not. The verified graph is one 41-node path
+    // with ascending ids, past the 25 rounds one-hop label propagation
+    // had to resolve it.
+    val rnd = new scala.util.Random(11)
+    def word = Seq.fill(3 + rnd.nextInt(6))(('a' + rnd.nextInt(26)).toChar).mkString
+    val blocks = Vector.fill(47)(Seq.fill(30)(word).mkString(" "))
+    val texts = (0 until 41).map(i => blocks.slice(i, i + 7).mkString(" "))
+    val minJaccard = 0.6
+    for (i <- 0 until 40)
+      assert(graft.kernel.TextHash.ngramJaccard(texts(i), texts(i + 1)) >= minJaccard)
+    for (i <- 0 until 39)
+      assert(graft.kernel.TextHash.ngramJaccard(texts(i), texts(i + 2)) < minJaccard)
+    val chain = texts.zipWithIndex
+      .map { case (t, i) => (i + 1L, s"rev-${i + 1}", 1L, t) }
+      .toDF("doc_id", "conv_id", "n_turns", "text")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nPairs = graft.io.CacheScope(
+      DedupOps.minhashNearDups(chain, minJaccard).count())
+    assert(nPairs == 40, s"the chain verified $nPairs pairs, not its 40 hops")
+    val kept = CorpusPipeline.runCorpus(chain, minJaccard, minQuality = 0.0,
+        langs = texts.map(graft.kernel.TextHash.langId).distinct) {
+      _.collect().map(_.getAs[Long]("doc_id")).toSet
+    }
+    assert(kept == Set(1L), s"kept $kept")
+    chain.unpersist(blocking = false)
+  }
+
   test("verify reads defaultParallelism partitions, not one coalesced task") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}

@@ -255,17 +255,32 @@ class OpsSpec extends AnyFunSuite {
     assert(survivors == Set(1L, 4L, 5L, 7L, 8L, 11L, 12L))
   }
 
+  test("cluster labels: no pairs, no labels; a negative driver bound is refused") {
+    import spark.implicits._
+    // an empty local relation scans no partition at all
+    for (none <- Seq(Seq.empty[(Long, Long)].toDF("id_a", "id_b"),
+        spark.range(0).select(col("id").as("id_a"), col("id").as("id_b"))))
+      assert(graft.io.CacheScope(DedupOps.clusterLabels(none).count()) == 0)
+    // a negative bound would keep the star rounds going on any input
+    intercept[IllegalArgumentException] {
+      DedupOps.clusterLabels(Seq((1L, 2L)).toDF("id_a", "id_b"), driverEdges = -1)
+    }
+  }
+
   test("cluster labels: long chain converges; too-small budget fails loudly") {
     import spark.implicits._
-    // a 12-node chain (diameter 11) — worst case for hash-min: the min
-    // label travels one hop per round
+    // a 12-node chain (diameter 11): one-hop label propagation needs 11
+    // rounds, star rounds 4; both paths must label it whole
     val chain = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = DedupOps.clusterLabels(chain)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(labels.length == 12 && labels.forall(_._2 == 0L))
-    // with a 1-round budget the same chain must refuse, not mislabel
+    for (bound <- Seq(Long.MaxValue, 0L)) {
+      val labels = DedupOps.clusterLabels(chain, driverEdges = bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(labels.length == 12 && labels.forall(_._2 == 0L), s"bound $bound")
+    }
+    // forced onto star rounds with a 1-round budget, the same chain must
+    // refuse, not mislabel
     intercept[IllegalStateException] {
-      DedupOps.clusterLabels(chain, maxIters = 1)
+      DedupOps.clusterLabels(chain, driverEdges = 0, maxRounds = 1)
     }
   }
 
@@ -274,8 +289,17 @@ class OpsSpec extends AnyFunSuite {
     import SparkTestSession.{poll, rddsWithBlocks}
     val chain = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val before = rddsWithBlocks()
-    val held = graft.io.CacheScope {
+    // the driver finish returns a local relation: the edge checkpoint is
+    // released and nothing holds blocks
+    graft.io.CacheScope {
       val labels = DedupOps.clusterLabels(chain)
+      val live = poll(rddsWithBlocks() -- before)(_.isEmpty)
+      assert(live.isEmpty, s"RDDs holding blocks on return: $live")
+      assert(labels.count() == 12)
+    }
+    // star rounds hand exactly one checkpoint to the caller's scope
+    val held = graft.io.CacheScope {
+      val labels = DedupOps.clusterLabels(chain, driverEdges = 0)
       // every superseded round and the edge list are already released
       val live = poll(rddsWithBlocks() -- before)(_.size == 1)
       assert(live.size == 1, s"RDDs holding blocks on return: $live")
@@ -286,26 +310,67 @@ class OpsSpec extends AnyFunSuite {
       "the caller's scope must release the returned labels")
   }
 
-  test("cluster labels == driver-side union-find on real minhash pairs") {
-    val pairs = DedupOps.minhashNearDups(docs, minJaccard = 0.6)
-      .select(col("id_a"), col("id_b"))
-    val collected = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(collected.nonEmpty, "fixture has no near-dups at all")
-    // reference: classic union-find over the collected pairs
+  /** Classic union-find over collected pairs: the min id of each
+    * component, for every id in a pair.
+    */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       val p = parent.getOrElse(x, x)
       if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    collected.foreach { case (a, b) =>
+    pairs.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val expected = collected.flatMap(p => Seq(p._1, p._2)).distinct
-      .map(v => v -> find(v)).toMap
-    val got = DedupOps.clusterLabels(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == expected)
+    pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(v => v -> find(v)).toMap
+  }
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+
+  test("cluster labels == driver-side union-find on real minhash pairs") {
+    val pairs = DedupOps.minhashNearDups(docs, minJaccard = 0.6)
+      .select(col("id_a"), col("id_b"))
+    val collected = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(collected.nonEmpty, "fixture has no near-dups at all")
+    assert(labelMap(DedupOps.clusterLabels(pairs)) ==
+      unionFindLabels(collected.toSeq))
+  }
+
+  test("cluster labels: forced star rounds resolve 10^3- and 10^4-node chains in O(log n) rounds") {
+    val Round = "clusterLabels:round (\\d+)".r
+    for (n <- Seq(1000, 10000)) {
+      // ascending ids: the worst case of one-hop label propagation
+      val chain = spark.range(n - 1L)
+        .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+      val (labels, jobs) = SparkTestSession.jobsDuring(graft.io.CacheScope(
+        labelMap(DedupOps.clusterLabels(chain, driverEdges = 0))))
+      val rounds = jobs.collect { case Round(k) => k.toInt }.max
+      assert(rounds <= 2 * math.log(n) / math.log(2),
+        s"$n-node chain took $rounds star rounds")
+      assert(labels == unionFindLabels((0L until n - 1L).map(i => (i, i + 1))))
+    }
+  }
+
+  test("cluster labels: persisted pairs resolve in <= 3 tagged jobs; the caller's description is restored") {
+    val sc = spark.sparkContext
+    graft.io.CacheScope {
+      val pairs = graft.io.CacheScope.cache(
+        DedupOps.minhashNearDups(docs, minJaccard = 0.6)
+          .select(col("id_a"), col("id_b")))
+      assert(pairs.count() > 0, "fixture has no near-dups at all")
+      sc.setJobDescription("caller")
+      try {
+        val (labels, jobs) =
+          SparkTestSession.jobsDuring(DedupOps.clusterLabels(pairs))
+        assert(jobs.nonEmpty && jobs.size <= 3, s"clusterLabels jobs: $jobs")
+        assert(jobs.forall(Set("clusterLabels:edges", "clusterLabels:finish")),
+          s"untagged clusterLabels jobs: $jobs")
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        assert(labels.count() > 0)
+      } finally sc.setJobDescription(null)
+    }
   }
 
   test("precomputed hyperplane signs == the per-row xxhash64 recipe, bit-identical buckets") {

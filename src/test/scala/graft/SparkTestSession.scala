@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (Test / fork := true). */
@@ -27,6 +29,29 @@ object SparkTestSession {
     */
   def rddsWithBlocks(): Set[Int] =
     spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  /** `f`'s result and the descriptions of the Spark jobs it started, in
+    * start order ("" for an untagged job). The listener bus is drained
+    * before the listener is added and before it is read, so the list is
+    * exact, not sampled.
+    */
+  def jobsDuring[A](f: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      TestListenerBus.drain(sc)
+      (a, seen.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** `f` re-read every 100 ms until `ok` (at most 10 s), then returned:
     * block updates reach the status store asynchronously.
