@@ -23,11 +23,15 @@ object TextExprKernels {
     * candidate op, and asserts the count equals the row count (local
     * mode only: in a real cluster each executor JVM counts its own rows).
     * `jaccardEvals` counts the per-pair verify the same way: CorpusSpec
-    * asserts one runCorpus evaluates it once per screened candidate.
+    * asserts one runCorpus evaluates it once per screened candidate,
+    * and the gate kernels (`qualityEvals`, `langEvals`) once per doc
+    * that reaches the gate.
     */
   val sigEvals = new java.util.concurrent.atomic.LongAdder
   val simhashEvals = new java.util.concurrent.atomic.LongAdder
   val jaccardEvals = new java.util.concurrent.atomic.LongAdder
+  val qualityEvals = new java.util.concurrent.atomic.LongAdder
+  val langEvals = new java.util.concurrent.atomic.LongAdder
 
   def minhashSig(s: UTF8String): ArrayData = {
     sigEvals.increment()
@@ -73,9 +77,14 @@ object TextExprKernels {
     */
   def bigramTopFrac(s: UTF8String): Double =
     TextHash.topBigramFrac(s.toLowerCase.toString)
-  def langId(s: UTF8String): UTF8String =
+  def langId(s: UTF8String): UTF8String = {
+    langEvals.increment()
     UTF8String.fromString(TextHash.langId(s.toString))
-  def quality(s: UTF8String): Double = TextHash.qualityScore(s.toString)
+  }
+  def quality(s: UTF8String): Double = {
+    qualityEvals.increment()
+    TextHash.qualityScore(s.toString)
+  }
 
   def cosine(a: ArrayData, b: ArrayData): Double = {
     val x = a.toFloatArray()

@@ -25,14 +25,13 @@ object TextHash {
     z ^ (z >>> 31)
   }
 
-  /** Rolling polynomial hashes of all k-char shingles — DISTINCT, SORTED
-    * primitive array (no boxing: a boxed HashSet here dominated the
-    * whole dedup verify stage in profiling).
+  /** Rolling polynomial hashes of all k-char shingles, one per position
+    * in text order, repeats included: the shingle multiset. Empty for
+    * null text and text shorter than k.
     */
-  def shingleHashes(text: String, k: Int = ShingleK): Array[Long] = {
-    if (text == null || text.length < k) return Array.empty
-    val n = text.length - k + 1
-    val all = new Array[Long](n)
+  private def rawShingles(text: String, k: Int): Array[Long] = {
+    if (text == null || text.length < k) return Array.emptyLongArray
+    val all = new Array[Long](text.length - k + 1)
     var h = 0L
     val p = 1099511628211L // FNV prime as poly base
     var pk = 1L            // p^k for the rolling subtract
@@ -45,10 +44,20 @@ object TextHash {
       if (i >= k - 1) all(i - k + 1) = mix64(h)
       i += 1
     }
+    all
+  }
+
+  /** Rolling polynomial hashes of all k-char shingles — DISTINCT, SORTED
+    * primitive array (no boxing: a boxed HashSet here dominated the
+    * whole dedup verify stage in profiling).
+    */
+  def shingleHashes(text: String, k: Int = ShingleK): Array[Long] = {
+    val all = rawShingles(text, k)
+    val n = all.length
     java.util.Arrays.sort(all)
     // in-place dedup of the sorted array
     var w = 0
-    i = 0
+    var i = 0
     while (i < n) {
       if (w == 0 || all(i) != all(w - 1)) { all(w) = all(i); w += 1 }
       i += 1
@@ -56,18 +65,24 @@ object TextHash {
     if (w == n) all else java.util.Arrays.copyOf(all, w)
   }
 
+  // the per-permutation salts of minhashSig
+  private val Salts = Array.tabulate(NumHashes)(_.toLong * 0xc2b2ae3d27d4eb4fL)
+
   /** MinHash signature: NumHashes permutations simulated as
     * min(mix64(shingleHash ^ seed_i)) — the standard one-pass scheme.
+    * The minima run over the shingle multiset, unsorted: a minimum over
+    * a multiset is the minimum over its set, so repeats cost 64 mixes
+    * each but the signature is that of the distinct shingles.
     */
   def minhashSig(text: String): Array[Long] = {
-    val hs = shingleHashes(text)
+    val hs = rawShingles(text, ShingleK)
     val sig = Array.fill(NumHashes)(Long.MaxValue)
     var i = 0
     while (i < hs.length) {
       val h = hs(i)
       var j = 0
       while (j < NumHashes) {
-        val v = mix64(h ^ (j.toLong * 0xc2b2ae3d27d4eb4fL))
+        val v = mix64(h ^ Salts(j))
         if (v < sig(j)) sig(j) = v
         j += 1
       }
@@ -92,12 +107,70 @@ object TextHash {
     out
   }
 
-  /** Exact n-gram Jaccard similarity of two strings' shingle sets —
-    * merge-intersection of the two sorted distinct arrays, zero
-    * allocation beyond the shingle arrays themselves.
+  /** Exact n-gram Jaccard similarity of two strings' shingle sets,
+    * equal to jaccardSorted(shingleHashes(a), shingleHashes(b)) bit for
+    * bit (the same distinct counts and intersection) without sorting:
+    * a's shingles go into one open-addressing set, b's into a second,
+    * and each shingle new to b's set is looked up in a's.
     */
   def ngramJaccard(a: String, b: String): Double =
-    jaccardSorted(shingleHashes(a), shingleHashes(b))
+    jaccardUnsorted(rawShingles(a, ShingleK), rawShingles(b, ShingleK))
+
+  /** Jaccard of the SETS of two unsorted hash arrays, repeats allowed:
+    * jaccardSorted of their sorted distinct forms, bit for bit.
+    */
+  private[graft] def jaccardUnsorted(ha: Array[Long], hb: Array[Long]): Double = {
+    if (ha.isEmpty && hb.isEmpty) return 1.0
+    if (ha.isEmpty || hb.isEmpty) return 0.0
+    val sa = new LongSet(ha.length)
+    var i = 0
+    while (i < ha.length) { sa.add(ha(i)); i += 1 }
+    val sb = new LongSet(hb.length)
+    var inter = 0
+    i = 0
+    while (i < hb.length) {
+      if (sb.add(hb(i)) && sa.contains(hb(i))) inter += 1
+      i += 1
+    }
+    inter.toDouble / (sa.size + sb.size - inter)
+  }
+
+  /** A fixed-capacity open-addressing set of longs (linear probing) for
+    * at most `n` adds. 0 marks an empty slot, so 0 itself is tracked by
+    * a flag. The keys are mix64 outputs, so their low bits index well.
+    */
+  private final class LongSet(n: Int) {
+    private val slots = new Array[Long](
+      Integer.highestOneBit(math.max(n, 2) * 2 - 1) << 1)
+    private val mask = slots.length - 1
+    private var hasZero = false
+    var size = 0
+
+    /** Adds `x`; true when it was not in the set. */
+    def add(x: Long): Boolean = {
+      if (x == 0L) {
+        if (hasZero) return false
+        hasZero = true; size += 1; return true
+      }
+      var i = (x ^ (x >>> 32)).toInt & mask
+      while (slots(i) != 0L) {
+        if (slots(i) == x) return false
+        i = (i + 1) & mask
+      }
+      slots(i) = x; size += 1
+      true
+    }
+
+    def contains(x: Long): Boolean = {
+      if (x == 0L) return hasZero
+      var i = (x ^ (x >>> 32)).toInt & mask
+      while (slots(i) != 0L) {
+        if (slots(i) == x) return true
+        i = (i + 1) & mask
+      }
+      false
+    }
+  }
 
   /** 64-bit SimHash over whitespace tokens: per-bit vote of token
     * hashes, weighted by token frequency.

@@ -34,61 +34,59 @@ object DedupOps {
     // be near-dups under shingle jaccard anyway, so gate them out
     docs.filter(length(col("text")) >= graft.kernel.TextHash.ShingleK)
 
-  /** The LSH bucket join every candidate generator shares: bucket-size
-    * valve, then self-join on the band `keys` with a.`id` < b.`id` (and
-    * `extra`), then the id pair as (id_a, id_b) plus each `carry` column
-    * as <c>_a/<c>_b, distinct.
+  /** The LSH bucket join every candidate generator shares: the pairs
+    * (a, b) of banded rows in one bucket (equal `keys`) with a.`id` <
+    * b.`id` (and `extra`, over the a./b. columns), as (id_a, id_b) plus
+    * each `carry` column as <c>_a/<c>_b, distinct. Only buckets of
+    * 2..maxBucket members emit (singleton buckets yield no pairs;
+    * mega-buckets are exact dedup's job).
     *
-    * The valve runs WITHOUT a second evaluation of the banding
-    * subtree (round-4 judge item 1): a count window over the band keys
-    * replaces the old groupBy-count + join-back, whose bucket-size
-    * branch was a SECOND consumer of the banded frame — at corpus scale
-    * the per-row hashing (minhash bands / simhash / hyperplane dots) ran
-    * at least twice. The window needs exactly the ONE exchange the
-    * bucket self-join needs anyway; the self-join's two sides then share
-    * that exchange via ReuseExchange (both sides are the identical
-    * subtree), so the hashing below it evaluates ONCE per row —
-    * plan-asserted and counted in BandingSpec.
-    * Keeps rows whose bucket has 2..maxBucket members (same filter as
-    * the old valve: singleton buckets yield no pairs; mega-buckets are
-    * exact-dedup's job).
+    * The band rows shuffle ONCE, hash-partitioned on the keys into the
+    * context's defaultParallelism: a repartition to a fixed count is
+    * never coalesced by AQE, so the bucket work runs on every core. Two
+    * windows over one sort then run per bucket: a count valve, and for
+    * the members that pass it, every row collects the rows before it
+    * in id order, whose explode is the bucket's a < b pairs. So the
+    * banding subtree (the per-row hashing: simhash, hyperplane dots)
+    * has one consumer and evaluates once per row (BandingSpec counts
+    * it), where a groupBy+join-back valve would run it per branch and a
+    * self-join wrote the band rows twice whenever AQE did not reuse the
+    * exchange (it broadcast one side over a materialized input).
     *
-    * The pairs are hash-partitioned on (id_a, id_b) into the context's
+    * The pairs are hash-partitioned on (id_a, id_b) into
     * defaultParallelism before the distinct, whose aggregate that
-    * partitioning already satisfies, so the plan keeps its two plain
-    * exchanges (banding, pairs). A plain distinct's exchange is an
-    * id-pair shuffle of tens of KB that AQE coalesces into ONE
-    * partition, so the screen and the per-pair verify above it ran on
-    * one core; a repartition to a fixed count is never coalesced. The
-    * cost: raw band collisions (a pair sharing k bands arrives k times)
-    * now shuffle with no map-side partial distinct — ids (and carry
-    * columns) only, one copy per shared band.
+    * partitioning already satisfies: a plain distinct's exchange is an
+    * id-pair shuffle that AQE coalesces into ONE partition, and the
+    * screen and the per-pair verify above it ran on one core. Raw band
+    * collisions (a pair sharing k bands arrives k times) shuffle with no
+    * map-side partial distinct: ids (and carry columns) only.
     *
-    * Trade made consciously: WindowExec buffers each bucket on its task
-    * (spilling past memory) BEFORE the filter drops mega-buckets, where
-    * the old agg+join stream-dropped them. Rows here are ~24-byte
+    * The windows buffer each bucket on its task (spilling past memory)
+    * before the valve drops mega-buckets. Rows here are ~24-byte
     * ids+keys, so even a 10M-row boilerplate bucket spills ~240 MB on
-    * one task — bounded damage, paid only by corpora whose boilerplate
-    * dodges exact dedup. If that is the profile, reinstate an agg+join
-    * valve for that corpus and keep the hashing-once guarantee by
-    * persisting the banded frame instead (the minhash path already
-    * persists its sig pass).
+    * one task: bounded damage, paid only by corpora whose boilerplate
+    * dodges exact dedup.
     */
   private def bucketJoin(banded: DataFrame, keys: Seq[String], id: String,
       maxBucket: Int, carry: Seq[String] = Nil,
       extra: Option[Column] = None): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-    val pruned = banded.withColumn("bsize", count(lit(1)).over(w))
-      .filter(col("bsize") > 1 && col("bsize") <= maxBucket)
-      .drop("bsize")
+    val n = banded.sparkSession.sparkContext.defaultParallelism
+    val bucket = Window.partitionBy(keys.map(col): _*).orderBy(col(id))
+    val member = struct(banded.columns.toSeq.filterNot(keys.contains).map(col): _*)
     def a(c: String) = col(s"a.$c")
     def b(c: String) = col(s"b.$c")
-    val on = keys.map(k => a(k) === b(k)).reduce(_ && _) && a(id) < b(id)
-    pruned.as("a").join(pruned.as("b"), extra.fold(on)(on && _))
+    val lower = a(id) < b(id)
+    banded.repartition(n, keys.map(col): _*)
+      .withColumn("bsize", count(lit(1)).over(bucket.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)))
+      .filter(col("bsize") > 1 && col("bsize") <= maxBucket)
+      .withColumn("before", collect_list(member).over(
+        bucket.rowsBetween(Window.unboundedPreceding, -1)))
+      .select(explode(col("before")).as("a"), member.as("b"))
+      .filter(extra.fold(lower)(lower && _))
       .select(a(id).as("id_a") +: b(id).as("id_b") +:
         carry.flatMap(c => Seq(a(c).as(s"${c}_a"), b(c).as(s"${c}_b"))): _*)
-      .repartition(banded.sparkSession.sparkContext.defaultParallelism,
-        col("id_a"), col("id_b"))
+      .repartition(n, col("id_a"), col("id_b"))
       .distinct()
   }
 
@@ -122,10 +120,14 @@ object DedupOps {
   private val BandKeys = Seq("band_idx", "band_key")
 
   /** MinHash + LSH near-dup CANDIDATE pairs (screened, unverified):
-    *   1. map-side: 64-hash MinHash signature -> 16 band keys (one pass
-    *      over the text, custom codegen'd expression),
-    *   2. explode band keys, self-join on (band_idx, band_key) — the
-    *      LSH bucket join; only (doc_id, band) pairs shuffle,
+    *   1. the signature pass: a 64-hash MinHash signature per eligible
+    *      doc (one pass over the text, custom codegen'd expression),
+    *      checkpointed eagerly as one job tagged
+    *      `minhashCandidates:sigs` (see sigPass),
+    *   2. 16 band keys per doc, derived from the checkpointed signature
+    *      (minhash_bands_of_sig, a 16x4 mix fold), bucketed by
+    *      bucketJoin: the band rows shuffle once, and each bucket emits
+    *      its a < b pairs on its own task,
     *   3. distinct candidate pairs (a < b), hash-partitioned on the
     *      pair to defaultParallelism (see bucketJoin),
     *   4. signature screen: positional-match fraction of the two 64-long
@@ -134,23 +136,17 @@ object DedupOps {
     *      BEFORE any text joins (sigma ~ sqrt(j(1-j)/64) ~ 0.06, so the
     *      margin costs ~0 recall and cuts the verify join ~10x on
     *      similar-vocabulary corpora).
+    * Steps 2-4 stay lazy: they run in whatever job consumes the result.
+    * BandingSpec pins one band exchange read on every core, the
+    * signature kernel once per eligible doc, and the candidate set
+    * against the self-join recipe.
     *
     * At 100 TB: step 2's shuffle is ~16 longs/doc; step 4 joins 64-long
     * signatures keyed by doc_id, proportional to candidates, not corpus.
     */
   def minhashCandidates(docs: DataFrame, minJaccard: Double = 0.6,
       maxBucket: Int = 10000): DataFrame = {
-    // The 64-min signature is THE expensive per-row pass (shingle the
-    // text + 64 running minima). It is computed ONCE and persisted —
-    // the band keys DERIVE from the cached signature
-    // (minhash_bands_of_sig, a 16x4 mix fold) and the screening join
-    // reads the same cache, so the text is never re-shingled for a
-    // second branch (round-4 judge item 1; the old shape hashed it for
-    // the bucket-size branch, the join probe side, both self-join
-    // sides, AND the sig screen). (doc_id, sig) is ~530 B/doc at
-    // MEMORY_AND_DISK — the standard LSH materialization trade; the
-    // caller's CacheScope releases it once the candidates are consumed.
-    val sigs = CacheScope.cache(minhashSigs(docs))
+    val sigs = sigPass(minhashSigs(docs), "minhashCandidates:sigs")
     // skew valve: a band bucket of B docs yields B^2/2 candidate pairs;
     // mega-clusters (B > maxBucket, i.e. near-identical boilerplate
     // repeated millions of times) are exact-dedup's job, not LSH's —
@@ -159,6 +155,18 @@ object DedupOps {
     val cands = bucketJoin(bandsOfSigs(sigs), BandKeys, "doc_id", maxBucket)
     sigScreen(cands, sigs, minJaccard)
   }
+
+  /** The signature pass, taken as an eager checkpoint in one job tagged
+    * `tag` (the caller's job description is restored). The 64-min
+    * signature is THE expensive per-row pass (shingle the text + 64
+    * running minima); the band keys and the screen both read the
+    * checkpoint, so the text is hashed once per doc. A cache here was
+    * materialized lazily by every query stage that scanned it, one job
+    * each. (doc_id, sig) is ~530 B/doc, the standard LSH
+    * materialization trade; the caller's CacheScope releases it.
+    */
+  private def sigPass(sigs: DataFrame, tag: String): DataFrame =
+    described(sigs.sparkSession.sparkContext, tag)(CacheScope.checkpoint(sigs))
 
   /** (doc_id, sig) for the eligible docs — the one expensive pass. */
   private[graft] def minhashSigs(docs: DataFrame): DataFrame =
@@ -234,13 +242,14 @@ object DedupOps {
   def incrementalMinhashCandidates(newDocs: DataFrame,
       indexBands: DataFrame, indexSigs: DataFrame,
       minJaccard: Double = 0.6, maxBucket: Int = 10000): DataFrame = {
-    // the new batch's sig pass, persisted for the same reason as
-    // minhashCandidates'; the caller's CacheScope releases it
-    val newSigs = CacheScope.cache(minhashSigs(newDocs))
+    // the new batch's sig pass, checkpointed like minhashCandidates';
+    // the caller's CacheScope releases it
+    val newSigs = sigPass(minhashSigs(newDocs),
+      "incrementalMinhashCandidates:sigs")
     val newBanded = bandsOfSigs(newSigs)
     // TOUCHED-bucKET prune: only buckets containing a new-batch doc can
     // produce a pair with a new side, so the index contributes just
-    // those — the valve window and self-join then shuffle
+    // those — the bucket windows then shuffle
     // O(touched buckets), not O(index) (without this, every daily batch
     // re-shuffled the entire corpus-sized band table). The semi-join's
     // key side is the new batch's distinct band keys: AQE broadcasts it
@@ -359,8 +368,8 @@ object DedupOps {
   def simhashCandidates(docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 10000, pairBands: Boolean = false): DataFrame =
     // bucket-size valve (B <= maxBucket) — identical role to minhash's;
-    // the count window + ReuseExchange keep simhash64 at ONE evaluation
-    // per row (see bucketJoin)
+    // one band exchange keeps simhash64 at ONE evaluation per row (see
+    // bucketJoin)
     bucketJoin(simhashBands(docs, maxHamming, pairBands),
       Seq("chunk_idx", "chunk_key"), "doc_id", maxBucket, carry = Seq("sh"))
 
@@ -436,7 +445,11 @@ object DedupOps {
     * real input; past it the call refuses loudly rather than return
     * wrong labels. Jobs are tagged `clusterLabels:edges`,
     * `clusterLabels:round k` and `clusterLabels:finish`; the caller's
-    * job description is restored on return.
+    * job description is restored on return. The edges checkpoint runs
+    * whatever lazy plan `pairs` still is: under runCorpus,
+    * `clusterLabels:edges` covers the band exchange, the signature
+    * screen and the verify (the signature pass before them is its own
+    * `minhashCandidates:sigs` job).
     */
   def clusterLabels(pairs: DataFrame): DataFrame =
     clusterLabels(pairs, driverEdgeBound())
@@ -445,9 +458,7 @@ object DedupOps {
       maxRounds: Int = 64): DataFrame = {
     require(driverEdges >= 0, s"driverEdges must be >= 0, got $driverEdges")
     val sc = pairs.sparkSession.sparkContext
-    val caller = sc.getLocalProperty(JobDescription)
-    try {
-      sc.setJobDescription("clusterLabels:edges")
+    described(sc, "clusterLabels:edges") {
       val (edges, n) = checkpointCounting(
         pairs.select(col("id_a").as("a"), col("id_b").as("b"))
           .filter(col("a") =!= col("b")),
@@ -458,7 +469,7 @@ object DedupOps {
         CacheScope.release(edges)
         labels
       } else starRounds(edges, driverEdges, maxRounds)
-    } finally sc.setJobDescription(caller)
+    }
   }
 
   /** Driver heap one edge of the driver finish takes at its peak: the
@@ -478,7 +489,15 @@ object DedupOps {
   private[graft] def driverEdgeBound(): Long =
     Runtime.getRuntime.maxMemory / 4 / DriverBytesPerEdge
 
-  private val JobDescription = "spark.job.description"
+  /** `body` with the jobs it starts tagged `desc` (it may retag them),
+    * the caller's job description restored after.
+    */
+  private def described[A](sc: org.apache.spark.SparkContext, desc: String)(
+      body: => A): A = {
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(caller)
+  }
 
   /** Eager checkpoint of `df` and the count of its rows matching `p`,
     * taken by an observation in the same job.
@@ -662,7 +681,7 @@ object DedupOps {
     * rows are sized from the corpus's max dimension; null/ragged rows
     * are excluded from candidate generation (enforced, not assumed).
     *
-    * Scale discipline (round-1 fix): the self-join moves (vec_id,
+    * Scale discipline (round-1 fix): the bucket join moves (vec_id,
     * table_idx, bucket) rows ONLY — embedding vectors never ride through
     * the bucket join (they are fetched in the verify stage for the
     * candidate set, exactly like minhash fetches text); and the same
@@ -683,8 +702,8 @@ object DedupOps {
     if (dimRow.isEmpty || dimRow(0).isNullAt(0))
       return embs.select(col("vec_id").as("id_a"), col("vec_id").as("id_b"))
         .limit(0)
-    // count-window valve + ReuseExchange: the nTables x nPlanes
-    // hyperplane dot folds evaluate ONCE per row (see bucketJoin)
+    // one band exchange: the nTables x nPlanes hyperplane dot folds
+    // evaluate ONCE per row (see bucketJoin)
     bucketJoin(hyperplaneBands(embs, embCol, dimRow(0).getInt(0), nPlanes,
       nTables), Seq("table_idx", "bucket"), "vec_id", maxBucket)
   }

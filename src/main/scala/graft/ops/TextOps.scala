@@ -110,17 +110,24 @@ object TextOps {
     * NULL for kept rows and a PINNED reason code otherwise
     * ("low_quality", "bad_lang", or "low_quality+bad_lang" when both
     * trip — the x_bad_rows error-side pattern applied to quality). A
-    * narrow per-row projection: both scores are codegen'd kernel
-    * expressions, no shuffle; the kept corpus and the rejected
-    * side-channel are filters over ONE shared plan.
+    * narrow per-row pass: both scores are codegen'd kernel expressions,
+    * no shuffle; the kept corpus and the rejected side-channel are
+    * filters over ONE shared plan.
+    *
+    * The scores come out of a one-element generator, as verifyJaccard's
+    * jaccard does: a filter on a generator's output stays above it.
+    * From a projection, the optimizer pushed `reject_reason IS NULL`
+    * below it as a condition over both kernels, and every kept doc ran
+    * each kernel twice (CorpusSpec counts one run each).
     */
   def qualityGate(docs: DataFrame, minQuality: Double,
       langs: Seq[String]): DataFrame = {
     val lowQ = col("quality") < minQuality
     val badL = !col("lang_pred").isin(langs: _*)
     docs
-      .withColumn("quality", quality_score(col("text")))
-      .withColumn("lang_pred", lang_id(col("text")))
+      .select(col("*"), inline(array(struct(
+        quality_score(col("text")).as("quality"),
+        lang_id(col("text")).as("lang_pred")))))
       .withColumn("reject_reason",
         when(lowQ && badL, lit("low_quality+bad_lang"))
           .when(lowQ, lit("low_quality"))

@@ -10,13 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * hashing ONCE per row. The old shape fed the banded frame to the
   * bucket-size aggregate AND both self-join sides — at corpus scale the
   * expensive hashing (minhash sig / simhash / hyperplane dots) ran 2-4x.
-  * The new shape uses a count-window valve over the single banding
-  * exchange, whose two self-join consumers share it via ReuseExchange.
+  * The current shape shuffles the banded rows once and pairs each
+  * bucket's members on its own task (count valve + collected
+  * predecessors over one window sort), so the banded frame has one
+  * consumer.
   *
   * Evidence here: (a) the candidate SETS are bit-identical to the old
   * recipe (inlined below), (b) the final plan reads the corpus ONCE and
-  * carries a ReusedExchange. The wall-clock win measured when the shape
-  * landed is in BENCH.md.
+  * shuffles the band rows once, into defaultParallelism partitions.
   */
 class BandingSpec extends AnyFunSuite {
 
@@ -59,20 +60,23 @@ class BandingSpec extends AnyFunSuite {
     df.select(col("id_a"), col("id_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("minhash: new candidate set == old recipe (incl. sig-derived bands)") {
-    // replicate the OLD full op: text-derived bands + separate sig pass
-    // + the same signature screen, then assert bit-identical output
-    val minJaccard = 0.6
-    val sigs = docs.filter(length(col("text")) >= 5)
+  // the OLD full op: text-derived bands + separate sig pass + the same
+  // signature screen
+  private def oldScreened(d: DataFrame, minJaccard: Double): DataFrame = {
+    val sigs = d.filter(length(col("text")) >= 5)
       .select(col("doc_id"), minhash_sig(col("text")).as("sig"))
-    val oldScreened = oldMinhashCandidates(docs, maxBucket = 10000)
+    oldMinhashCandidates(d, maxBucket = 10000)
       .join(sigs.withColumnRenamed("doc_id", "id_a")
         .withColumnRenamed("sig", "sig_a"), Seq("id_a"))
       .join(sigs.withColumnRenamed("doc_id", "id_b")
         .withColumnRenamed("sig", "sig_b"), Seq("id_b"))
       .filter(hofEst(col("sig_a"), col("sig_b")) >= minJaccard - 0.15)
+  }
+
+  test("minhash: new candidate set == old recipe (incl. sig-derived bands)") {
+    val minJaccard = 0.6
     val newPairs = pairs(DedupOps.minhashCandidates(docs, minJaccard))
-    assert(newPairs == pairs(oldScreened))
+    assert(newPairs == pairs(oldScreened(docs, minJaccard)))
     assert(newPairs.nonEmpty)
     // and bands-from-sig == bands-from-text, row by row
     val drift = docs.filter(length(col("text")) >= 5)
@@ -131,31 +135,76 @@ class BandingSpec extends AnyFunSuite {
   private def exchanges(tree: String): Int =
     "(?<![A-Za-z])Exchange \\(\\d+\\)".r.findAllIn(tree).length
 
-  test("simhash candidates: corpus scanned ONCE, self-join reuses the banding exchange") {
+  // the bucket join has one consumer of the banded rows, so there is no
+  // second exchange for AQE to reuse or re-run
+  test("simhash candidates: corpus scanned ONCE, one banding exchange") {
     val tree = finalTree(DedupOps.simhashCandidates(docs, maxHamming = 4))
     assert("Scan parquet".r.findAllIn(tree).length == 1,
       s"corpus must be read once (hashing once per row):\n$tree")
-    assert(tree.contains("ReusedExchange"),
-      s"self-join sides must share the banding exchange:\n$tree")
-    assert(exchanges(tree) == 2, // banding + the distinct agg
-      s"expected exactly 2 plain exchanges (banding, distinct):\n$tree")
+    assert(!tree.contains("ReusedExchange"),
+      s"the banded rows have one consumer, nothing to reuse:\n$tree")
+    assert(exchanges(tree) == 2, // banding + the pairs' repartition
+      s"expected exactly 2 plain exchanges (banding, pairs):\n$tree")
   }
 
-  test("embedding candidates: corpus scanned ONCE, exchange reused") {
+  test("embedding candidates: corpus scanned ONCE, one banding exchange") {
     val tree = finalTree(DedupOps.embeddingCandidates(embs,
       nPlanes = 4, nTables = 8))
     assert("Scan parquet".r.findAllIn(tree).length == 1,
       s"hyperplane dots must fold once per row:\n$tree")
-    assert(tree.contains("ReusedExchange"), s"exchange not reused:\n$tree")
-    assert(exchanges(tree) == 2, s"expected banding + distinct only:\n$tree")
+    assert(!tree.contains("ReusedExchange"),
+      s"the banded rows have one consumer, nothing to reuse:\n$tree")
+    assert(exchanges(tree) == 2, s"expected banding + pairs only:\n$tree")
+  }
+
+  test("minhash over a cached input: ONE band exchange, read on every core, same candidates") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec}
+    // corpus() hands the candidate stage a cached frame; over one, AQE
+    // once broadcast a self-join side and wrote the band rows twice,
+    // each copy read as one coalesced partition
+    val cached = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    cached.count()
+    graft.io.CacheScope {
+      val cands = DedupOps.minhashCandidates(cached, minJaccard = 0.6)
+      val tree = finalTree(cands)
+      assert(pairs(cands) == pairs(oldScreened(cached, 0.6)))
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case r: ReusedExchangeExec => nodes(r.child)
+        case other => other.children.flatMap(nodes)
+      })
+      def banded(e: SparkPlan) = e.output.exists(_.name == "band_key")
+      val all = nodes(cands.queryExecution.executedPlan)
+      val bandExchanges = all.collect { case e: Exchange if banded(e) => e }
+      assert(bandExchanges.length == 1 &&
+        bandExchanges.forall(_.outputPartitioning.isInstanceOf[HashPartitioning]),
+        s"band rows must shuffle once, hash-partitioned:\n$tree")
+      assert(!all.exists {
+        case r: ReusedExchangeExec => banded(r)
+        case b: BroadcastExchangeExec => banded(b)
+        case _ => false
+      }, s"band rows reused or broadcast:\n$tree")
+      val reads = all.collect {
+        case r: AQEShuffleReadExec if banded(r.child) => r.partitionSpecs.length
+        case s: ShuffleQueryStageExec if banded(s) => s.shuffle.numPartitions
+      }
+      assert(reads.nonEmpty && reads.forall(_ == spark.sparkContext.defaultParallelism),
+        s"band reads of $reads partitions:\n$tree")
+    }
+    cached.unpersist(blocking = false)
   }
 
   test("minhash candidates: the sig pass runs EXACTLY once per eligible row (counted)") {
     // counted fact, not plan-string inference: the kernel bridge counts
-    // every signature evaluation (text-shingle pass). Banding, both
-    // self-join sides, and both screen joins must all be fed by the ONE
-    // cached pass. Cache cleared first — a prior test's cache would
-    // hide recomputes by showing zero instead.
+    // every signature evaluation (text-shingle pass). Banding and both
+    // screen joins must all be fed by the ONE checkpointed pass. Cache
+    // cleared first — a prior test's cache would hide recomputes by
+    // showing zero instead.
     spark.sharedState.cacheManager.clearCache()
     val eligible = docs.filter(length(col("text")) >= 5).count()
     graft.expr.TextExprKernels.sigEvals.reset()
@@ -164,10 +213,11 @@ class BandingSpec extends AnyFunSuite {
     assert(evals == eligible,
       s"sig pass ran $evals times for $eligible eligible rows " +
         "(old shape: 3-4x)")
-    // and the plan reads the signatures from the cache
+    // and the plan reads the signatures from the checkpoint
     val cands = DedupOps.minhashCandidates(docs, minJaccard = 0.6)
-    assert(finalTree(cands).contains("InMemoryTableScan"),
-      "sig cache missing from the plan")
+    val tree = finalTree(cands)
+    assert(tree.contains("Scan ExistingRDD") && !tree.contains("minhash_sig("),
+      s"sig checkpoint missing from the plan:\n$tree")
   }
 
   // --- the signature screen: sig_match_frac == the HOF recipe ----------

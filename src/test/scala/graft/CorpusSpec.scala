@@ -222,6 +222,42 @@ class CorpusSpec extends AnyFunSuite {
       s"verify ran $evals times for $nCands screened candidates")
   }
 
+  test("runCorpus evaluates quality_score and lang_id exactly once per doc reaching the gate") {
+    // the gate's reject_reason filter was pushed below the projection
+    // that computes both scores, so each kept doc ran each kernel twice
+    val exact = CorpusPipeline.exactSurvivors(docs)
+    val nGated = graft.io.CacheScope(DedupOps.dedupSurvivors(exact,
+      DedupOps.clusterLabels(DedupOps.minhashNearDups(exact, minJ)
+        .select(col("id_a"), col("id_b")))).count())
+    val kernels = graft.expr.TextExprKernels
+    kernels.qualityEvals.reset()
+    kernels.langEvals.reset()
+    val kept = CorpusPipeline.runCorpus(docs, minJ, minQ, Seq("en"))(_.count())
+    assert(kept > 0 && kept < nGated, s"$kept of $nGated kept: gate vacuous")
+    assert(kernels.qualityEvals.sum() == nGated && kernels.langEvals.sum() == nGated,
+      s"quality_score ran ${kernels.qualityEvals.sum()} and lang_id " +
+        s"${kernels.langEvals.sum()} times for $nGated docs at the gate")
+  }
+
+  test("the signature pass is one eager job, tagged, the caller's description restored") {
+    val exact = CorpusPipeline.exactSurvivors(docs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    exact.count()
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (n, jobs) = SparkTestSession.jobsDuring(graft.io.CacheScope {
+        val cands = DedupOps.minhashCandidates(exact, minJ)
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        cands.count()
+      })
+      assert(n > 0)
+      assert(jobs.head == "minhashCandidates:sigs" &&
+        jobs.tail.forall(_ == "caller"), s"jobs: $jobs")
+    } finally sc.setJobDescription(null)
+    exact.unpersist(blocking = false)
+  }
+
   test("verifyJaccard keeping the jaccard column evaluates ngram_jaccard once per candidate") {
     // a kept column was computed twice per verified pair: once in the
     // text join's pushed-down condition, once in the projection

@@ -2,13 +2,14 @@ package graft
 
 import graft.kernel._
 import graft.model.DomNode
-import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based invariants (SURVEY.md §5.2): span validity,
   * normalization idempotence, extractor totality/determinism on
   * arbitrary inputs, layout reading-order stability under input
-  * permutation.
+  * permutation, and the sort-free dedup kernels against their
+  * sorted-distinct specs.
   */
 class PropertySpec extends AnyFunSuite {
 
@@ -110,5 +111,74 @@ class PropertySpec extends AnyFunSuite {
       }
       ordered && blocks.forall(b => b.score >= 0 && b.score <= 1.0)
     })
+  }
+
+  // --- the sort-free dedup kernels against their sorted-distinct specs
+
+  /** minhashSig's spec: the minima over the SORTED DISTINCT shingles. */
+  private def sortedMinhash(t: String): Seq[Long] = {
+    val hs = TextHash.shingleHashes(t)
+    (0 until TextHash.NumHashes).map { j =>
+      hs.foldLeft(Long.MaxValue)((m, h) =>
+        math.min(m, TextHash.mix64(h ^ (j.toLong * 0xc2b2ae3d27d4eb4fL))))
+    }
+  }
+
+  private def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+
+  private def sortedJaccard(a: String, b: String) =
+    TextHash.jaccardSorted(TextHash.shingleHashes(a), TextHash.shingleHashes(b))
+
+  private val dedupText: Gen[String] = Gen.frequency(
+    3 -> Gen.asciiPrintableStr,
+    // heavy repetition: a few shingles, each repeated many times
+    2 -> Gen.listOf(Gen.oneOf("ab", "abab", " ", "aaaaa", "x")).map(_.mkString),
+    // non-ASCII, including surrogate pairs
+    2 -> Gen.listOf(Gen.oneOf("\u00e9", "\u4e2d\u6587", "\ud83d\ude00", "\u00df", "a", " "))
+      .map(_.mkString),
+    // arbitrary UTF-16, lone surrogates included
+    1 -> Arbitrary.arbitrary[String],
+    // shorter than one shingle
+    1 -> Gen.choose(0, TextHash.ShingleK - 1).map("x" * _))
+
+  // a text and an edit of it, so the two share shingles
+  private val textPair: Gen[(String, String)] = for {
+    a <- dedupText
+    i <- Gen.choose(0, a.length)
+    j <- Gen.choose(i, a.length)
+    ins <- dedupText
+    other <- dedupText
+    b <- Gen.frequency(4 -> Gen.const(a.take(i) + ins + a.drop(j)), 1 -> Gen.const(other))
+  } yield (a, b)
+
+  test("minhashSig == the minima over the sorted distinct shingles") {
+    for (t <- Seq(null, "", "abcd", "abcde", "aaaaaaaaaaaa", "\ud83d\ude00" * 9))
+      assert(TextHash.minhashSig(t).toSeq == sortedMinhash(t), String.valueOf(t))
+    check(Prop.forAll(dedupText)(t => TextHash.minhashSig(t).toSeq == sortedMinhash(t)))
+  }
+
+  test("ngramJaccard is bit-equal to jaccardSorted over shingleHashes") {
+    val fixed = Seq(null, "", "abcd", "abcde", "abcdef", "aaaaaaaaaa",
+      "\ud83d\ude00" * 9)
+    for (a <- fixed; b <- fixed)
+      assert(bits(TextHash.ngramJaccard(a, b)) == bits(sortedJaccard(a, b)), (a, b))
+    check(Prop.forAll(textPair) { case (a, b) =>
+      bits(TextHash.ngramJaccard(a, b)) == bits(sortedJaccard(a, b))
+    })
+  }
+
+  test("jaccardUnsorted == jaccardSorted of the sorted distinct sets, 0 and colliding hashes included") {
+    // 0 is the open-addressing set's empty slot; (k << 32) | k all fold
+    // to slot 0 and collide with each other
+    val hash = Gen.frequency(3 -> Gen.choose(-3L, 3L),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue),
+      1 -> Gen.choose(0L, 40L).map(k => (k << 32) | k), 2 -> Arbitrary.arbitrary[Long])
+    def sortedSet(xs: List[Long]) = xs.distinct.sorted.toArray
+    check(Prop.forAll(Gen.listOf(hash), Gen.listOf(hash)) { (a, b) =>
+      bits(TextHash.jaccardUnsorted(a.toArray, b.toArray)) ==
+        bits(TextHash.jaccardSorted(sortedSet(a), sortedSet(b)))
+    })
+    assert(TextHash.jaccardUnsorted(Array(0L, 0L, 5L), Array(0L)) == 0.5)
+    assert(TextHash.jaccardUnsorted(Array(0L), Array(7L)) == 0.0)
   }
 }
