@@ -92,8 +92,9 @@ object DedupOps {
 
   /** Join a pair list's payload back: `payload`'s column `c` keyed by
     * `id`, first for id_a (as <as>_a), then for id_b (as <as>_b). Shared
-    * by the signature screen and the verify stages, so every payload
-    * fetch is proportional to the candidate set, not the corpus.
+    * by the signature screen and the verify stages. Both joins read the
+    * whole `payload` table, so the fetch costs a pass over it however
+    * few the pairs are.
     */
   private def joinBack(pairs: DataFrame, payload: DataFrame, id: String,
       c: String, as: String): DataFrame = {
@@ -141,8 +142,13 @@ object DedupOps {
     * signature kernel once per eligible doc, and the candidate set
     * against the self-join recipe.
     *
-    * At 100 TB: step 2's shuffle is ~16 longs/doc; step 4 joins 64-long
-    * signatures keyed by doc_id, proportional to candidates, not corpus.
+    * At 100 TB: step 2's shuffle is ~16 longs/doc. Step 4 is NOT
+    * proportional to the candidates: it joins the WHOLE signature
+    * checkpoint twice, once per pair side (see joinBack). Under the
+    * broadcast threshold that is one BroadcastExchange of the full
+    * checkpoint plus a ReusedExchange of it; past the threshold a
+    * shuffled join would move every signature, so the screen's cost
+    * follows the corpus, not the candidate set.
     */
   def minhashCandidates(docs: DataFrame, minJaccard: Double = 0.6,
       maxBucket: Int = 10000): DataFrame = {
@@ -319,21 +325,14 @@ object DedupOps {
     * buckets quadratically in the key-space crowding, for C(h+2,2)
     * bands instead of h+1 — more exploded rows, each far more selective.
     */
-  /** @param passthrough extra input columns carried onto every banded
-    *        row (e.g. the event-time column for the streaming flavor —
-    *        a watermark declared upstream survives only if its column
-    *        does).
-    */
   private[graft] def simhashBands(docs: DataFrame, maxHamming: Int,
-      pairBands: Boolean,
-      passthrough: Seq[String] = Nil): DataFrame = {
+      pairBands: Boolean): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15, "radius 0..15 supported")
     val nChunks = if (pairBands) maxHamming + 2 else maxHamming + 1
     // all-whitespace texts hash to simhash 0 and would form one
     // quadratic chunk bucket at scale — same guard family as minhash
     val hashed = docs.filter(length(trim(col("text"))) > 0)
-      .select(col("doc_id") +: simhash64(col("text")).as("sh") +:
-        passthrough.map(col): _*)
+      .select(col("doc_id"), simhash64(col("text")).as("sh"))
     def chunkKey(i: Int) = {
       val off = i * 64 / nChunks
       val width = (i + 1) * 64 / nChunks - off
@@ -350,13 +349,11 @@ object DedupOps {
         struct(lit(i * nChunks + j).as("chunk_idx"),
           shiftleft(chunkKey(i), 32).bitwiseOR(chunkKey(j)).as("chunk_key"))
     hashed
-      .select(col("doc_id") +: col("sh") +:
-        explode(array(bandStructs: _*)).as("c") +:
-        passthrough.map(col): _*)
-      .select(col("doc_id") +: col("sh") +:
-        col("c.chunk_idx").as("chunk_idx") +:
-        col("c.chunk_key").as("chunk_key") +:
-        passthrough.map(col): _*)
+      .select(col("doc_id"), col("sh"),
+        explode(array(bandStructs: _*)).as("c"))
+      .select(col("doc_id"), col("sh"),
+        col("c.chunk_idx").as("chunk_idx"),
+        col("c.chunk_key").as("chunk_key"))
   }
 
   /** SimHash near-dup CANDIDATE pairs (see simhashBands for the two
@@ -633,7 +630,7 @@ object DedupOps {
   }
 
   /** The nPlanes-bit bucket key for LSH table `t` over the embedding
-    * column `emb`, folding the precomputed sign rows (hyperplaneBands
+    * column `emb`, folding the precomputed sign rows (embeddingCandidates
     * and BandingSpec build on it, so neither can drift from what
     * production runs). The column is a parameter — the helper must not
     * silently couple to a column NAME while taking everything else
@@ -650,25 +647,6 @@ object DedupOps {
       when(dotCol >= 0, lit(1L)).otherwise(lit(0L)) * lit(1L << p)
     }.reduce(_ + _)
 
-  /** The banded (vec_id, passthrough..., table_idx, bucket) rows for
-    * hyperplane LSH over `embCol`, shared by embeddingCandidates and the
-    * streaming near-dup path. Uniform-dim contract, enforced rather than
-    * assumed: a ragged row would null-pad through zip_with, fold its dot
-    * to null, and land every plane bit at 0 — all ragged rows silently
-    * sharing bucket 0. Cosine across mismatched dims is ill-defined for
-    * this recipe, so null and non-`dim` rows are EXCLUDED.
-    */
-  private[graft] def hyperplaneBands(embs: DataFrame, embCol: String,
-      dim: Int, nPlanes: Int, nTables: Int,
-      passthrough: Seq[String] = Nil): DataFrame = {
-    val signs = hyperplaneSigns(nTables, nPlanes, dim)
-    embs.filter(col(embCol).isNotNull && size(col(embCol)) === dim)
-      .select((col("vec_id") +: passthrough.map(col)) :+
-        posexplode(array((0 until nTables).map(t =>
-          hyperplaneTableKey(signs, t, nPlanes, col(embCol))): _*))
-          .as(Seq("table_idx", "bucket")): _*)
-  }
-
   /** Embedding-cosine near-dup CANDIDATE pairs via random-hyperplane LSH
     * with OR-amplification: nTables independent tables of nPlanes sign
     * bits; a pair is a candidate when ANY table buckets them together
@@ -679,7 +657,10 @@ object DedupOps {
     *
     * Contract: the embedding column has a uniform dimension. The sign
     * rows are sized from the corpus's max dimension; null/ragged rows
-    * are excluded from candidate generation (enforced, not assumed).
+    * are excluded from candidate generation (enforced, not assumed: a
+    * ragged row would null-pad through zip_with, fold its dot to null,
+    * and land every plane bit at 0 — all ragged rows silently sharing
+    * bucket 0; cosine across mismatched dims is ill-defined here).
     *
     * Scale discipline (round-1 fix): the bucket join moves (vec_id,
     * table_idx, bucket) rows ONLY — embedding vectors never ride through
@@ -702,10 +683,16 @@ object DedupOps {
     if (dimRow.isEmpty || dimRow(0).isNullAt(0))
       return embs.select(col("vec_id").as("id_a"), col("vec_id").as("id_b"))
         .limit(0)
+    val dim = dimRow(0).getInt(0)
+    val signs = hyperplaneSigns(nTables, nPlanes, dim)
+    val bands = embs.filter(col(embCol).isNotNull && size(col(embCol)) === dim)
+      .select(col("vec_id"),
+        posexplode(array((0 until nTables).map(t =>
+          hyperplaneTableKey(signs, t, nPlanes, col(embCol))): _*))
+          .as(Seq("table_idx", "bucket")))
     // one band exchange: the nTables x nPlanes hyperplane dot folds
     // evaluate ONCE per row (see bucketJoin)
-    bucketJoin(hyperplaneBands(embs, embCol, dimRow(0).getInt(0), nPlanes,
-      nTables), Seq("table_idx", "bucket"), "vec_id", maxBucket)
+    bucketJoin(bands, Seq("table_idx", "bucket"), "vec_id", maxBucket)
   }
 
   /** Verify stage: fetch the two vectors per candidate pair, exact

@@ -112,11 +112,9 @@ class MetricsSpec extends AnyFunSuite {
     val listener = graft.metrics.ThroughputListener.attach(spark)
     try {
       extracted.count()
-      // listener bus is async and private[spark]; poll briefly instead
-      var tries = 0
-      while (listener.snapshot.isEmpty && tries < 50) {
-        Thread.sleep(100); tries += 1
-      }
+      // the listener bus is async: drain it so every stage event of the
+      // count has landed before the snapshot and toDF read the tally
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
       val stats = listener.snapshot
       assert(stats.nonEmpty, "no stages observed")
       val df = listener.toDF(spark)

@@ -240,8 +240,11 @@ class OpsSpec extends AnyFunSuite {
 
   test("cluster labels: known graph resolves to min-id components") {
     import spark.implicits._
-    // components: {1,2,3} (chain), {5,6}, {8,9,10} (star at 9)
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 8L), (9L, 10L))
+    // components: {1,2,3} (chain), {5,6}, {8,9,10} (star at 9); both
+    // orientations of (1,2), (1,2) twice, and a self-pair (7,7) that
+    // must leave 7 unlabelled
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 8L), (9L, 10L),
+        (2L, 1L), (1L, 2L), (7L, 7L))
       .toDF("id_a", "id_b")
     val labels = DedupOps.clusterLabels(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap

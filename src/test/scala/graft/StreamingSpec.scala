@@ -83,437 +83,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming exact dedup: one survivor per content hash, none lost") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_stream_dedup").toString
-    val base = TranscriptGen.BaseEpochMs
-    // 3 distinct payloads, each duplicated across conversations
-    val rows = for {
-      (txt, nDup) <- Seq(("alpha payload text", 3),
-        ("beta payload text", 2), ("gamma payload text", 1))
-      i <- 0 until nDup
-    } yield (s"conv-$txt-$i", i, "user", txt, null: String,
-      new java.sql.Timestamp(base + i * 1000L))
-    rows.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .write.mode("overwrite").parquet(dir)
-
-    val q = StreamExtract.streamDedupExact(
-        spark.readStream.schema(StreamExtract.turnSchema).parquet(dir))
-      .writeStream.format("memory").queryName("stream_dedup")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.sql("SELECT text, text_md5 FROM stream_dedup").collect()
-      // exactly one survivor per distinct payload, hashes distinct
-      assert(out.length == 3, s"expected 3 survivors, got ${out.length}")
-      assert(out.map(_.getString(0)).toSet ==
-        Set("alpha payload text", "beta payload text", "gamma payload text"))
-      assert(out.map(_.getString(1)).distinct.length == 3)
-    } finally q.stop()
-  }
-
-  test("streaming minhash near-dup: appended near-dup flagged, state expires") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_stream_neardup").toString
-    val base = TranscriptGen.BaseEpochMs
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val baseText = "the quick brown fox jumps over the lazy dog near the " +
-      "river bank while the calm afternoon sun warms the meadow grass"
-    val nearText = "the quick brown fox jumps over the lazy cat near the " +
-      "river bank while the calm afternoon sun warms the meadow grass"
-    val otherText = "completely unrelated payload discussing spark shuffle " +
-      "partitions catalyst expressions and columnar parquet encodings"
-    def append(rows: Seq[(Long, String, Long)]): Unit =
-      rows.map { case (id, txt, tsMs) =>
-        (id, txt, new java.sql.Timestamp(tsMs)) }
-        .toDF("doc_id", "text", "ts")
-        .write.mode("append").parquet(dir)
-
-    append(Seq((1L, baseText, base), (3L, otherText, base + 500)))
-    val q = StreamExtract.streamDedupMinhashCandidates(spark,
-        spark.readStream.schema(docSchema).parquet(dir),
-        horizonMs = 60000L)
-      .toDF()
-      .writeStream.format("memory").queryName("stream_neardup")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      def pairs(): Set[(Long, Long)] =
-        spark.sql("SELECT id_a, id_b FROM stream_neardup")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs().isEmpty, "no near-dups yet")
-
-      // a near-dup appended WITHIN the watermark horizon is flagged
-      append(Seq((2L, nearText, base + 1000)))
-      q.processAllAvailable()
-      assert(pairs() == Set((1L, 2L)), s"got ${pairs()}")
-      // and the streamed candidate agrees with the batch operator family
-      val batchCands = graft.ops.DedupOps.minhashCandidates(
-          Seq((1L, baseText), (2L, nearText), (3L, otherText))
-            .toDF("doc_id", "text"), minJaccard = 0.6)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(batchCands == Set((1L, 2L)),
-        s"batch candidates drifted from stream: $batchCands")
-
-      // push the watermark far past the horizon (twice: timeouts fire on
-      // the trigger AFTER the watermark advances) so band state expires
-      val far = base + 30L * 24 * 3600 * 1000
-      for (i <- 1 to 2) {
-        append(Seq((100L + i, s"sentinel marker $i", far + i * 60000L)))
-        q.processAllAvailable()
-      }
-      // an exact copy of doc 1 arriving after expiry is NOT flagged
-      // against it — the bucket state is gone (bounded-state contract)
-      append(Seq((4L, baseText, far + 300000L)))
-      q.processAllAvailable()
-      assert(!pairs().exists(p => p._1 == 4L || p._2 == 4L),
-        s"state should have expired before doc 4: ${pairs()}")
-    } finally q.stop()
-  }
-
-  test("streaming minhash near-dup: candidates == batch banding on a seeded corpus") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // seeded synthetic corpus: 20 base texts (deterministic word mixes),
-    // near-dups by single-word perturbation, plus short texts that the
-    // ShingleK gate must drop — no wall clock / global RNG (CLAUDE.md)
-    val words = Vector("spark", "catalyst", "shuffle", "partition",
-      "transcript", "conversation", "extraction", "window", "parquet",
-      "broadcast", "iceberg", "manifest", "watermark", "dedup", "band")
-    def baseText(i: Int): String =
-      (0 until 12).map(j => words((i * 7 + j * 3) % words.length))
-        .mkString(" ")
-    val docs: Seq[(Long, String)] =
-      (0 until 20).map(i => (i.toLong, baseText(i))) ++
-        (0 until 8).map(i => (100L + i,
-          baseText(i * 2) + " tail" + (i % 3))) ++ // near-dups of even bases
-        (0 until 4).map(i => (200L + i, "ab" + i)) // gated (< ShingleK)
-    val base = TranscriptGen.BaseEpochMs
-    val dir = Files.createTempDirectory("graft_stream_ndrand").toString
-    docs.zipWithIndex.map { case ((id, txt), k) =>
-      (id, txt, new java.sql.Timestamp(base + k * 100L)) }
-      .toDF("doc_id", "text", "ts")
-      .write.mode("overwrite").parquet(dir)
-
-    // expected (single micro-batch arrival => anchor = min doc_id per
-    // band bucket): recomputed from the SAME banding expression in batch
-    val banded = docs.toDF("doc_id", "text")
-      .filter(length(col("text")) >= graft.kernel.TextHash.ShingleK)
-      .select(col("doc_id"),
-        posexplode(graft.expr.Functions.minhash_bands(col("text")))
-          .as(Seq("band_idx", "band_key")))
-    val expected = banded
-      .groupBy(col("band_idx"), col("band_key"))
-      .agg(min(col("doc_id")).as("first"),
-        collect_set(col("doc_id")).as("ids"))
-      .collect().flatMap { r =>
-        val first = r.getLong(2)
-        r.getSeq[Long](3).filter(_ != first).map(d =>
-          (math.min(first, d), math.max(first, d), r.getInt(0)))
-      }.toSet
-
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val q = StreamExtract.streamDedupMinhashCandidates(spark,
-        spark.readStream.schema(docSchema).parquet(dir))
-      .toDF()
-      .writeStream.format("memory").queryName("stream_ndrand")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.sql(
-          "SELECT id_a, id_b, band_idx FROM stream_ndrand")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(streamed == expected,
-        s"stream/batch banding drift: stream-only=${streamed -- expected}, " +
-          s"batch-only=${expected -- streamed}")
-      assert(expected.nonEmpty, "fixture produced no collisions at all")
-      // the injected near-dups are all flagged (recall on the fixture)
-      val flaggedDocs = streamed.flatMap(p => Set(p._1, p._2))
-      assert((0 until 8).forall(i => flaggedDocs.contains(100L + i)),
-        s"every injected near-dup must be flagged; got $flaggedDocs")
-      // gated short docs never produce candidates
-      assert(!flaggedDocs.exists(_ >= 200L))
-    } finally q.stop()
-  }
-
-  test("streaming simhash near-dup: VERIFIED pairs match batch, hamming exact") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val base = TranscriptGen.BaseEpochMs
-    // a long text pair differing in ONE character: the radius for the
-    // test is MEASURED from the kernel (self-calibrating — the point is
-    // stream==batch at the same radius, not a magic constant)
-    val aText = (1 to 8).map(i =>
-      s"distributed extraction engines favor declarative plans number $i " +
-        "because catalyst prunes columns pushes filters and picks joins")
-      .mkString(" ")
-    val bText = aText.dropRight(1) + "z"
-    val cText = "unrelated corpus about cooking recipes with garlic onion " +
-      "tomato basil and a long slow simmer on the stove tonight"
-    val radius = java.lang.Long.bitCount(
-      graft.kernel.TextHash.simhash64(aText) ^
-        graft.kernel.TextHash.simhash64(bText))
-    assert(radius >= 1 && radius <= 12,
-      s"fixture drifted: one-char edit landed at hamming $radius")
-    assert(java.lang.Long.bitCount(
-      graft.kernel.TextHash.simhash64(aText) ^
-        graft.kernel.TextHash.simhash64(cText)) > 15)
-    val rows = Seq((1L, aText, base), (2L, bText, base + 1000),
-      (3L, cText, base + 2000))
-    val dir = Files.createTempDirectory("graft_stream_simhash").toString
-    rows.map { case (id, t, ms) => (id, t, new java.sql.Timestamp(ms)) }
-      .toDF("doc_id", "text", "ts")
-      .write.mode("overwrite").parquet(dir)
-
-    val batch = graft.ops.DedupOps.simhashNearDups(
-        rows.map(r => (r._1, r._2)).toDF("doc_id", "text"),
-        maxHamming = radius)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(batch.nonEmpty && batch.forall(p => Set(p._1, p._2) == Set(1L, 2L)),
-      s"fixture must make (1,2) a simhash near-dup and nothing else: $batch")
-
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val q = StreamExtract.streamDedupSimhash(spark,
-        spark.readStream.schema(docSchema).parquet(dir), maxHamming = radius)
-      .toDF()
-      .writeStream.format("memory").queryName("stream_simhash")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.sql(
-          "SELECT DISTINCT id_a, id_b, hamming FROM stream_simhash")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      // the stream emits VERIFIED pairs with the exact hamming distance —
-      // identical to the batch operator on this corpus (2-doc buckets)
-      assert(streamed == batch,
-        s"stream $streamed != batch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming embedding near-dup: VERIFIED pairs match batch, cosine bit-equal") {
-    import spark.implicits._
-    val base = TranscriptGen.BaseEpochMs
-    val vecs = Seq(
-      (1L, Array(1.0f, 0.9f, 0.8f, 0.7f)),
-      (2L, Array(1.0f, 0.9f, 0.8f, 0.69f)), // near-identical to 1
-      (3L, Array(-1.0f, 0.5f, -0.5f, 0.2f))) // unrelated
-    val dir = Files.createTempDirectory("graft_stream_emb").toString
-    vecs.zipWithIndex.map { case ((id, v), k) =>
-      (id, v, new java.sql.Timestamp(base + k * 1000L)) }
-      .toDF("vec_id", "embedding", "ts")
-      .write.mode("overwrite").parquet(dir)
-
-    val batch = graft.ops.DedupOps.embeddingNearDups(
-        vecs.toDF("vec_id", "embedding"), minCos = 0.99,
-        nPlanes = 2, nTables = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(batch.map(p => (p._1, p._2)) == Set((1L, 2L)),
-      s"fixture must make exactly (1,2) an embedding near-dup: $batch")
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val q = StreamExtract.streamDedupEmbedding(spark,
-        spark.readStream.schema(schema).parquet(dir),
-        dim = 4, minCos = 0.99, nPlanes = 2, nTables = 4)
-      .toDF()
-      .writeStream.format("memory").queryName("stream_emb")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.sql("SELECT DISTINCT id_a, id_b, cos FROM stream_emb")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      // verified pairs AND the exact cosine must match the batch verify
-      // stage bit-for-bit (same double-fold recipe)
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming near-dup anchor: smaller id TAKES OVER across micro-batches") {
-    import spark.implicits._
-    // three identical texts arriving in separate micro-batches in
-    // DESCENDING id order: the anchor must converge to the content-min
-    // id (5 anchors first; 2 takes over and is compared against 5; 3
-    // then pairs against the NEW anchor 2, not against 5)
-    val txt = "identical payload text used by every document in this fixture"
-    val base = TranscriptGen.BaseEpochMs
-    val dir = Files.createTempDirectory("graft_stream_anchor").toString
-    def append(id: Long, tsMs: Long): Unit =
-      Seq((id, txt, new java.sql.Timestamp(tsMs)))
-        .toDF("doc_id", "text", "ts")
-        .write.mode("append").parquet(dir)
-    append(5L, base)
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val q = StreamExtract.streamDedupMinhashCandidates(spark,
-        spark.readStream.schema(docSchema).parquet(dir),
-        horizonMs = 600000L)
-      .toDF()
-      .writeStream.format("memory").queryName("stream_anchor")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      def pairs(): Set[(Long, Long)] =
-        spark.sql("SELECT DISTINCT id_a, id_b FROM stream_anchor")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs().isEmpty)
-      append(2L, base + 1000); q.processAllAvailable()
-      assert(pairs() == Set((2L, 5L)),
-        s"takeover must pair the displaced anchor: ${pairs()}")
-      append(3L, base + 2000); q.processAllAvailable()
-      assert(pairs() == Set((2L, 5L), (2L, 3L)),
-        s"later docs must compare vs the NEW content-min anchor: ${pairs()}")
-    } finally q.stop()
-  }
-
-  test("bootstrapped stream dedup: new docs pair against the indexed corpus without replay") {
-    import spark.implicits._
-    val base = TranscriptGen.BaseEpochMs
-    // batch1 is INDEXED (ensureMinhashIndex), then ONLY batch2 streams:
-    // the initial state must make new docs pair against the indexed
-    // corpus exactly as if batch1 had been replayed through the stream
-    val tA = "the quick brown fox jumps over the lazy dog near the river " +
-      "bank while the calm afternoon sun warms the meadow grass softly"
-    val tB = "completely unrelated payload discussing spark shuffle " +
-      "partitions catalyst expressions and columnar parquet encodings"
-    val tC = "a third narrative about manifests lineage checkpoints and " +
-      "resumable bucket waves in the extraction engine tonight"
-    val tD = "grouped payload appearing only inside the appended batch " +
-      "twice so the stream must also catch fresh new-new duplicates"
-    val batch1 = Seq((10L, tA), (11L, tA), (20L, tB))
-    val batch2 = Seq((5L, tA), (30L, tA), (40L, tC), (50L, tD), (51L, tD))
-    val idxPath = Files.createTempDirectory("graft_stream_boot").toString +
-      "/index"
-    val (bands, _) = graft.ops.DedupOps.ensureMinhashIndex(spark,
-      batch1.toDF("doc_id", "text"), idxPath)
-    val dir = Files.createTempDirectory("graft_stream_boot_in").toString
-    batch2.zipWithIndex.map { case ((id, txt), k) =>
-      (id, txt, new java.sql.Timestamp(base + k * 1000L)) }
-      .toDF("doc_id", "text", "ts")
-      .write.mode("overwrite").parquet(dir)
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val q = StreamExtract.streamDedupMinhashCandidatesFrom(spark,
-        spark.readStream.schema(docSchema).parquet(dir), bands,
-        horizonMs = 3600L * 1000)
-      .toDF()
-      .writeStream.format("memory").queryName("stream_boot")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val pairs = spark.sql("SELECT DISTINCT id_a, id_b FROM stream_boot")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      // tA bucket: indexed anchor 10; arrivals {5, 30}; 5 TAKES OVER as
-      // the content-min anchor -> (5,10) on displacement + (5,30).
-      // tD bucket: unindexed, new-new -> (50,51).
-      // tC singleton, tB no traffic -> nothing. No batch1 replay pairs
-      // ((10,11) is the batch/index build's job, not the stream's).
-      assert(pairs == Set((5L, 10L), (5L, 30L), (50L, 51L)),
-        s"bootstrapped pairs drifted: $pairs")
-    } finally q.stop()
-  }
-
-  test("stream-then-reconcile clusters == pure-batch clusters on an appended corpus") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val base = TranscriptGen.BaseEpochMs
-    // seeded appended corpus: batch1 = the corpus at the periodic batch
-    // run; batch2 = the appended segment seen only by the stream.
-    // group A spans the append boundary (new-old pairs), group B exists
-    // only in the append (new-new pairs), group C is batch1-internal,
-    // plus singletons — identical texts per group so every member
-    // verifies against its bucket anchor (the star-connectivity regime;
-    // pairs outside it are the periodic batch run's documented job)
-    val gA = "group alpha payload repeated verbatim across the append boundary"
-    val gB = "group beta payload that exists only inside the appended batch"
-    val gC = "group gamma payload fully contained in the original corpus run"
-    val s1 = "singleton text one about catalyst partition pruning internals"
-    val s2 = "singleton text two about manifest lineage and resume protocol"
-    val batch1 = Seq((1L, gA), (4L, gC), (5L, gC), (7L, s1))
-    val batch2 = Seq((2L, gA), (3L, gB), (6L, gB), (8L, s2))
-    val dir = Files.createTempDirectory("graft_stream_reconcile").toString
-    def append(rows: Seq[(Long, String)], t0: Long): Unit =
-      rows.zipWithIndex.map { case ((id, txt), k) =>
-        (id, txt, new java.sql.Timestamp(t0 + k * 1000L)) }
-        .toDF("doc_id", "text", "ts")
-        .write.mode("append").parquet(dir)
-    append(batch1, base)
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val q = StreamExtract.streamDedupSimhash(spark,
-        spark.readStream.schema(docSchema).parquet(dir),
-        maxHamming = 3, horizonMs = 3600L * 1000)
-      .toDF()
-      .writeStream.format("memory").queryName("stream_reconcile")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      append(batch2, base + 60000L) // the appended segment, in-horizon
-      q.processAllAvailable()
-      val streamedPairs = spark.sql(
-        "SELECT DISTINCT id_a, id_b FROM stream_reconcile")
-      // the periodic batch complete-pairs run covers batch1 only
-      val batchPairs = graft.ops.DedupOps.simhashNearDups(
-        batch1.toDF("doc_id", "text"), maxHamming = 3)
-      val reconciled = StreamExtract.reconcileClusters(
-          batchPairs, streamedPairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val pureBatch = graft.ops.DedupOps.clusterLabels(
-          graft.ops.DedupOps.simhashNearDups(
-            (batch1 ++ batch2).toDF("doc_id", "text"), maxHamming = 3)
-            .select(col("id_a"), col("id_b")))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(pureBatch == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 6L -> 3L,
-        4L -> 4L, 5L -> 4L), s"fixture drifted: $pureBatch")
-      assert(reconciled == pureBatch,
-        s"reconciled $reconciled != pure batch $pureBatch")
-      // and the survivor sets agree (the downstream consumer)
-      val allDocs = (batch1 ++ batch2).toDF("doc_id", "text")
-      val sSurv = graft.ops.DedupOps.dedupSurvivors(allDocs,
-          StreamExtract.reconcileClusters(batchPairs, streamedPairs))
-        .collect().map(_.getLong(0)).toSet
-      assert(sSurv == Set(1L, 3L, 4L, 7L, 8L))
-    } finally q.stop()
-  }
-
   test("watermarked windowed aggregation produces per-kind counts") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_stream_agg").toString
