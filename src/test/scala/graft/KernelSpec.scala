@@ -253,4 +253,197 @@ class KernelSpec extends AnyFunSuite {
       assert(s.start >= 0 && s.start <= s.end && s.end <= html.length)
     }
   }
+
+  // --- output pin: one digest over every field of every extraction ------
+
+  /** Seeded fuzz corpus for the output pin: fragments chosen to hit every
+    * edge the kernels special-case (tag case, raw-text elements,
+    * comments, entity forms, unicode whitespace, control chars, lone
+    * surrogates, json escapes, pdf number spellings).
+    */
+  private object PinCorpus {
+    import graft.data.TranscriptGen.{mix, u01}
+
+    private val HtmlFrags: Array[String] = Array(
+      "<p>", "</p>", "<P>", "</P>", "<DIV class='x'>", "</div>", "<Div>",
+      "<a href='/u'>", "</A>", "</a>", "<br>", "<BR/>", "<img src=x/>",
+      "<script>", "</script>", "<SCRIPT type=t>", "</Script >", "<style>",
+      "</STYLE>", "</style", "<noscript>", "</noscript>", "<nav>", "</NAV>",
+      "<h1>", "</H1>", "<h3 id=q>", "</h3>", "<h7>", "<pre>", "</pre>",
+      "<code>", "</CODE>", "<footer>", "</footer>", "<aside>", "</aside>",
+      "<table><tr><td>", "</td></tr></table>", "<li>", "<span>", "</span>",
+      "<section>", "<article>", "</article>", "<x-tag>", "</x-tag>",
+      "<\u0130nput>", "<l\u0130>", "<\u212Aey>", "<o2>", "<!-- c -->",
+      "<!DOCTYPE html>", "<?xml v?>", "<!--", "<", ">", "< p>", "</>",
+      "<1>", "a < b", "&amp;", "&lt;", "&gt;", "&quot;", "&apos;",
+      "&nbsp;", "&#64;", "&#x41;", "&#X1F600;", "&#128512;", "&#0;",
+      "&#31;", "&#32;", "&#xD800;", "&#1114112;", "&#x110000;", "&#;",
+      "&#x;", "&#-65;", "&#+66;", "&#x+43;", "&#\u0666\u0665;", "&bogus;",
+      "&amp", "&", "&&;", "&#12345678;", "&#x1234567;", "&copy;",
+      "&AMP;", "&#X;", "&#xg;", " ", "  ", "\t", "\n", "\r\n", "\u000B",
+      "\u000C", "\u001C", "\u0001", "\u0000", "\u007F", "\u00A0",
+      "\u2028", "\u3000", "\u2003", "\u0085", "word", "Fish and chips",
+      "caf\u00E9", "na\u00EFve", "\u65E5\u672C\u8A9E", "\uD83D\uDE00",
+      "\uD800", "\uDC00x", "x" * 70, "the quick brown fox jumps " * 3,
+      "var x = 1;", "p{color:red}")
+
+    private val JsonStrFrags: Array[String] = Array(
+      "hello", " world ", "\\n", "\\t", "\\\\", "\\\"", "\\/", "\\b",
+      "\\f", "\\r", "\\u0041", "\\u00e9", "\\uD83D\\uDE00", "\\u3000",
+      "\\u0000", "\\uZZZZ", "\\u12", "\\q", "\t", "\u0001", "\u00A0",
+      "\u3000", "caf\u00E9", "  ", "a  b", "<p>x</p>", "&amp;", "x" * 40)
+    private val JsonKeys: Array[String] = Array(
+      "text", "content", "stdout", "message", "tool", "te\\u0078t",
+      "TEXT", "", "text ", "items")
+    private val PdfNums: Array[String] = Array(
+      "72.0", "72", "-0.0", "-0", "0", "0.0", "1e2", "0x1p3", "+5", ".5",
+      "1.", "NaN", "-NaN", "Infinity", "-Infinity", " 72 ", "\t3.5",
+      "5d", "5f", "1_0", "", " ", "abc", "3.14159265358979323846",
+      "12345678901234567890", "0.000000000000000000000001", "330.0",
+      "306", "305.99999999999999999", "306.0000000000000001", "1e400",
+      "-1.25", "00072.500", "\u0663", "7.", "-.5", "--1", "1.2.3",
+      "9007199254740993", "0.1", "123456.789012345")
+
+    private def pick(a: Array[String], x: Long): String =
+      a((u01(x) * a.length).toInt)
+
+    private def fragments(seed: Long, a: Array[String], n: Int): String = {
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i < n) { sb.append(pick(a, mix(seed + i))); i += 1 }
+      sb.toString
+    }
+
+    def html(c: Long): String = {
+      val body = fragments(mix(c ^ 11L), HtmlFrags, 4 + (u01(mix(c)) * 40).toInt)
+      if (u01(mix(c ^ 12L)) < 0.5) body else "<html>" + body
+    }
+
+    private def jsonStr(c: Long): String =
+      "\"" + fragments(mix(c ^ 21L), JsonStrFrags, (u01(mix(c ^ 22L)) * 6).toInt) + "\""
+
+    def json(c: Long): String = {
+      val n = 1 + (u01(mix(c ^ 23L)) * 5).toInt
+      val fields = (0 until n).map { i =>
+        val k = pick(JsonKeys, mix(c ^ (30L + i)))
+        val v = (u01(mix(c ^ (40L + i))) * 6).toInt match {
+          case 0 => jsonStr(mix(c ^ (50L + i)))
+          case 1 => s"[${jsonStr(mix(c ^ (60L + i)))}, 1, true, null]"
+          case 2 => s"""{"text": ${jsonStr(mix(c ^ (70L + i)))}}"""
+          case 3 => "-1.5e3"
+          case 4 => "false"
+          case _ => jsonStr(mix(c ^ (80L + i)))
+        }
+        s""""$k"${if (i % 2 == 0) ": " else ":"}$v"""
+      }
+      val doc = fields.mkString("{", ", ", "}")
+      (u01(mix(c ^ 24L)) * 8).toInt match {
+        case 0 => doc.dropRight(1 + (u01(mix(c ^ 25L)) * 6).toInt)
+        case 1 => " \n" + doc + " \t"
+        case 2 => doc + " x"
+        case _ => doc
+      }
+    }
+
+    def pdf(c: Long): String = {
+      val n = 1 + (u01(mix(c ^ 31L)) * 8).toInt
+      val lines = (0 until n).map { i =>
+        val f = (0 until 4).map(k => pick(PdfNums, mix(c ^ (100L + 4 * i + k))))
+        val t = fragments(mix(c ^ (200L + i)), HtmlFrags, (u01(mix(c ^ (300L + i))) * 4).toInt)
+        f.mkString(",") + "," + t + (if (i % 3 == 0) ",x,y" else "")
+      }
+      val head = if (u01(mix(c ^ 32L)) < 0.7) "%PDF-1.4\n" else ""
+      head + lines.mkString(if (u01(mix(c ^ 33L)) < 0.2) "\r\n" else "\n")
+    }
+
+    def plain(c: Long): String =
+      fragments(mix(c ^ 41L), HtmlFrags.filterNot(_.contains('<')), 1 + (u01(mix(c)) * 20).toInt)
+
+    lazy val payloads: IndexedSeq[String] = {
+      import graft.data.TranscriptGen
+      val fixed = IndexedSeq(null, "", " ", "  \n\t ", "\u3000\u00A0",
+        "\u3000", "\t\t", "&#0;", "&#x1F600;", "&bogus;", "<P>UPPER</P>",
+        "<p>\ttab\u3000ideo\u3000</p>",
+        "%PDF-1.4\n-0.0,1e2,0x1p3,+5,t1\n.5,1.,NaN,-0,t2\n72,72,1,1,\u3000")
+      val gen = (0L until 1500L).flatMap { c =>
+        Seq(TranscriptGen.payloadFor(c), TranscriptGen.htmlPayload(c),
+          TranscriptGen.malformedHtmlPayload(c), TranscriptGen.pdfPayload(c),
+          TranscriptGen.jsonPayload(c), TranscriptGen.truncatedJsonPayload(c),
+          TranscriptGen.plainPayload(c))
+      }
+      val fuzz = (0L until 2500L).flatMap(c =>
+        Seq(html(c), json(c), pdf(c), plain(c)))
+      fixed ++ gen ++ fuzz
+    }
+  }
+
+  /** Field-by-field sha256 writer: strings as length-prefixed UTF-8,
+    * doubles as raw bits, so every byte of every field is pinned.
+    */
+  private final class Pin {
+    private val md = java.security.MessageDigest.getInstance("SHA-256")
+    def int(i: Int): Unit = md.update(java.nio.ByteBuffer.allocate(4).putInt(i).array())
+    def dbl(d: Double): Unit = md.update(java.nio.ByteBuffer.allocate(8)
+      .putLong(java.lang.Double.doubleToRawLongBits(d)).array())
+    def bytes(b: Array[Byte]): Unit = { int(b.length); md.update(b) }
+    def str(s: String): Unit = bytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def hex: String = md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  private def pinResult(p: Pin, r: Extractor.Result): Unit = {
+    p.str(r.kind); p.str(r.text)
+    p.int(r.spans.length)
+    r.spans.foreach { s => p.int(s.start); p.int(s.end); p.str(s.kind) }
+    p.int(r.blocks.length)
+    r.blocks.foreach { b =>
+      p.int(b.span.start); p.int(b.span.end); p.str(b.span.kind)
+      p.str(b.btype); p.dbl(b.score); p.str(b.text)
+    }
+    p.int(if (r.ok) 1 else 0)
+  }
+
+  private def pinRow(p: Pin, r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+    p.bytes(r.getUTF8String(0).getBytes); p.bytes(r.getUTF8String(1).getBytes)
+    val spans = r.getArray(2)
+    p.int(spans.numElements())
+    (0 until spans.numElements()).foreach { i =>
+      val s = spans.getStruct(i, 3)
+      p.int(s.getInt(0)); p.int(s.getInt(1)); p.bytes(s.getUTF8String(2).getBytes)
+    }
+    val blocks = r.getArray(3)
+    p.int(blocks.numElements())
+    (0 until blocks.numElements()).foreach { i =>
+      val b = blocks.getStruct(i, 4)
+      val s = b.getStruct(0, 3)
+      p.int(s.getInt(0)); p.int(s.getInt(1)); p.bytes(s.getUTF8String(2).getBytes)
+      p.bytes(b.getUTF8String(1).getBytes); p.dbl(b.getDouble(2))
+      p.bytes(b.getUTF8String(3).getBytes)
+    }
+    p.int(if (r.getBoolean(4)) 1 else 0)
+  }
+
+  // sha256 over (kind, text, spans, blocks incl. score, ok) of every
+  // payload under every variant. An intended output change re-pins it
+  // (and says so); an optimization must leave it alone.
+  private val KernelDigest =
+    "2bc5c5c67f1ad596bc26b3766848f62c36214a30a93c8bf40a96eb0b9a98bff1"
+
+  test("output pin: kernel, bridge row and its copy() hash to the pinned digest") {
+    import graft.expr.ExtractTurnKernel
+    import org.apache.spark.unsafe.types.UTF8String
+    val kernel, bridge, copied = new Pin
+    for (v <- ExtractParams.Variants.indices; raw <- PinCorpus.payloads) {
+      // a Spark string is UTF-8: a lone surrogate reaches the bridge as
+      // '?', so the kernel is fed the same round-tripped payload
+      val u = if (raw == null) null else UTF8String.fromString(raw)
+      val t = if (u == null) null else u.toString
+      pinResult(kernel, Extractor.extract(t, ExtractParams.forVariant(v)))
+      pinRow(bridge, ExtractTurnKernel.eval(u, v))
+      pinRow(copied, ExtractTurnKernel.eval(u, v).copy())
+    }
+    val (k, b, c) = (kernel.hex, bridge.hex, copied.hex)
+    assert(k == KernelDigest, s"kernel digest moved: $k")
+    assert(b == KernelDigest, s"bridge row digest moved: $b")
+    assert(c == KernelDigest, s"bridge row copy() digest moved: $c")
+  }
 }
