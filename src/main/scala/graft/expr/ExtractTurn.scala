@@ -1,11 +1,12 @@
 package graft.expr
 
 import graft.kernel.Extractor
+import graft.model.{Block, Span}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BaseGenericInternalRow, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,6 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference's compiled fast path (db_postprocess_fast/__init__.py:7-22,
   * C++ boxes_from_bitmap) recast as a codegen-reachable JVM kernel
   * instead of JNI.
+  *
+  * The result row does only the work its reader asks for: span and
+  * block rows hold their fields unboxed, and `blocks` (whose text
+  * repeats `text`, block by block) is built and UTF-8 encoded only when
+  * the field is first read. `extract()`, its variants, streaming and the
+  * distributed rank never read it; `extractWithBlocks` and SQL
+  * `extract_turn(t).blocks` do. `copy()` builds it.
   */
 object ExtractTurnKernel {
 
@@ -36,13 +44,26 @@ object ExtractTurnKernel {
     StructField("blocks", ArrayType(blockType, containsNull = false), nullable = false),
     StructField("ok", BooleanType, nullable = false)))
 
-  // kind/btype values come from a tiny closed set — intern the UTF8String
-  // constants instead of re-encoding per row (hot path)
-  private val interned: Map[String, UTF8String] =
-    Seq("html", "pdf", "json", "plain", "empty", "main", "title", "code",
-      "boiler").map(s => s -> UTF8String.fromString(s)).toMap
-  private def u8(s: String): UTF8String =
-    interned.getOrElse(s, UTF8String.fromString(s))
+  /** Block arrays built (one per row whose `blocks` is read): the count
+    * behind "blocks are built only when read" (a LongAdder, local mode
+    * only, like TextExprKernels' counters).
+    */
+  val blockBuilds = new java.util.concurrent.atomic.LongAdder
+
+  // kind/btype values come from a tiny closed set of string literals —
+  // hand out interned UTF8String constants instead of re-encoding per row
+  private val Names: Array[String] =
+    Array("main", "html", "pdf", "json", "plain", "empty", "title", "code", "boiler")
+  private val NamesU8: Array[UTF8String] = Names.map(UTF8String.fromString)
+  private def u8(s: String): UTF8String = {
+    var i = 0
+    while (i < Names.length) {
+      if (Names(i) eq s) return NamesU8(i)
+      i += 1
+    }
+    val k = Names.indexOf(s)
+    if (k >= 0) NamesU8(k) else UTF8String.fromString(s)
+  }
 
   def eval(payload: UTF8String): InternalRow = eval(payload, 0)
 
@@ -50,22 +71,76 @@ object ExtractTurnKernel {
     val r = Extractor.extract(
       if (payload == null) null else payload.toString,
       graft.kernel.ExtractParams.forVariant(variant))
-    val spans = new GenericArrayData(r.spans.map { s =>
-      InternalRow(s.start, s.end, u8(s.kind))
-    }.asInstanceOf[Array[Any]])
-    val blocks = new GenericArrayData(r.blocks.map { b =>
-      InternalRow(
-        InternalRow(b.span.start, b.span.end, u8(b.span.kind)),
-        u8(b.btype),
-        b.score,
+    val spans = new Array[Any](r.spans.length)
+    var i = 0
+    while (i < spans.length) { spans(i) = spanRow(r.spans(i)); i += 1 }
+    new TurnRow(u8(r.kind), UTF8String.fromString(r.text),
+      new GenericArrayData(spans), r.blocks, r.ok)
+  }
+
+  private def spanRow(s: Span): SpanRow = new SpanRow(s.start, s.end, u8(s.kind))
+
+  private def blockArray(bs: Array[Block]): ArrayData = {
+    blockBuilds.increment()
+    val rows = new Array[Any](bs.length)
+    var i = 0
+    while (i < rows.length) {
+      val b = bs(i)
+      rows(i) = new BlockRow(spanRow(b.span), u8(b.btype), b.score,
         UTF8String.fromString(b.text))
-    }.asInstanceOf[Array[Any]])
-    InternalRow(
-      u8(r.kind),
-      UTF8String.fromString(r.text),
-      spans,
-      blocks,
-      r.ok)
+      i += 1
+    }
+    new GenericArrayData(rows)
+  }
+
+  /** Read-only row with no null fields; `genericGet` serves the generic
+    * getters, the typed ones are overridden unboxed.
+    */
+  private abstract class FixedRow extends BaseGenericInternalRow {
+    override def isNullAt(i: Int): Boolean = false
+    override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
+    override def update(i: Int, value: Any): Unit = throw new UnsupportedOperationException
+  }
+
+  /** (start, end, kind) */
+  private final class SpanRow(start: Int, end: Int, kind: UTF8String) extends FixedRow {
+    override def numFields: Int = 3
+    override protected def genericGet(i: Int): Any =
+      if (i == 0) start else if (i == 1) end else kind
+    override def getInt(i: Int): Int = if (i == 0) start else end
+    override def getUTF8String(i: Int): UTF8String = kind
+  }
+
+  /** (span, btype, score, text) */
+  private final class BlockRow(span: SpanRow, btype: UTF8String, score: Double,
+      text: UTF8String) extends FixedRow {
+    override def numFields: Int = 4
+    override protected def genericGet(i: Int): Any =
+      if (i == 0) span else if (i == 1) btype else if (i == 2) score else text
+    override def getStruct(i: Int, numFields: Int): InternalRow = span
+    override def getUTF8String(i: Int): UTF8String = if (i == 1) btype else text
+    override def getDouble(i: Int): Double = score
+  }
+
+  /** (kind, text, spans, blocks, ok), `blocks` built on first read. */
+  private final class TurnRow(kind: UTF8String, text: UTF8String, spans: ArrayData,
+      src: Array[Block], ok: Boolean) extends FixedRow {
+    private var blocks: ArrayData = _
+    private def blocksData: ArrayData = {
+      if (blocks == null) blocks = blockArray(src)
+      blocks
+    }
+    override def numFields: Int = 5
+    override protected def genericGet(i: Int): Any = i match {
+      case 0 => kind
+      case 1 => text
+      case 2 => spans
+      case 3 => blocksData
+      case _ => ok
+    }
+    override def getUTF8String(i: Int): UTF8String = if (i == 0) kind else text
+    override def getArray(i: Int): ArrayData = if (i == 2) spans else blocksData
+    override def getBoolean(i: Int): Boolean = ok
   }
 }
 

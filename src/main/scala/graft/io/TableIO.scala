@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   *  2. a wave's data is written with dynamic partition overwrite (a
   *     re-run of a half-written bucket replaces it, never duplicates),
   *  3. the bucket's `_manifest.json` (row count, conv count, content
-  *     digest, wall time, attempt) is written ONLY AFTER the bucket data
-  *     commits — manifest-commit-last,
+  *     digest, its row-weighted share of the wave's wall time, attempt)
+  *     is written ONLY AFTER the bucket data commits —
+  *     manifest-commit-last,
   *  4. resume = skip every bucket that already has a valid manifest
   *     (the anti-join on completed work).
   */
@@ -131,8 +132,10 @@ object TableIO {
         .collect()
         .map(r => (r.getInt(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
         .toMap
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      wave.foreach { b =>
+      val waveMs = (System.nanoTime() - t0) / 1000000
+      val rowsOf = wave.map(b => stats.get(b).fold(0L)(_._1))
+      val shares = shareByRows(waveMs, rowsOf)
+      wave.zip(shares).foreach { case (b, wallMs) =>
         val (rows, convs, digest) = stats.getOrElse(b, (0L, 0L, 0L))
         val attempt = readManifest(outDir, b).map(_.attempt + 1).getOrElse(1)
         val m = Manifest(b, rows, convs, digest, wallMs, attempt)
@@ -141,6 +144,20 @@ object TableIO {
       }
     }
     written.toSeq
+  }
+
+  /** A wave's wall time shared out across its buckets by row count
+    * (evenly when the wave wrote no rows), so a bucket's turnsPerSec is
+    * the wave's rate. Cumulative rounding keeps the shares summing to
+    * `waveMs` exactly.
+    */
+  private[io] def shareByRows(waveMs: Long, rows: Seq[Long]): Seq[Long] = {
+    val total = rows.sum
+    val weights = if (total > 0) rows else rows.map(_ => 1L)
+    val sum = weights.sum
+    val cum = weights.scanLeft(0L)(_ + _).map(c =>
+      math.round(waveMs.toDouble * c / sum))
+    cum.zip(cum.tail).map { case (a, b) => b - a }
   }
 
   /** Read back a manifested table (data files only; manifests are

@@ -102,7 +102,12 @@ object BlockSegmenter {
     else base
   }
 
-  def scores(nodes: Array[DomNode]): Array[Double] = nodes.map(score)
+  def scores(nodes: Array[DomNode]): Array[Double] = {
+    val sc = new Array[Double](nodes.length)
+    var i = 0
+    while (i < nodes.length) { sc(i) = score(nodes(i)); i += 1 }
+    sc
+  }
 
   /** Classify a block from its member nodes — the ClsPostProcess argmax
     * analogue (pytocr/postprocess/cls_postprocess.py:4-20). Priority is
@@ -171,22 +176,26 @@ object BlockSegmenter {
         var hi = j
         while (lo - 1 >= frontier && mayGrow(lo - 1)) lo -= 1
         while (hi + 1 < n && mayGrow(hi + 1)) hi += 1
-        // slice-free stats + text build over [lo, hi] (hot path: no
-        // intermediate arrays, single StringBuilder)
+        // slice-free stats over [lo, hi], then one presized builder that
+        // each node's text is normalized straight into
         var sum = 0.0
         var allHeading = true
         var allCode = true
+        var chars = hi - lo
         k = lo
-        val sb = new java.lang.StringBuilder
         while (k <= hi) {
           sum += sc(k)
           if (!nodes(k).heading) allHeading = false
           if (!nodes(k).code) allCode = false
-          val t = TextDecoder.normalize(nodes(k).text)
-          if (t.nonEmpty) {
-            if (sb.length > 0) sb.append('\n')
-            sb.append(t)
-          }
+          chars += nodes(k).text.length
+          k += 1
+        }
+        val sb = new java.lang.StringBuilder(chars)
+        k = lo
+        while (k <= hi) {
+          val t = nodes(k).text
+          TextDecoder.appendNormalized(sb, t, 0, t.length,
+            if (sb.length > 0) '\n' else 0)
           k += 1
         }
         val mean = sum / (hi - lo + 1)  // box_score analogue

@@ -134,10 +134,37 @@ object Extractor {
         else Array(Block(Span(0, text.length, "main"), "main", 1.0, norm))
     }
     val bs = if (blocks == null) Array.empty[Block] else blocks
-    Result(kind,
-      TextDecoder.joinBlocks(bs.map(_.text).toSeq),
-      bs.map(_.span),
-      bs,
-      ok = blocks != null)
+    val spans = new Array[Span](bs.length)
+    var i = 0
+    while (i < bs.length) { spans(i) = bs(i).span; i += 1 }
+    Result(kind, joinText(bs), spans, bs, ok = blocks != null)
+  }
+
+  /** Block texts in reading order joined by single newlines, empties
+    * dropped — the concat_ws("\n", ...) reassembly step. A lone block's
+    * text is returned as is; more are joined in one presized builder.
+    */
+  def joinText(bs: Array[Block]): String = {
+    var parts = 0
+    var chars = 0
+    var only: String = ""
+    var i = 0
+    while (i < bs.length) {
+      val t = bs(i).text
+      if (t != null && t.nonEmpty) { parts += 1; chars += t.length; only = t }
+      i += 1
+    }
+    if (parts <= 1) return only
+    val sb = new java.lang.StringBuilder(chars + parts - 1)
+    i = 0
+    while (i < bs.length) {
+      val t = bs(i).text
+      if (t != null && t.nonEmpty) {
+        if (sb.length > 0) sb.append('\n')
+        sb.append(t)
+      }
+      i += 1
+    }
+    sb.toString
   }
 }

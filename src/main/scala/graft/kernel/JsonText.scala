@@ -19,57 +19,98 @@ import scala.collection.mutable.ArrayBuffer
   */
 object JsonText {
 
-  private val TextKeys = Set("text", "content", "stdout", "message")
+  private val TextKeys = Array("text", "content", "stdout", "message")
 
-  def extract(payload: String): Array[Block] = {
-    if (payload == null) return null
-    val s = payload
-    val n = s.length
-    val out = new ArrayBuffer[Block](4)
-    var pos = 0
-    var ok = true
+  def extract(payload: String): Array[Block] =
+    if (payload == null) null else new Scanner(payload).run()
 
-    def err(): Unit = { ok = false; pos = n }
+  /** One document's scan. A string literal is scanned in place: its raw
+    * content offsets land in (litStart, litEnd) and it is decoded only
+    * when its text is kept (or, for a key, when it has escapes).
+    */
+  private final class Scanner(s: String) {
+    private val n = s.length
+    private val out = new ArrayBuffer[Block](4)
+    private var pos = 0
+    private var ok = true
+    private var litStart = 0
+    private var litEnd = 0
+    private var litEscaped = false
 
-    def skipWs(): Unit =
-      while (pos < n && Character.isWhitespace(s.charAt(pos))) pos += 1
-
-    /** Parse a string literal at pos (must be '"'); returns decoded value
-      * plus raw content offsets (inside the quotes).
-      */
-    def parseString(): (String, Int, Int) = {
-      if (pos >= n || s.charAt(pos) != '"') { err(); return ("", pos, pos) }
-      pos += 1
-      val start = pos
-      val sb = new java.lang.StringBuilder
-      while (pos < n && s.charAt(pos) != '"') {
-        val c = s.charAt(pos)
-        if (c == '\\' && pos + 1 < n) {
-          val e = s.charAt(pos + 1)
-          e match {
-            case '"'  => sb.append('"');  pos += 2
-            case '\\' => sb.append('\\'); pos += 2
-            case '/'  => sb.append('/');  pos += 2
-            case 'n'  => sb.append('\n'); pos += 2
-            case 't'  => sb.append('\t'); pos += 2
-            case 'r'  => sb.append('\r'); pos += 2
-            case 'b'  => sb.append('\b'); pos += 2
-            case 'f'  => sb.append('\f'); pos += 2
-            case 'u' if pos + 5 < n =>
-              try {
-                sb.append(Integer.parseInt(s.substring(pos + 2, pos + 6), 16).toChar)
-                pos += 6
-              } catch { case _: NumberFormatException => err() }
-            case _ => err()
-          }
-        } else { sb.append(c); pos += 1 }
-      }
-      val end = pos
-      if (pos >= n) { err(); ("", start, start) }
-      else { pos += 1; (sb.toString, start, end) }
+    def run(): Array[Block] = {
+      skipWs()
+      parseValue(false)
+      skipWs()
+      if (!ok || pos != n) null else out.toArray
     }
 
-    def parseValue(key: String): Unit = {
+    private def err(): Unit = { ok = false; pos = n }
+
+    private def skipWs(): Unit =
+      while (pos < n && Character.isWhitespace(s.charAt(pos))) pos += 1
+
+    /** Scan the string literal at pos (must be '"'), validating escapes:
+      * \" \\ \/ \n \t \r \b \f and \uXXXX as `Integer.parseInt(_, 16)`
+      * reads four chars.
+      */
+    private def scanString(): Unit = {
+      if (pos >= n || s.charAt(pos) != '"') { err(); return }
+      pos += 1
+      litStart = pos
+      litEscaped = false
+      while (pos < n && s.charAt(pos) != '"') {
+        if (s.charAt(pos) == '\\' && pos + 1 < n) {
+          litEscaped = true
+          s.charAt(pos + 1) match {
+            case '"' | '\\' | '/' | 'n' | 't' | 'r' | 'b' | 'f' => pos += 2
+            case 'u' if pos + 5 < n =>
+              if (NumParse.parseInt(s, pos + 2, pos + 6, 16) == NumParse.NoInt) err()
+              else pos += 6
+            case _ => err()
+          }
+        } else pos += 1
+      }
+      litEnd = pos
+      if (pos >= n) err() else pos += 1
+    }
+
+    /** Decoded value of the last scanned literal (escapes validated). */
+    private def literal(): String = {
+      if (!litEscaped) return s.substring(litStart, litEnd)
+      val sb = new java.lang.StringBuilder(litEnd - litStart)
+      var i = litStart
+      while (i < litEnd) {
+        val c = s.charAt(i)
+        if (c == '\\' && i + 1 < litEnd) {
+          s.charAt(i + 1) match {
+            case 'n' => sb.append('\n')
+            case 't' => sb.append('\t')
+            case 'r' => sb.append('\r')
+            case 'b' => sb.append('\b')
+            case 'f' => sb.append('\f')
+            case 'u' =>
+              sb.append(NumParse.parseInt(s, i + 2, i + 6, 16).toChar)
+              i += 4
+            case e => sb.append(e)
+          }
+          i += 2
+        } else { sb.append(c); i += 1 }
+      }
+      sb.toString
+    }
+
+    private def isTextKey: Boolean =
+      if (litEscaped) TextKeys.contains(literal())
+      else {
+        val len = litEnd - litStart
+        var i = 0
+        while (i < TextKeys.length &&
+            !(TextKeys(i).length == len && s.startsWith(TextKeys(i), litStart))) i += 1
+        i < TextKeys.length
+      }
+
+    /** Parse one value; `textKey` when its field key is a text key. */
+    private def parseValue(textKey: Boolean): Unit = {
       skipWs()
       if (pos >= n) { err(); return }
       s.charAt(pos) match {
@@ -79,7 +120,8 @@ object JsonText {
           var more = true
           while (more && ok) {
             skipWs()
-            val (k, _, _) = parseString()
+            scanString()
+            val k = ok && isTextKey
             skipWs()
             if (pos < n && s.charAt(pos) == ':') pos += 1 else err()
             parseValue(k)
@@ -93,18 +135,20 @@ object JsonText {
           if (pos < n && s.charAt(pos) == ']') { pos += 1; return }
           var more = true
           while (more && ok) {
-            parseValue(key)  // array items inherit the field key
+            parseValue(textKey)  // array items inherit the field key
             skipWs()
             if (pos < n && s.charAt(pos) == ',') pos += 1
             else { more = false
               if (pos < n && s.charAt(pos) == ']') pos += 1 else err() }
           }
         case '"' =>
-          val (v, a, b) = parseString()
-          if (ok && TextKeys.contains(key)) {
-            val norm = TextDecoder.normalize(v)
+          scanString()
+          if (ok && textKey) {
+            val norm =
+              if (litEscaped) TextDecoder.normalize(literal())
+              else TextDecoder.normalize(s, litStart, litEnd)
             if (norm.nonEmpty)
-              out += Block(Span(a, b, "main"), "main", 1.0, norm)
+              out += Block(Span(litStart, litEnd, "main"), "main", 1.0, norm)
           }
         case 't' => if (s.startsWith("true", pos)) pos += 4 else err()
         case 'f' => if (s.startsWith("false", pos)) pos += 5 else err()
@@ -112,14 +156,12 @@ object JsonText {
         case _ =>
           // number
           val st = pos
-          while (pos < n && "+-0123456789.eE".indexOf(s.charAt(pos)) >= 0) pos += 1
+          while (pos < n && isNumChar(s.charAt(pos))) pos += 1
           if (pos == st) err()
       }
     }
 
-    skipWs()
-    parseValue("")
-    skipWs()
-    if (!ok || pos != n) null else out.toArray
+    private def isNumChar(c: Char): Boolean =
+      c >= '0' && c <= '9' || c == '.' || c == '-' || c == '+' || c == 'e' || c == 'E'
   }
 }

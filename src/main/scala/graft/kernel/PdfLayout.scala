@@ -38,6 +38,7 @@ object PdfLayout {
   def parseRuns(payload: String): Array[Run] = {
     if (payload == null) return null
     val out = new ArrayBuffer[Run](16)
+    val commas = new Array[Int](4)
     var lineStart = 0
     val n = payload.length
     while (lineStart < n) {
@@ -45,7 +46,6 @@ object PdfLayout {
       if (lineEnd < 0) lineEnd = n
       // split first 4 commas only; text may contain commas
       var c = lineStart
-      val commas = new Array[Int](4)
       var found = 0
       while (c < lineEnd && found < 4) {
         if (payload.charAt(c) == ',') { commas(found) = c; found += 1 }
@@ -53,10 +53,10 @@ object PdfLayout {
       }
       if (found == 4) {
         try {
-          val x = payload.substring(lineStart, commas(0)).trim.toDouble
-          val y = payload.substring(commas(0) + 1, commas(1)).trim.toDouble
-          val w = payload.substring(commas(1) + 1, commas(2)).trim.toDouble
-          val h = payload.substring(commas(2) + 1, commas(3)).trim.toDouble
+          val x = NumParse.parseDouble(payload, lineStart, commas(0))
+          val y = NumParse.parseDouble(payload, commas(0) + 1, commas(1))
+          val w = NumParse.parseDouble(payload, commas(1) + 1, commas(2))
+          val h = NumParse.parseDouble(payload, commas(2) + 1, commas(3))
           val ts = commas(3) + 1
           val text = payload.substring(ts, lineEnd)
           if (text.nonEmpty) out += Run(x, y, w, h, text, ts, lineEnd)
@@ -118,16 +118,28 @@ object PdfLayout {
       val out = new ArrayBuffer[Block]
       var cur = new ArrayBuffer[ArrayBuffer[Run]]
       def flush(): Unit = if (cur.nonEmpty) {
-        val allRuns = cur.flatten
-        val text = cur.map(line =>
-            line.map(r => TextDecoder.normalize(r.text))
-              .filter(_.nonEmpty).mkString(" "))
-          .filter(_.nonEmpty).mkString("\n")
-        if (text.nonEmpty) {
-          val span = Span(allRuns.map(_.srcStart).min,
-            allRuns.map(_.srcEnd).max, "main")
-          out += Block(span, "main", 1.0, text)
+        // runs joined by ' ' within a line, non-empty lines by '\n',
+        // each run normalized straight into the block's builder
+        val sb = new java.lang.StringBuilder
+        var lo = Int.MaxValue
+        var hi = Int.MinValue
+        var li = 0
+        while (li < cur.length) {
+          val line = cur(li)
+          var lineHasText = false
+          var ri = 0
+          while (ri < line.length) {
+            val r = line(ri)
+            lo = math.min(lo, r.srcStart)
+            hi = math.max(hi, r.srcEnd)
+            val sep = if (lineHasText) ' ' else if (sb.length > 0) '\n' else 0.toChar
+            if (TextDecoder.appendNormalized(sb, r.text, 0, r.text.length, sep))
+              lineHasText = true
+            ri += 1
+          }
+          li += 1
         }
+        if (sb.length > 0) out += Block(Span(lo, hi, "main"), "main", 1.0, sb.toString)
         cur = new ArrayBuffer[ArrayBuffer[Run]]
       }
       for (line <- lines) {

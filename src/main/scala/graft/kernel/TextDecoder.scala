@@ -23,59 +23,90 @@ object TextDecoder {
     *    otherwise -> single ' ')
     * 4. trim leading/trailing whitespace
     */
-  /** True when normalize(s) == s — single scan, no allocation. Input is
-    * already normal iff: no leading/trailing whitespace, no two adjacent
-    * whitespace chars, every whitespace char is ' ' or '\n', and no
-    * control chars.
+  def normalize(s: String): String = {
+    if (s == null) return null
+    normalize(s, 0, s.length)
+  }
+
+  /** normalize(s.substring(from, until)); copies only what it must. */
+  def normalize(s: String, from: Int, until: Int): String =
+    if (isNormalized(s, from, until)) {
+      if (from == 0 && until == s.length) s else s.substring(from, until)
+    } else {
+      val sb = new java.lang.StringBuilder(until - from)
+      appendSlow(sb, s, from, until, 0)
+      sb.toString
+    }
+
+  /** Append normalize(s[from, until)) to `sb`, preceded by `sep` (when
+    * `sep` is not 0) if the normalized text is non-empty — the
+    * normalize-then-join step of the block builders without the
+    * intermediate string. Returns whether anything was appended.
     */
-  private def isNormalized(s: String): Boolean = {
-    val n = s.length
-    if (n == 0) return true
-    if (Character.isWhitespace(s.charAt(0)) ||
-      Character.isWhitespace(s.charAt(n - 1))) return false
-    var i = 0
+  def appendNormalized(sb: java.lang.StringBuilder, s: String,
+      from: Int, until: Int, sep: Char): Boolean =
+    if (isNormalized(s, from, until)) {
+      if (until == from) false
+      else {
+        if (sep != 0) sb.append(sep)
+        sb.append(s, from, until)
+        true
+      }
+    } else appendSlow(sb, s, from, until, sep)
+
+  /** True when s[from, until) is already normal — single scan, no
+    * allocation: no leading/trailing whitespace, no two adjacent
+    * whitespace chars, every whitespace char is ' ' or '\n', and no
+    * control chars. Printable ASCII, the bulk of every payload, takes
+    * one range test per char.
+    */
+  private def isNormalized(s: String, from: Int, until: Int): Boolean = {
+    if (until == from) return true
+    if (Character.isWhitespace(s.charAt(from)) ||
+      Character.isWhitespace(s.charAt(until - 1))) return false
+    var i = from
     var prevWs = false
-    while (i < n) {
+    while (i < until) {
       val c = s.charAt(i)
-      if (c < 0x20 && c != '\n') return false
-      val ws = c == ' ' || c == '\n'
-      if (ws && prevWs) return false
-      if (Character.isWhitespace(c) && !ws) return false
-      prevWs = ws
+      if (c > ' ' && c < 0x80) prevWs = false
+      else {
+        if (c < 0x20 && c != '\n') return false
+        val ws = c == ' ' || c == '\n'
+        if (ws && prevWs) return false
+        if (!ws && Character.isWhitespace(c)) return false
+        prevWs = ws
+      }
       i += 1
     }
     true
   }
 
-  def normalize(s: String): String = {
-    if (s == null) return null
-    if (isNormalized(s)) return s // common case: zero-copy
-    val n = s.length
-    val sb = new java.lang.StringBuilder(n)
-    var i = 0
+  private def appendSlow(sb: java.lang.StringBuilder, s: String,
+      from: Int, until: Int, sep: Char): Boolean = {
+    var emitted = false
+    var i = from
     var pendingWs = false  // a whitespace run is open
     var pendingNl = false  // the open run contains a newline
-    while (i < n) {
+    while (i < until) {
       val c = s.charAt(i)
-      if (c < 0x20 && c != '\n' && c != '\t') {
+      if (c > ' ' && c < 0x80 || c >= 0x80 && !Character.isWhitespace(c)) {
+        if (emitted) {
+          if (pendingWs) sb.append(if (pendingNl) '\n' else ' ')
+        } else {
+          if (sep != 0) sb.append(sep)
+          emitted = true
+        }
+        pendingWs = false
+        pendingNl = false
+        sb.append(c)
+      } else if (c < 0x20 && c != '\n' && c != '\t') {
         // step 1: control char — removed, does not open a ws run
       } else if (Character.isWhitespace(c)) {
         pendingWs = true
         if (c == '\n' || c == '\r') pendingNl = true
-      } else {
-        if (pendingWs && sb.length > 0) sb.append(if (pendingNl) '\n' else ' ')
-        pendingWs = false
-        pendingNl = false
-        sb.append(c)
       }
       i += 1
     }
-    sb.toString
+    emitted
   }
-
-  /** Join block texts in reading order with single newlines, dropping
-    * empties — the concat_ws("\n", ...) reassembly step.
-    */
-  def joinBlocks(texts: Seq[String]): String =
-    texts.filter(t => t != null && t.nonEmpty).mkString("\n")
 }

@@ -14,7 +14,12 @@ import org.apache.spark.sql.functions._
   *     -> extract_turn(text)                    [narrow, map-side, codegen]
   *     -> project raw text away                 [shuffle carries results only]
   *     -> window rn over (conv_id | turn_idx, ts)  [the ONE shuffle]
-  *     -> (conv_id, turn_idx, rn, kind, text, spans, blocks)
+  *     -> (conv_id, turn_idx, rn, kind, text, spans, ok)
+  *        (extractWithBlocks: blocks in place of ok)
+  *
+  * The map stage is the kernel: extract_turn's row builds its `blocks`
+  * field only when read, so extract() and every path that projects
+  * (kind, text, spans, ok) never build or encode block rows.
   *
   * Scale notes (100 TB design):
   *  - extraction runs BEFORE the exchange, so the shuffle moves extracted
@@ -63,7 +68,8 @@ object ExtractPipeline {
     * (conv_id, turn_idx, rn, kind, text, spans) — the north-rule output
     * contract. `blocks` is deliberately NOT here: block text duplicates
     * the extracted text, and the exchange before the window would carry
-    * it all; block-level analytics use extractWithBlocks instead.
+    * it all; block-level analytics use extractWithBlocks instead. Since
+    * the field is never read here, the kernel bridge never builds it.
     */
   def extract(turns: DataFrame): DataFrame = extractVariant(turns, 0)
 

@@ -124,6 +124,37 @@ class GoldenEqualitySpec extends AnyFunSuite {
     }
   }
 
+  test("blocks are built only when read: extract() builds none, extractWithBlocks each once") {
+    import spark.implicits._
+    val turns = TranscriptGen.tiny(nConvs = 8, cap = 16)
+    // an RDD-backed frame, as a scan is: over a local Seq, Catalyst would
+    // evaluate (and copy) the whole struct on the driver
+    val df = spark.sparkContext.parallelize(turns, 4)
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val builds = graft.expr.ExtractTurnKernel.blockBuilds
+    builds.reset()
+    assert(ExtractPipeline.extract(df).collect().length == turns.size)
+    assert(builds.sum == 0, s"extract() built ${builds.sum} block arrays")
+
+    builds.reset()
+    val withBlocks = ExtractPipeline.extractWithBlocks(df)
+      .select("conv_id", "turn_idx", "blocks").collect()
+    assert(builds.sum == turns.size)
+    // the built blocks are the kernel's, field for field
+    val kernelBlocks = turns.groupBy(t => (t.conv_id, t.turn_idx)).map { case (k, ts) =>
+      k -> ts.map(t => Extractor.extract(t.text).blocks.toSeq.map(b =>
+        (b.span.start, b.span.end, b.span.kind, b.btype, b.score, b.text))).toSet
+    }
+    withBlocks.foreach { r =>
+      val got = r.getSeq[org.apache.spark.sql.Row](2).map { b =>
+        val sp = b.getStruct(0)
+        (sp.getInt(0), sp.getInt(1), sp.getString(2), b.getString(1), b.getDouble(2),
+          b.getString(3))
+      }
+      assert(kernelBlocks((r.getString(0), r.getInt(1))).contains(got))
+    }
+  }
+
   test("driver contract: SparkEntry.entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

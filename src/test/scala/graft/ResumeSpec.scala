@@ -123,4 +123,31 @@ class ResumeSpec extends AnyFunSuite {
     assert(stats.length == 4)
     assert(stats.map(_.getAs[Long]("rows")).sum == turns.count())
   }
+
+  test("partition stats: a wave's wall time is shared across its buckets by rows") {
+    val turns = turnsDf()
+    val dir = freshDir()
+    val t0 = System.nanoTime()
+    val written = TableIO.runCheckpointed(spark, turns, ExtractPipeline.extract,
+      dir, nBuckets = 4, waveSize = 2)
+    val elapsedMs = (System.nanoTime() - t0) / 1000000
+    // each bucket used to carry its whole wave's time: the sum came to
+    // waveSize x the run, and turnsPerSec read waveSize x too low
+    assert(written.map(_.wallMs).sum <= elapsedMs,
+      s"bucket wall times ${written.map(_.wallMs)} exceed the run's $elapsedMs ms")
+    val tps = TableIO.partitionStats(spark, dir, 4).collect()
+      .map(r => r.getAs[Int]("bucket") -> r.getAs[Double]("turnsPerSec")).toMap
+    written.grouped(2).foreach { wave =>
+      val waveMs = wave.map(_.wallMs).sum
+      val waveRows = wave.map(_.rows).sum
+      assert(waveMs > 0 && waveRows > 0)
+      val rate = waveRows / (waveMs / 1000.0)
+      wave.foreach { m =>
+        // shares are rounded to whole ms; everything else is exact
+        assert(math.abs(m.wallMs - waveMs.toDouble * m.rows / waveRows) <= 1.0, m)
+        assert(math.abs(tps(m.bucket) - rate) <= rate * 1.5 / m.wallMs,
+          s"bucket ${m.bucket}: ${tps(m.bucket)} vs the wave's $rate")
+      }
+    }
+  }
 }
