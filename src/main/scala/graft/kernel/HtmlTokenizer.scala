@@ -73,12 +73,16 @@ object HtmlTokenizer {
     if (c < 0x80) (if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
     else Character.toLowerCase(c)
 
-  /** Table slot of html[s, e)'s lowercased name, or -1 when unlisted. */
-  private def tagSlot(html: String, s: Int, e: Int): Int = {
+  @inline private def isNameChar(c: Char): Boolean =
+    if (c < 0x80) (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
+    else Character.isLetterOrDigit(c)
+
+  /** Table slot of html[s, e)'s lowercased name, whose String.hashCode is
+    * `h`, or -1 when unlisted.
+    */
+  private def tagSlot(html: String, s: Int, e: Int, h: Int): Int = {
     if (e == s) return -1
-    var h = 0
-    var k = s
-    while (k < e) { h = 31 * h + lower(html.charAt(k)); k += 1 }
+    var k = 0
     var i = h & Mask
     while (TagName(i) != null) {
       val cand = TagName(i)
@@ -123,16 +127,17 @@ object HtmlTokenizer {
   }
 
   /** Decode HTML character entities. Unknown entities pass through. */
-  def decodeEntities(s: String): String = decodeEntities(s, 0, s.length)
+  def decodeEntities(s: String): String =
+    decodeEntities(s, 0, s.length, s.indexOf('&'))
 
-  /** decodeEntities(s.substring(from, until)) without the substring when
-    * the region has no '&'.
+  /** decodeEntities(s.substring(from, until)), given `amp`, the first '&'
+    * at or after `from` (-1 when none): no copy beyond the substring when
+    * the region has none.
     */
-  def decodeEntities(s: String, from: Int, until: Int): String = {
-    var i = from
-    while (i < until && s.charAt(i) != '&') i += 1
-    if (i == until)
+  private def decodeEntities(s: String, from: Int, until: Int, amp: Int): String = {
+    if (amp < 0 || amp >= until)
       return if (from == 0 && until == s.length) s else s.substring(from, until)
+    var i = amp
     val sb = new java.lang.StringBuilder(until - from)
     sb.append(s, from, i)
     while (i < until) {
@@ -192,6 +197,7 @@ object HtmlTokenizer {
     var headDepth = 0    // nesting count of h1..h6
     var codeDepth = 0    // nesting count of pre/code
     var sawTag = false
+    var nextAmp = html.indexOf('&') // first '&' not before the current text
 
     def count(flags: Int, d: Int): Unit = {
       if ((flags & Link) != 0) linkDepth += d
@@ -227,7 +233,8 @@ object HtmlTokenizer {
       // skip pure-whitespace nodes before any copy — they carry no
       // content signal and are the majority of inter-tag gaps
       if (!hasText(html, start, end)) return
-      val decoded = decodeEntities(html, start, end)
+      if (nextAmp >= 0 && nextAmp < start) nextAmp = html.indexOf('&', start)
+      val decoded = decodeEntities(html, start, end, nextAmp)
       out += DomNode(
         tag = if (depth == 0) "" else stackTag(depth - 1),
         depth = depth,
@@ -267,8 +274,12 @@ object HtmlTokenizer {
           // tag name parsed in place — no substring over the attribute text
           val nameStart = i + (if (c1 == '/') 2 else 1)
           var te = nameStart
-          while (te < close && Character.isLetterOrDigit(html.charAt(te))) te += 1
-          val slot = tagSlot(html, nameStart, te)
+          var h = 0
+          while (te < close && isNameChar(html.charAt(te))) {
+            h = 31 * h + lower(html.charAt(te))
+            te += 1
+          }
+          val slot = tagSlot(html, nameStart, te, h)
           val tag = if (slot >= 0) TagName(slot) else lowerName(html, nameStart, te)
           val flags = if (slot >= 0) TagFlags(slot) else 0
           val selfClosing = close > nameStart && html.charAt(close - 1) == '/'

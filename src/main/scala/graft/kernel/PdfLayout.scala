@@ -45,11 +45,12 @@ object PdfLayout {
       var lineEnd = payload.indexOf('\n', lineStart)
       if (lineEnd < 0) lineEnd = n
       // split first 4 commas only; text may contain commas
-      var c = lineStart
+      var c = payload.indexOf(',', lineStart)
       var found = 0
-      while (c < lineEnd && found < 4) {
-        if (payload.charAt(c) == ',') { commas(found) = c; found += 1 }
-        c += 1
+      while (c >= 0 && c < lineEnd && found < 4) {
+        commas(found) = c
+        found += 1
+        if (found < 4) c = payload.indexOf(',', c + 1)
       }
       if (found == 4) {
         try {

@@ -89,7 +89,7 @@ object TextDecoder {
     var pendingNl = false  // the open run contains a newline
     while (i < until) {
       val c = s.charAt(i)
-      if (c > ' ' && c < 0x80 || c >= 0x80 && !Character.isWhitespace(c)) {
+      if (isContent(c)) {
         if (emitted) {
           if (pendingWs) sb.append(if (pendingNl) '\n' else ' ')
         } else {
@@ -98,15 +98,25 @@ object TextDecoder {
         }
         pendingWs = false
         pendingNl = false
-        sb.append(c)
-      } else if (c < 0x20 && c != '\n' && c != '\t') {
-        // step 1: control char — removed, does not open a ws run
-      } else if (Character.isWhitespace(c)) {
-        pendingWs = true
-        if (c == '\n' || c == '\r') pendingNl = true
+        // copy the whole run of content chars at once
+        var j = i + 1
+        while (j < until && isContent(s.charAt(j))) j += 1
+        sb.append(s, i, j)
+        i = j
+      } else {
+        if (c < 0x20 && c != '\n' && c != '\t') {
+          // step 1: control char — removed, does not open a ws run
+        } else {
+          pendingWs = true
+          if (c == '\n' || c == '\r') pendingNl = true
+        }
+        i += 1
       }
-      i += 1
     }
     emitted
   }
+
+  /** Neither whitespace nor a control char: kept as is. */
+  @inline private def isContent(c: Char): Boolean =
+    if (c < 0x80) c > ' ' else !Character.isWhitespace(c)
 }
