@@ -57,12 +57,8 @@ object ExtractTurnKernel {
   private val NamesU8: Array[UTF8String] = Names.map(UTF8String.fromString)
   private def u8(s: String): UTF8String = {
     var i = 0
-    while (i < Names.length) {
-      if (Names(i) eq s) return NamesU8(i)
-      i += 1
-    }
-    val k = Names.indexOf(s)
-    if (k >= 0) NamesU8(k) else UTF8String.fromString(s)
+    while (i < Names.length && Names(i) != s) i += 1
+    if (i < Names.length) NamesU8(i) else UTF8String.fromString(s)
   }
 
   def eval(payload: UTF8String): InternalRow = eval(payload, 0)

@@ -193,8 +193,7 @@ object BlockSegmenter {
         val sb = new java.lang.StringBuilder(chars)
         k = lo
         while (k <= hi) {
-          val t = nodes(k).text
-          TextDecoder.appendNormalized(sb, t, 0, t.length,
+          TextDecoder.appendNormalized(sb, nodes(k).text,
             if (sb.length > 0) '\n' else 0)
           k += 1
         }

@@ -151,7 +151,7 @@ object Extractor {
     var i = 0
     while (i < bs.length) {
       val t = bs(i).text
-      if (t != null && t.nonEmpty) { parts += 1; chars += t.length; only = t }
+      if (t.nonEmpty) { parts += 1; chars += t.length; only = t }
       i += 1
     }
     if (parts <= 1) return only
@@ -159,7 +159,7 @@ object Extractor {
     i = 0
     while (i < bs.length) {
       val t = bs(i).text
-      if (t != null && t.nonEmpty) {
+      if (t.nonEmpty) {
         if (sb.length > 0) sb.append('\n')
         sb.append(t)
       }

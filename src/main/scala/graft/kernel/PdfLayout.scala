@@ -134,7 +134,7 @@ object PdfLayout {
             lo = math.min(lo, r.srcStart)
             hi = math.max(hi, r.srcEnd)
             val sep = if (lineHasText) ' ' else if (sb.length > 0) '\n' else 0.toChar
-            if (TextDecoder.appendNormalized(sb, r.text, 0, r.text.length, sep))
+            if (TextDecoder.appendNormalized(sb, r.text, sep))
               lineHasText = true
             ri += 1
           }

@@ -38,21 +38,20 @@ object TextDecoder {
       sb.toString
     }
 
-  /** Append normalize(s[from, until)) to `sb`, preceded by `sep` (when
-    * `sep` is not 0) if the normalized text is non-empty — the
-    * normalize-then-join step of the block builders without the
-    * intermediate string. Returns whether anything was appended.
+  /** Append normalize(s) to `sb`, preceded by `sep` (when `sep` is not
+    * 0) if the normalized text is non-empty — the normalize-then-join
+    * step of the block builders without the intermediate string.
+    * Returns whether anything was appended.
     */
-  def appendNormalized(sb: java.lang.StringBuilder, s: String,
-      from: Int, until: Int, sep: Char): Boolean =
-    if (isNormalized(s, from, until)) {
-      if (until == from) false
+  def appendNormalized(sb: java.lang.StringBuilder, s: String, sep: Char): Boolean =
+    if (isNormalized(s, 0, s.length)) {
+      if (s.isEmpty) false
       else {
         if (sep != 0) sb.append(sep)
-        sb.append(s, from, until)
+        sb.append(s)
         true
       }
-    } else appendSlow(sb, s, from, until, sep)
+    } else appendSlow(sb, s, 0, s.length, sep)
 
   /** True when s[from, until) is already normal — single scan, no
     * allocation: no leading/trailing whitespace, no two adjacent
