@@ -20,6 +20,12 @@ object Functions {
   def extract_turn_variant(c: Column, variant: Int): Column =
     ColumnBridge.column(ExtractTurn(ColumnBridge.expression(c), variant))
 
+  /** conv_rank(conv_id): ExtractPipeline's exchange-free rank; correct
+    * only directly above a local sort on conv_id (see ConvRank).
+    */
+  private[graft] def conv_rank(c: Column): Column =
+    ColumnBridge.column(ConvRank(ColumnBridge.expression(c)))
+
   def minhash_sig(c: Column): Column =
     ColumnBridge.column(MinHashSig(ColumnBridge.expression(c)))
   def minhash_bands(c: Column): Column =

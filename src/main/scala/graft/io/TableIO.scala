@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Iceberg-layout table IO with per-partition lineage manifests +
@@ -13,15 +15,21 @@ import org.apache.spark.sql.functions._
   * `_manifest.json` per bucket. On a real cluster the writer swaps to an
   * Iceberg catalog (`writeTo(...).overwritePartitions()` gives snapshot
   * semantics); everything above this object is unchanged — that seam is
-  * the only thing that moves.
+  * the only thing that moves. The read side has the same seam:
+  * ParquetLayout proves from Parquet footers that each conversation sits
+  * in one row group, which lets extract() rank without an exchange; an
+  * Iceberg input sorted or bucketed on conv_id would state that layout in
+  * its own metadata (storage-partitioned join, SPARK-37375, is the
+  * on-cluster form).
   *
   * Protocol (at-least-once + idempotent overwrite = effectively exactly
   * once per bucket):
   *  1. work is cut into WAVES of buckets; each wave filters the input by
   *     bucket id (on a real Iceberg input partitioned by bucket(conv_id)
   *     this predicate is partition pruning, not a scan filter),
-  *  2. a wave's data is written with dynamic partition overwrite (a
-  *     re-run of a half-written bucket replaces it, never duplicates),
+  *  2. a wave's data is written with dynamic partition overwrite, set on
+  *     the write, not the session (a re-run of a half-written bucket
+  *     replaces it, never duplicates),
   *  3. the bucket's `_manifest.json` (row count, conv count, content
   *     digest, its row-weighted share of the wave's wall time, attempt)
   *     is written ONLY AFTER the bucket data commits —
@@ -101,7 +109,6 @@ object TableIO {
       waveSize: Int = 4,
       failAfterWaves: Option[Int] = None): Seq[Manifest] = {
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val done = completedBuckets(outDir, nBuckets)
     val todo = (0 until nBuckets).filterNot(done.contains)
     val waves = todo.grouped(waveSize).toSeq
@@ -115,10 +122,11 @@ object TableIO {
       val t0 = System.nanoTime()
       val bucketed = turns.withColumn("bucket", bucketCol(nBuckets))
         .filter(col("bucket").isin(wave: _*))
-      val out = transform(bucketed)
-        .withColumn("bucket", bucketCol(nBuckets))
+      val out = writers(transform(bucketed)
+        .withColumn("bucket", bucketCol(nBuckets)))
       out.write
         .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(outDir)
       // stats pass over the just-written data (re-read: counts what
@@ -144,6 +152,22 @@ object TableIO {
       }
     }
     written.toSeq
+  }
+
+  /** A wave whose plan has no exchange (extract() over a row-group-
+    * clustered Parquet input) would write from every scan split into
+    * every bucket of the wave: 16 splits wrote 3.4x the files of the
+    * exchange path, and the stats re-read paid for each. Such a wave is
+    * coalesced to one writer per core; a wave that shuffles keeps the
+    * partitions AQE gives it.
+    */
+  private def writers(out: DataFrame): DataFrame = {
+    val shuffles = out.queryExecution.executedPlan match {
+      // AQE wraps only plans that shuffle (or hold subqueries)
+      case _: AdaptiveSparkPlanExec => true
+      case p => p.exists(_.isInstanceOf[Exchange])
+    }
+    if (shuffles) out else out.coalesce(out.sparkSession.sparkContext.defaultParallelism)
   }
 
   /** A wave's wall time shared out across its buckets by row count

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.expr.Functions
-import graft.io.CacheScope
+import graft.io.{CacheScope, ParquetLayout}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   *
   *   transcripts (conv_id, turn_idx, role, text, tool, ts)
   *     -> extract_turn(text)                    [narrow, map-side, codegen]
-  *     -> project raw text away                 [shuffle carries results only]
-  *     -> window rn over (conv_id | turn_idx, ts)  [the ONE shuffle]
+  *     -> project raw text away                 [rank carries results only]
+  *     -> rn over (conv_id | turn_idx, ts)      [0 or 1 exchange, below]
   *     -> (conv_id, turn_idx, rn, kind, text, spans, ok)
   *        (extractWithBlocks: blocks in place of ok)
   *
@@ -21,42 +21,49 @@ import org.apache.spark.sql.functions._
   * field only when read, so extract() and every path that projects
   * (kind, text, spans, ok) never build or encode block rows.
   *
+  * The rank takes one of two physical paths, decided once per call from
+  * the input (ParquetLayout, footers only; no option):
+  *  - EXCHANGE-FREE when the input is Project/Filter over one Parquet scan
+  *    whose footers prove every conversation sits in one row group
+  *    (transcripts written conversation by conversation, or a table
+  *    sorted or bucketed on conv_id). A row group is read whole by one
+  *    task, so each scan partition holds whole conversations: a local
+  *    sort on (conv_id, turn_idx, ts) and a running count that restarts
+  *    at each conv_id (conv_rank) give row_number's ranks. 0 exchanges.
+  *  - HASH EXCHANGE + row_number window for everything else (local rows,
+  *    RDD-backed or cached frames, unions, repartitions, streams, files
+  *    without the stats). 1 exchange.
+  * Both give the same rows and schema (RankPathSpec).
+  *
   * Scale notes (100 TB design):
-  *  - extraction runs BEFORE the exchange, so the shuffle moves extracted
-  *    text + spans, never the raw payload (payloads dominate input bytes).
-  *  - the single exchange is the hash partition required by the ordering
-  *    window; no extra repartition() is issued (Catalyst would not reuse
-  *    a redundant one).
+  *  - extraction runs BEFORE the rank, so the sort (and the shuffle, on
+  *    the exchange path) moves extracted text + spans, never the raw
+  *    payload (payloads dominate input bytes).
+  *  - the exchange path's single exchange is the hash partition required
+  *    by the ordering window; no extra repartition() is issued (Catalyst
+  *    would not reuse a redundant one).
   *  - per-turn work is embarrassingly parallel; conversation skew only
-  *    affects the cheap window stage. Cross-turn assembly (convDocs) uses
-  *    a two-phase SALTED aggregation so the largest conversation never
+  *    affects the cheap rank. Cross-turn assembly (convDocs) uses a
+  *    two-phase SALTED aggregation so the largest conversation never
   *    lands on one reducer.
   *
-  * WINDOW-SKEW ROADMAP (design note for the 10^12-turn claim): the
-  * ordering window places one whole conversation's sort+rank on one
-  * task. That is fine while conversations are capped (the generator caps
-  * at 512; ScaleSpec proves the EXPENSIVE extraction stage still splits
-  * a 100k-turn conversation across input-split tasks because it runs
-  * before the exchange). For a pathological 10^8-turn conversation the
-  * rank itself must stop being a single-task sort. Two-step plan, in
-  * preference order:
-  *   1. turn_idx-derived rank: ties exist only WITHIN a turn_idx
-  *      (retries), so rn = (dense position of turn_idx) + (row_number
-  *      over the bounded (conv_id, turn_idx) window ordered by ts). The
-  *      per-turn_idx window is bounded by the retry count (tiny); the
-  *      dense position needs a per-conv prefix-sum over DISTINCT
-  *      turn_idx counts — still smaller than the raw window but not yet
-  *      bounded.
-  *   2. fully distributed rank: repartitionByRange(conv_id, turn_idx,
-  *      ts) + boundary counts + broadcast offsets + a mapPartitions
-  *      that assigns rn = offset + local index — the classic scalable
-  *      zipWithIndex, O(rows/partitions) per task, no per-conv task.
-  * Step 2 IS implemented: extractDistributedRank below, property-tested
-  * byte-equal to extract() and shown to split a mega-conversation across
-  * all range partitions (ScaleSpec). The window path stays the default
-  * because under the capped-conversation contract it is strictly better
-  * (one exchange, AQE-coalescible, no persist); switch paths when a
-  * conversation can exceed task-size bounds.
+  * RANK-SKEW NOTE (the 10^12-turn claim): both rank paths place one whole
+  * conversation's sort+rank on one task — the window's reducer, or the
+  * scan task that reads its row group. That is fine while conversations
+  * are capped (the generator caps at 512; ScaleSpec proves the EXPENSIVE
+  * extraction stage still splits a 100k-turn conversation across
+  * input-split tasks on the exchange path; on the exchange-free path a
+  * conversation is at most one row group). For a pathological
+  * 10^8-turn conversation the rank itself must stop being a single-task
+  * sort: extractDistributedRank below (repartitionByRange(conv_id,
+  * turn_idx, ts) + boundary counts + broadcast offsets + rn = offset +
+  * local index, the classic scalable zipWithIndex) does that. It is
+  * property-tested byte-equal to extract() and shown to split a
+  * mega-conversation across all range partitions (ScaleSpec). extract()
+  * stays the default because under the capped-conversation contract it
+  * is strictly better (at most one exchange, AQE-coalescible, no
+  * persist); switch paths when a conversation can exceed task-size
+  * bounds.
   */
 object ExtractPipeline {
 
@@ -65,11 +72,12 @@ object ExtractPipeline {
     Window.partitionBy("conv_id").orderBy(col("turn_idx"), col("ts"))
 
   /** turns(conv_id, turn_idx, role, text, tool, ts) ->
-    * (conv_id, turn_idx, rn, kind, text, spans) — the north-rule output
-    * contract. `blocks` is deliberately NOT here: block text duplicates
-    * the extracted text, and the exchange before the window would carry
-    * it all; block-level analytics use extractWithBlocks instead. Since
-    * the field is never read here, the kernel bridge never builds it.
+    * (conv_id, turn_idx, rn, kind, text, spans, ok) — the north-rule
+    * output contract. `blocks` is deliberately NOT here: block text
+    * duplicates the extracted text, and the sort (and, on the exchange
+    * path, the shuffle) before the rank would carry it all; block-level
+    * analytics use extractWithBlocks instead. Since the field is never
+    * read here, the kernel bridge never builds it.
     */
   def extract(turns: DataFrame): DataFrame = extractVariant(turns, 0)
 
@@ -77,19 +85,9 @@ object ExtractPipeline {
     * distillation_model.py:13-45): `variant` indexes the N-entry
     * ExtractParams.Variants map (0 = golden default params).
     */
-  def extractVariant(turns: DataFrame, variant: Int): DataFrame = {
-    turns
-      .select(
-        col("conv_id"), col("turn_idx"), col("ts"),
-        Functions.extract_turn_variant(col("text"), variant).as("ex"))
-      .withColumn("rn", row_number().over(orderWindow))
-      .select(
-        col("conv_id"), col("turn_idx"), col("rn"),
-        col("ex.kind").as("kind"),
-        col("ex.text").as("text"),
-        col("ex.spans").as("spans"),
-        col("ex.ok").as("ok"))
-  }
+  def extractVariant(turns: DataFrame, variant: Int): DataFrame =
+    ranked(turns, Functions.extract_turn_variant(col("text"), variant),
+      Seq("kind", "text", "spans", "ok"))
 
   /** extract() for LENGTH-CLUSTERED input layouts (sorted dumps,
     * per-source files): Rebalance.equalizeByLength composed in front of
@@ -116,8 +114,8 @@ object ExtractPipeline {
   }
 
   /** extract() with rn widened to BIGINT — the long-rank output mode.
-    * The window path itself cannot exceed 2^31 (Spark's row_number is
-    * int-typed), so here the cast buys SCHEMA parity with
+    * Neither rank path of extract() exceeds 2^31 (row_number and
+    * conv_rank are int-typed), so here the cast buys SCHEMA parity with
     * extractDistributedRankLong, the path that actually ranks past the
     * int boundary; pick the pair (extractLong, extractDistributedRankLong)
     * when a single conversation may exceed 2^31 turns, and the default
@@ -127,18 +125,31 @@ object ExtractPipeline {
     extract(turns).withColumn("rn", col("rn").cast("long"))
 
   /** Same pipeline, block-level output included (for blocks()). */
-  def extractWithBlocks(turns: DataFrame): DataFrame = {
-    turns
-      .select(
-        col("conv_id"), col("turn_idx"), col("ts"),
-        Functions.extract_turn(col("text")).as("ex"))
-      .withColumn("rn", row_number().over(orderWindow))
-      .select(
-        col("conv_id"), col("turn_idx"), col("rn"),
-        col("ex.kind").as("kind"),
-        col("ex.text").as("text"),
-        col("ex.spans").as("spans"),
-        col("ex.blocks").as("blocks"))
+  def extractWithBlocks(turns: DataFrame): DataFrame =
+    ranked(turns, Functions.extract_turn(col("text")),
+      Seq("kind", "text", "spans", "blocks"))
+
+  /** The one rank site: `ex` (an extract_turn struct over the raw text)
+    * projected map-side, rn per conversation, then (conv_id, turn_idx,
+    * rn) and the struct's `fields`. The exchange-free path (see the
+    * header) projects the fields before its local sort, so the sort
+    * carries neither the raw text nor an unread struct field (the bridge
+    * builds `blocks` only when read), and conv_rank sits DIRECTLY above
+    * the sort, so nothing can reorder rows in between.
+    */
+  private def ranked(turns: DataFrame, ex: Column, fields: Seq[String]): DataFrame = {
+    val keys = Seq(col("conv_id"), col("turn_idx"), col("ts"))
+    val extracted = turns.select(keys :+ ex.as("ex"): _*)
+    val exFields = fields.map(f => col(s"ex.$f").as(f))
+    if (ParquetLayout.rowGroupClustered(turns, "conv_id"))
+      extracted.select(keys ++ exFields: _*)
+        .sortWithinPartitions(keys: _*)
+        .select(Seq(col("conv_id"), col("turn_idx"),
+          Functions.conv_rank(col("conv_id")).as("rn")) ++ fields.map(col): _*)
+    else
+      extracted
+        .withColumn("rn", row_number().over(orderWindow))
+        .select(Seq(col("conv_id"), col("turn_idx"), col("rn")) ++ exFields: _*)
   }
 
   /** The fully distributed rank path (roadmap step 2 made real): stable
@@ -318,8 +329,8 @@ object ExtractPipeline {
     * property-tested.
     *
     * The explicit repartition on (conv_id, salt) is REQUIRED, not
-    * cosmetic: composed after the ordering window the input is already
-    * hash-partitioned by conv_id, which satisfies (conv_id, salt)
+    * cosmetic: composed after extract()'s exchange path the input is
+    * already hash-partitioned by conv_id, which satisfies (conv_id, salt)
     * clustering, so without it Catalyst elides the phase-1 exchange and
     * both phases of the biggest conversation run on the ONE task that
     * owns it (round-1 judge finding). The forced exchange costs one

@@ -70,7 +70,8 @@ object StreamExtract {
     * Scale notes: state per key is bounded by the conversation cap
     * (same contract as the batch window); on a real cluster this runs on
     * the RocksDB state store so total state is disk-backed, and the
-    * shuffle is the same hash-by-conv_id exchange the batch job does.
+    * shuffle is the same hash-by-conv_id exchange the batch job does on
+    * its exchange path.
     */
   def convSessions(spark: SparkSession, extracted: DataFrame,
       gapMs: Long = 30L * 60 * 1000): Dataset[ConvDoc] = {

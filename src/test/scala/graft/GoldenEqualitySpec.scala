@@ -135,6 +135,13 @@ class GoldenEqualitySpec extends AnyFunSuite {
     builds.reset()
     assert(ExtractPipeline.extract(df).collect().length == turns.size)
     assert(builds.sum == 0, s"extract() built ${builds.sum} block arrays")
+    // the exchange-free rank's local sort must not copy the struct either
+    val dir = java.nio.file.Files.createTempDirectory("graft_blocks").toString
+    df.repartitionByRange(2, $"conv_id").write.mode("overwrite").parquet(dir)
+    assert(graft.io.ParquetLayout.rowGroupClustered(spark.read.parquet(dir), "conv_id"))
+    builds.reset()
+    assert(ExtractPipeline.extract(spark.read.parquet(dir)).collect().length == turns.size)
+    assert(builds.sum == 0, s"exchange-free extract() built ${builds.sum} block arrays")
 
     builds.reset()
     val withBlocks = ExtractPipeline.extractWithBlocks(df)

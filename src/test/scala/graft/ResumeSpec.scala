@@ -1,8 +1,9 @@
 package graft
 
 import graft.data.TranscriptGen
-import graft.io.TableIO
+import graft.io.{ParquetLayout, TableIO}
 import graft.pipeline.ExtractPipeline
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -149,5 +150,38 @@ class ResumeSpec extends AnyFunSuite {
           s"bucket ${m.bucket}: ${tps(m.bucket)} vs the wave's $rate")
       }
     }
+  }
+
+  test("a checkpointed run leaves the session's partitionOverwriteMode alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try {
+      val turns = turnsDf()
+      val dir = freshDir()
+      TableIO.runCheckpointed(spark, turns, ExtractPipeline.extract,
+        dir, nBuckets = 4, waveSize = 2)
+      assert(spark.conf.get(key) == "static")
+      // the second wave's overwrite still replaced only its own buckets
+      assert(contentOf(dir).size == turns.count())
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("checkpointed run over a clustered Parquet input == the same rows from a local frame") {
+    val in = freshDir()
+    turnsDf().repartitionByRange(4, col("conv_id")).write.mode("overwrite").parquet(in)
+    val clustered = spark.read.parquet(in)
+    val nBuckets = 8
+    // each wave's input keeps the proof, so its extract() takes the exchange-free rank
+    assert(ParquetLayout.rowGroupClustered(clustered
+      .withColumn("bucket", TableIO.bucketCol(nBuckets)).filter(col("bucket").isin(0, 1)),
+      "conv_id"))
+    val (a, b) = (freshDir(), freshDir())
+    def key(ms: Seq[TableIO.Manifest]) =
+      ms.map(m => (m.bucket, m.rows, m.convs, m.digest)).sortBy(_._1)
+    val got = TableIO.runCheckpointed(spark, clustered, ExtractPipeline.extract, a, nBuckets, waveSize = 2)
+    val want = TableIO.runCheckpointed(spark, turnsDf(), ExtractPipeline.extract, b, nBuckets, waveSize = 2)
+    assert(key(got) == key(want))
+    assert(contentOf(a) == contentOf(b))
   }
 }

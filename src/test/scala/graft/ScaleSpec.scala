@@ -335,9 +335,13 @@ class ScaleSpec extends AnyFunSuite {
     // constant-fold extract_turn driver-side and hide the real plan
     val dir = java.nio.file.Files
       .createTempDirectory("graft_planaudit").toString
+    // round-robin rows: every conversation straddles both files, so the
+    // footers prove nothing and the rank takes the exchange path
     graft.data.TranscriptGen.tiny(nConvs = 4, cap = 8)
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .repartition(2)
       .write.mode("overwrite").parquet(dir)
+    assert(!graft.io.ParquetLayout.rowGroupClustered(spark.read.parquet(dir), "conv_id"))
     val df = ExtractPipeline.extract(spark.read.parquet(dir))
     df.collect() // force execution so the final (AQE-resolved) plan exists
     val plan = df.queryExecution.explainString(
@@ -364,6 +368,36 @@ class ScaleSpec extends AnyFunSuite {
       s"exchange input must carry extracted fields:\n${exch.get}")
     assert(!exch.get.contains(", text#"),
       s"exchange input must not carry the raw payload column:\n${exch.get}")
+  }
+
+  test("flagship plan: whole conversations per row group rank with ZERO exchanges, extract_turn in codegen") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan, WholeStageCodegenExec}
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_planlocal").toString
+    // the same fixture, each file holding a disjoint conv_id range
+    graft.data.TranscriptGen.tiny(nConvs = 4, cap = 8)
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .repartitionByRange(2, col("conv_id"))
+      .write.mode("overwrite").parquet(dir)
+    val df = ExtractPipeline.extract(spark.read.parquet(dir))
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(!plan.toString.contains("Exchange"), s"clustered input must not shuffle:\n$plan")
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(fused)
+    }
+    val inCodegen = plan.collect { case w: WholeStageCodegenExec => w }.flatMap(w => fused(w.child))
+    assert(inCodegen.exists(_.expressions.exists(_.toString.contains("extract_turn"))),
+      s"extract_turn must be evaluated inside a WholeStageCodegen stage:\n$plan")
+    // conv_rank sits directly above the local sort on (conv_id, turn_idx, ts)
+    val rankOp = plan.find(_.expressions.exists(_.toString.contains("conv_rank")))
+    assert(rankOp.exists(_.children.headOption.exists {
+      case s: SortExec => !s.global &&
+        s.sortOrder.map(_.child.toString.takeWhile(_ != '#')) == Seq("conv_id", "turn_idx", "ts")
+      case _ => false
+    }), s"conv_rank must sit directly above the local sort:\n$plan")
   }
 
   test("flagship plan: the scan reads 4 of 6 columns, extract_turn runs in whole-stage codegen") {
