@@ -15,7 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * It is correct ONLY directly above a local sort whose leading key is
   * `conv`, over partitions that each hold whole conversations
-  * (ExtractPipeline's exchange-free rank). Being nondeterministic, it
+  * (ExtractPipeline's exchange-free rank), or with an offset added to
+  * each partition's first run where a conversation spans partitions
+  * (its distributed rank). Being nondeterministic, it
   * keeps Catalyst from pushing filters below it or dropping the sort
   * under it. Nulls form one run, as they form one window partition.
   */

@@ -20,8 +20,9 @@ object Functions {
   def extract_turn_variant(c: Column, variant: Int): Column =
     ColumnBridge.column(ExtractTurn(ColumnBridge.expression(c), variant))
 
-  /** conv_rank(conv_id): ExtractPipeline's exchange-free rank; correct
-    * only directly above a local sort on conv_id (see ConvRank).
+  /** conv_rank(conv_id): ExtractPipeline's local rank (exchange-free and
+    * distributed paths); correct only directly above a local sort on
+    * conv_id (see ConvRank).
     */
   private[graft] def conv_rank(c: Column): Column =
     ColumnBridge.column(ConvRank(ColumnBridge.expression(c)))

@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
   *    magnitude smaller than the corpus) eagerly: one checkpoint of the
   *    pairs, then a union-find on the driver when they fit its bound
   *    (two jobs), else O(log n) star-contraction rounds first. So this
-  *    composed call is a multi-job driver program like
-  *    extractDistributedRank, not a single lazy plan.
+  *    composed call is a multi-job driver program (as is
+  *    extractDistributedRank, whose boundary aggregate runs before its
+  *    result is returned), not a single lazy plan.
   */
 object CorpusPipeline {
 

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * field only when read, so extract() and every path that projects
   * (kind, text, spans, ok) never build or encode block rows.
   *
-  * The rank takes one of two physical paths, decided once per call from
+  * The rank takes one of three physical paths, all at one rank site
+  * (`ranked`). extract() picks one of the first two once per call from
   * the input (ParquetLayout, footers only; no option):
   *  - EXCHANGE-FREE when the input is Project/Filter over one Parquet scan
   *    whose footers prove every conversation sits in one row group
@@ -33,12 +34,18 @@ import org.apache.spark.sql.functions._
   *  - HASH EXCHANGE + row_number window for everything else (local rows,
   *    RDD-backed or cached frames, unions, repartitions, streams, files
   *    without the stats). 1 exchange.
-  * Both give the same rows and schema (RankPathSpec).
+  *  - DISTRIBUTED (extractDistributedRank, on request): range exchange on
+  *    (conv_id, turn_idx, ts), the same local sort + conv_rank per range
+  *    partition, then per-partition offsets for the runs that continue a
+  *    conversation from earlier partitions. 1 exchange of the rows (and
+  *    the boundary aggregate's one of at most P rows), one persist.
+  * All three give the same rows and schema (RankPathSpec).
   *
   * Scale notes (100 TB design):
-  *  - extraction runs BEFORE the rank, so the sort (and the shuffle, on
-  *    the exchange path) moves extracted text + spans, never the raw
-  *    payload (payloads dominate input bytes).
+  *  - extraction runs BEFORE the rank on all three paths, so the sort,
+  *    the shuffle (hash or range) and the distributed path's persist
+  *    move extracted text + spans, never the raw payload (payloads
+  *    dominate input bytes).
   *  - the exchange path's single exchange is the hash partition required
   *    by the ordering window; no extra repartition() is issued (Catalyst
   *    would not reuse a redundant one).
@@ -47,23 +54,20 @@ import org.apache.spark.sql.functions._
   *    two-phase SALTED aggregation so the largest conversation never
   *    lands on one reducer.
   *
-  * RANK-SKEW NOTE (the 10^12-turn claim): both rank paths place one whole
-  * conversation's sort+rank on one task — the window's reducer, or the
-  * scan task that reads its row group. That is fine while conversations
-  * are capped (the generator caps at 512; ScaleSpec proves the EXPENSIVE
-  * extraction stage still splits a 100k-turn conversation across
-  * input-split tasks on the exchange path; on the exchange-free path a
-  * conversation is at most one row group). For a pathological
+  * RANK-SKEW NOTE (the 10^12-turn claim): extract()'s two paths place one
+  * whole conversation's sort+rank on one task — the window's reducer, or
+  * the scan task that reads its row group. That is fine while
+  * conversations are capped (the generator caps at 512; ScaleSpec proves
+  * the EXPENSIVE extraction stage still splits a 100k-turn conversation
+  * across input-split tasks on the exchange path; on the exchange-free
+  * path a conversation is at most one row group). For a pathological
   * 10^8-turn conversation the rank itself must stop being a single-task
-  * sort: extractDistributedRank below (repartitionByRange(conv_id,
-  * turn_idx, ts) + boundary counts + broadcast offsets + rn = offset +
-  * local index, the classic scalable zipWithIndex) does that. It is
-  * property-tested byte-equal to extract() and shown to split a
-  * mega-conversation across all range partitions (ScaleSpec). extract()
-  * stays the default because under the capped-conversation contract it
-  * is strictly better (at most one exchange, AQE-coalescible, no
-  * persist); switch paths when a conversation can exceed task-size
-  * bounds.
+  * sort: the distributed path (rn = first-run offset + local conv_rank,
+  * the classic scalable zipWithIndex) splits a mega-conversation across
+  * all range partitions (ScaleSpec). extract() stays the default because
+  * under the capped-conversation contract it is strictly better (at most
+  * one exchange, AQE-coalescible, no persist); switch paths when a
+  * conversation can exceed task-size bounds.
   */
 object ExtractPipeline {
 
@@ -131,59 +135,70 @@ object ExtractPipeline {
 
   /** The one rank site: `ex` (an extract_turn struct over the raw text)
     * projected map-side, rn per conversation, then (conv_id, turn_idx,
-    * rn) and the struct's `fields`. The exchange-free path (see the
-    * header) projects the fields before its local sort, so the sort
-    * carries neither the raw text nor an unread struct field (the bridge
-    * builds `blocks` only when read), and conv_rank sits DIRECTLY above
-    * the sort, so nothing can reorder rows in between.
+    * rn) and the struct's `fields`. `nPart` set takes the distributed
+    * branch over that many range partitions (0 = default parallelism);
+    * otherwise the layout check picks the exchange-free or the window
+    * branch (see the header). The conv_rank branches project the fields
+    * before their sort, so the sort (and the range exchange) carries
+    * neither the raw text nor an unread struct field (the bridge builds
+    * `blocks` only when read), and conv_rank sits DIRECTLY above the
+    * sort, so nothing can reorder rows in between.
     */
-  private def ranked(turns: DataFrame, ex: Column, fields: Seq[String]): DataFrame = {
+  private def ranked(turns: DataFrame, ex: Column, fields: Seq[String],
+      nPart: Option[Int] = None, longRank: Boolean = false): DataFrame = {
     val keys = Seq(col("conv_id"), col("turn_idx"), col("ts"))
     val extracted = turns.select(keys :+ ex.as("ex"): _*)
     val exFields = fields.map(f => col(s"ex.$f").as(f))
-    if (ParquetLayout.rowGroupClustered(turns, "conv_id"))
-      extracted.select(keys ++ exFields: _*)
-        .sortWithinPartitions(keys: _*)
+    def convRanked(in: DataFrame): DataFrame =
+      in.sortWithinPartitions(keys: _*)
         .select(Seq(col("conv_id"), col("turn_idx"),
           Functions.conv_rank(col("conv_id")).as("rn")) ++ fields.map(col): _*)
-    else
-      extracted
-        .withColumn("rn", row_number().over(orderWindow))
-        .select(Seq(col("conv_id"), col("turn_idx"), col("rn")) ++ exFields: _*)
+    nPart match {
+      case Some(n) =>
+        val p = if (n > 0) n else turns.sparkSession.sparkContext.defaultParallelism
+        // DISK_ONLY at cluster scale (extractDistributedRank)
+        val local = CacheScope.cache(convRanked(
+          extracted.select(keys ++ exFields: _*).repartitionByRange(p, keys: _*)))
+        withOffsets(local, firstRunOffsets(local, p), longRank)
+      case None if ParquetLayout.rowGroupClustered(turns, "conv_id") =>
+        convRanked(extracted.select(keys ++ exFields: _*))
+      case None =>
+        extracted
+          .withColumn("rn", row_number().over(orderWindow))
+          .select(Seq(col("conv_id"), col("turn_idx"), col("rn")) ++ exFields: _*)
+    }
   }
 
-  /** The fully distributed rank path (roadmap step 2 made real): stable
-    * rn WITHOUT a per-conversation window task, for corpora where one
+  /** The fully distributed rank (the header's third branch): stable rn
+    * WITHOUT a per-conversation rank task, for corpora where one
     * conversation exceeds task-size bounds.
     *
-    *   1. repartitionByRange(conv_id, turn_idx, ts) + sortWithinPartitions
-    *      — a single conversation SPANS partitions instead of owning one
-    *      task (persisted: the two light jobs below must see the same
-    *      partition layout; at cluster scale use DISK_ONLY — the persist
-    *      is the price of removing the mega-task, same trade as
+    *   1. extraction map-side, then repartitionByRange(conv_id, turn_idx,
+    *      ts) + sortWithinPartitions + conv_rank: a conversation SPANS
+    *      partitions, and each partition ranks its own runs from 1. The
+    *      frame is persisted (at cluster scale use DISK_ONLY — the
+    *      persist is the price of removing the mega-task, same trade as
     *      RDD.zipWithIndex),
-    *   2. boundary-counts job: each partition emits at most two tuples
-    *      (its first and last conversation's local row count) — a
-    *      conversation can only span partitions by being a partition's
-    *      first or last conv, so <= 2P tuples reach the driver no matter
-    *      how many conversations exist,
-    *   3. offsets: for (partition p, conv c), rank offset = rows of c in
-    *      earlier partitions — computed driver-side over the tiny tuple
-    *      set and broadcast,
-    *   4. rank pass: per-partition running counter per conversation,
-    *      rn = offset + local index; extraction then runs as the same
-    *      narrow projection on the ranged partitions.
+    *   2. one aggregate over it gives each partition's first and last run
+    *      (firstRunOffsets): at most P rows reach the driver, however
+    *      many conversations there are,
+    *   3. a driver loop turns them into one offset per partition: only a
+    *      partition's first run can continue a conversation from earlier
+    *      partitions,
+    *   4. rn = offset + local rank, the offsets a plan literal
+    *      (withOffsets).
     *
-    * Output is BYTE-IDENTICAL to extract() (property-tested): same
-    * ordering spec, same kernel, different physical rank.
+    * Rows and schema equal extract()'s (RankPathSpec): same ordering
+    * spec, same kernel, different physical rank.
     *
-    * The ranged dataset MUST stay persisted until the result is
-    * materialized (the rank offsets were computed against its sampled
-    * range layout — a recompute could resample boundaries), so consume
-    * the result inside a CacheScope, which releases it afterwards.
+    * The ranked frame MUST stay persisted until the result is
+    * materialized (the offsets were computed against its sampled range
+    * layout — a recompute could resample boundaries), so consume the
+    * result inside a CacheScope, which releases it afterwards.
     */
   def extractDistributedRank(turns: DataFrame, nPart: Int = 0): DataFrame =
-    distributedRank(turns, nPart, longRank = false)
+    ranked(turns, Functions.extract_turn(col("text")),
+      Seq("kind", "text", "spans", "ok"), Some(nPart))
 
   /** The distributed rank with rn as BIGINT — the path that actually
     * ranks past 2^31 (the int path's combineRank fails loudly there by
@@ -192,101 +207,54 @@ object ExtractPipeline {
     * extractDistributedRank matches extract().
     */
   def extractDistributedRankLong(turns: DataFrame, nPart: Int = 0): DataFrame =
-    distributedRank(turns, nPart, longRank = true)
+    ranked(turns, Functions.extract_turn(col("text")),
+      Seq("kind", "text", "spans", "ok"), Some(nPart), longRank = true)
 
-  private def distributedRank(turns: DataFrame, nPart: Int,
-      longRank: Boolean): DataFrame = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val p = if (nPart > 0) nPart else spark.sparkContext.defaultParallelism
-    // DISK_ONLY at cluster scale (scaladoc above)
-    val ranged = CacheScope.cache(turns
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
-        col("tool"), col("ts"))
-      .as[graft.model.Turn]
-      .repartitionByRange(p, col("conv_id"), col("turn_idx"), col("ts"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"), col("ts")))
-
-    // job 1: per-partition boundary conversation counts (<= 2 per task)
-    val boundary: Array[(Int, String, Long)] = ranged.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var firstConv: String = null
-      var firstN = 0L
-      var curConv: String = null
-      var curN = 0L
-      it.foreach { t =>
-        if (t.conv_id != curConv) {
-          // close the previous run; keep it only if it was the first
-          if (curConv != null && firstConv == null) {
-            firstConv = curConv; firstN = curN
-          } // interior runs cannot span partitions — dropped
-          curConv = t.conv_id; curN = 0L
-        }
-        curN += 1
-      }
-      // emit only the partition's first and last conversation (a single
-      // conv filling the partition collapses to one tuple)
-      val res = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-      if (curConv != null) {
-        if (firstConv == null) res += ((pid, curConv, curN))
-        else {
-          res += ((pid, firstConv, firstN))
-          res += ((pid, curConv, curN))
-        }
-      }
-      res.iterator
-    }.collect()
-
-    // driver-side offsets over the tiny boundary set
-    val offsets: Map[(Int, String), Long] = {
-      val byConv = boundary.groupBy(_._2)
-      (for {
-        (conv, rows) <- byConv.toSeq
-        sorted = rows.sortBy(_._1)
-        (pid, _, _) <- sorted
-      } yield (pid, conv) ->
-        sorted.filter(_._1 < pid).map(_._3).sum).toMap
+  /** Per range partition of `local` (the distributed branch's persisted,
+    * locally ranked frame), its first run's conv_id and that
+    * conversation's rows in earlier partitions ((null, 0) for an empty
+    * partition). One aggregate: a partition's first run is its least
+    * conv_id and its last run its greatest (conv_id, rn), whose rn is
+    * that run's row count there. Structs, because min and max skip a
+    * null but order a struct's null field first, as the sort does. A
+    * first run continues the last run of the nearest non-empty partition
+    * before it when the two conv_id are equal, compared null-safely: the
+    * null conv_id rows are one conversation, as they are one window
+    * partition.
+    */
+  private def firstRunOffsets(local: DataFrame, p: Int): Seq[(String, Long)] = {
+    val bounds = local.groupBy(spark_partition_id())
+      .agg(min(struct(col("conv_id"))), max(struct(col("conv_id"), col("rn"))))
+      .collect().sortBy(_.getInt(0))
+    val offsets = Array.fill[(String, Long)](p)((null, 0L))
+    var prev: Option[String] = None // the last run's conv_id so far
+    var carry = 0L // that conversation's rows so far
+    bounds.foreach { b =>
+      val (first, last) = (b.getStruct(1), b.getStruct(2))
+      val off = if (prev.contains(first.getString(0))) carry else 0L
+      offsets(b.getInt(0)) = (first.getString(0), off)
+      carry = (if (first.getString(0) == last.getString(0)) off else 0L) + last.getInt(1)
+      prev = Some(last.getString(0))
     }
-    val bOffsets = spark.sparkContext.broadcast(offsets)
-
-    // job 2: rank pass — running counter per conversation + offset. The
-    // long path sums plainly; the int path goes through the checked
-    // combineRank and is cast back down AFTER validation (a bare cast
-    // would silently alias ranks past 2^31 — the exact failure the int
-    // contract forbids).
-    val useLong = longRank
-    val ranked = ranged.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val combine: (Long, Long) => Long =
-        if (useLong) _ + _ else (o, l) => combineRank(o, l).toLong
-      rankPartition(it, pid, bOffsets.value, combine)
-    }.toDF("t", "rn")
-
-    ranked
-      .select(col("t.conv_id").as("conv_id"), col("t.turn_idx").as("turn_idx"),
-        col("rn").cast(if (useLong) "long" else "int").as("rn"),
-        Functions.extract_turn(col("t.text")).as("ex"))
-      .select(col("conv_id"), col("turn_idx"), col("rn"),
-        col("ex.kind").as("kind"), col("ex.text").as("text"),
-        col("ex.spans").as("spans"), col("ex.ok").as("ok"))
+    offsets.toSeq
   }
 
-  /** Per-partition rank pass, factored pure so tests can drive it with a
-    * FORGED offset map (ranking past the int boundary needs no 2^31-row
-    * fixture): running counter per conversation, rn = combine(offset,
-    * local index).
+  /** `local`'s rn plus, on the first run of each partition, that
+    * partition's offset: `offsets(pid)` is (the first run's conv_id, its
+    * offset), as from firstRunOffsets. The offsets are a plan literal,
+    * matched null-safely, so no broadcast outlives the result. The int
+    * rank goes through the checked combineRank; the long rank adds
+    * plainly.
     */
-  private[graft] def rankPartition(it: Iterator[graft.model.Turn], pid: Int,
-      offsets: Map[(Int, String), Long],
-      combine: (Long, Long) => Long): Iterator[(graft.model.Turn, Long)] = {
-    var curConv: String = null
-    var local = 0L
-    it.map { t =>
-      if (t.conv_id != curConv) { curConv = t.conv_id; local = 0L }
-      local += 1
-      val off = offsets.getOrElse((pid, t.conv_id), 0L)
-      (t, combine(off, local))
-    }
+  private[graft] def withOffsets(local: DataFrame, offsets: Seq[(String, Long)],
+      longRank: Boolean): DataFrame = {
+    val (convs, offs) = (typedLit(offsets.map(_._1)), typedLit(offsets.map(_._2)))
+    val pid = spark_partition_id()
+    // coalesce keeps rn non-nullable, as row_number's is
+    val off = coalesce(when(col("conv_id") <=> convs(pid), offs(pid)), lit(0L))
+    local.withColumn("rn",
+      if (longRank) col("rn").cast("long") + off
+      else udf((o: Long, l: Int) => combineRank(o, l)).apply(off, col("rn")))
   }
 
   /** offset + local index -> rn, refusing to wrap: the DEFAULT output

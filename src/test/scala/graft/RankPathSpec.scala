@@ -3,17 +3,19 @@ package graft
 import graft.data.TranscriptGen
 import graft.io.{CacheScope, ParquetLayout}
 import graft.pipeline.ExtractPipeline
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The two physical rank paths of ExtractPipeline: exchange-free when the
-  * Parquet footers prove each conversation sits in one row group, hash
-  * exchange + window otherwise. Same rows and schema on both, over
-  * seeded layouts on each side of the check.
+/** The three physical rank paths of ExtractPipeline: exchange-free when
+  * the Parquet footers prove each conversation sits in one row group,
+  * hash exchange + window otherwise, and the distributed rank (range
+  * exchange + conv_rank + per-partition offsets). Same rows and schema on
+  * all three, over seeded layouts on each side of the check.
   */
 class RankPathSpec extends AnyFunSuite {
 
@@ -58,6 +60,21 @@ class RankPathSpec extends AnyFunSuite {
   /** Sorted rows, via the frame's own collect (so its plan has run). */
   private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
+  /** The distributed rank, int and long, has extract()'s and extractLong()'s
+    * schema and rows over `input`, against the same rows from `reference`.
+    */
+  private def assertDistributed(input: DataFrame, reference: DataFrame, nPart: Int,
+      clue: String): Unit = CacheScope {
+    Seq(
+      (ExtractPipeline.extractDistributedRank _, ExtractPipeline.extract _),
+      (ExtractPipeline.extractDistributedRankLong _, ExtractPipeline.extractLong _))
+      .foreach { case (dist, single) =>
+        val (got, want) = (dist(input, nPart), single(reference))
+        assert(got.schema == want.schema, clue)
+        assert(rowsOf(got) == rowsOf(want), clue)
+      }
+  }
+
   test("exchange-free rank == window rank over four Parquet layouts, 0 exchanges only where proven") {
     for (seed <- 1 to 3) {
       val src = turns(seed, retries = 0)
@@ -86,8 +103,29 @@ class RankPathSpec extends AnyFunSuite {
               got.queryExecution.executedPlan)
             assert(exchanges(want) == 1, s"$name/$seed")
           }
+        assertDistributed(input, reference, nPart = 5, s"distributed $name/$seed")
       }
     }
+    // more range partitions asked for than there are rows
+    val input = spark.read.parquet(write(turns(1, retries = 0).repartitionByRange(3, col("conv_id"))))
+    assertDistributed(input, spark.createDataFrame(input.rdd, input.schema),
+      nPart = input.count().toInt + 7, "nPart > rows")
+  }
+
+  test("distributed rank: a null conv_id run wider than a range partition is one conversation") {
+    // 200 null-conv_id turns span several of the 4 range partitions; one
+    // turn of the other conversation has null text
+    val schema = StructType(Seq(StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
+      StructField("role", StringType), StructField("text", StringType),
+      StructField("tool", StringType), StructField("ts", TimestampType)))
+    def turn(conv: String, i: Int, text: String) =
+      Row(conv, i, "user", text, null, new java.sql.Timestamp(1000L * i))
+    val rows = (0 until 200).map(i => turn(null, i, s"<p>null run $i</p>")) ++
+      (0 until 20).map(i => turn("conv-a", i, if (i == 7) null else s"plain turn $i"))
+    val input = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val window = ExtractPipeline.extract(input)
+    assert(window.filter(col("conv_id").isNull).agg(max("rn")).head().getInt(0) == 200)
+    assertDistributed(input, input, nPart = 4, "null conv_id")
   }
 
   test("layout check: Project/Filter keep the proof; computed keys, unions, caches and stats-free files do not") {

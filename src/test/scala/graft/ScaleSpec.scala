@@ -94,30 +94,31 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("long rank: rankPartition rides a forged offset past the int boundary") {
+  test("long rank: withOffsets rides a forged offset past the int boundary") {
     // the long path must rank correctly where the int path fails loudly —
-    // no 2^31-row fixture needed: forge an offset map that places this
-    // partition's conversation just below the boundary
-    val turns = (0 until 4).map(i => graft.model.Turn(
-      "conv-huge", i, "user", s"text $i", null, new java.sql.Timestamp(i)))
-    val forged = Map((3, "conv-huge") -> (Int.MaxValue.toLong - 2L))
-    val longRns = ExtractPipeline.rankPartition(
-        turns.iterator, pid = 3, forged, (o, l) => o + l)
-      .map(_._2).toSeq
-    assert(longRns == Seq(Int.MaxValue.toLong - 1L, Int.MaxValue.toLong,
-      Int.MaxValue.toLong + 1L, Int.MaxValue.toLong + 2L),
-      s"long rank must cross 2^31 densely: $longRns")
-    // the int path's combine throws at the same spot instead of aliasing
-    val intCombine: (Long, Long) => Long =
-      (o, l) => ExtractPipeline.combineRank(o, l).toLong
-    intercept[ArithmeticException] {
-      ExtractPipeline.rankPartition(
-        turns.iterator, pid = 3, forged, intCombine).foreach(_ => ())
+    // no 2^31-row fixture needed: forge an offset that places partition
+    // 1's first run just below the boundary. Partition 0 holds rn 1..4 of
+    // the same conversation, partition 1 rn 1..4 and then another one.
+    val local = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq.fill(2)((1 to 4).map(("conv-huge", _))).flatten :+ (("conv-next", 1)), 2))
+      .toDF("conv_id", "rn")
+    val forged = Seq((null, 0L), ("conv-huge", Int.MaxValue.toLong - 2L))
+    val rns = ExtractPipeline.withOffsets(local, forged, longRank = true)
+      .select(spark_partition_id(), col("conv_id"), col("rn")).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+    assert(rns.filter(_._1 == 1).map(_._3) == Seq(Int.MaxValue.toLong - 1L,
+      Int.MaxValue.toLong, Int.MaxValue.toLong + 1L, Int.MaxValue.toLong + 2L, 1L),
+      s"long rank must cross 2^31 densely, and only on the first run: $rns")
+    // offsets for other partitions don't leak in
+    assert(rns.filter(_._1 == 0).map(_._3) == Seq(1L, 2L, 3L, 4L))
+    // the int path refuses at the same spot instead of aliasing, inside the plan
+    val e = intercept[Exception] {
+      ExtractPipeline.withOffsets(local, forged, longRank = false).collect()
     }
-    // offsets for other partitions/convs don't leak in
-    val other = ExtractPipeline.rankPartition(
-      turns.iterator, pid = 1, forged, (o, l) => o + l).map(_._2).toSeq
-    assert(other == Seq(1L, 2L, 3L, 4L))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[ArithmeticException] &&
+      c.getMessage.contains("extractDistributedRankLong")),
+      s"the int refusal must name the long path: $e")
   }
 
   test("long rank: extractDistributedRankLong == extractLong, rn is BIGINT") {
