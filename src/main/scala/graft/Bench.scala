@@ -116,7 +116,6 @@ object Bench {
     */
   final case class WindowResult(passes: Seq[(Double, Double)],
       probes: Seq[Double], parProbes: Seq[Double]) {
-    def bestSec: Double = passes.map(_._1).min
     def bestTps: Double = passes.map(_._2).max
     // contamination heuristics: pass spread beyond 1.4x, or either CPU
     // control (1-thread / all-cores aggregate) sagging within the window.
@@ -165,43 +164,34 @@ object Bench {
     WindowResult(passes, probes.toSeq, parProbes.toSeq)
   }
 
-  /** Run every SparkEntry query once against sfDir. Returns per-query
-    * seconds (-1.0 on failure) plus the failure's class + message — a
-    * broken query in a driver bench must be diagnosable from the JSON
-    * alone, not require a rerun (round-3 hygiene item).
+  /** Run every SparkEntry query once against sfDir, in name order,
+    * through `SparkEntry.run`. Returns per-query seconds (-1.0 on
+    * failure) plus the failure's class + message — a broken query in a
+    * driver bench must be diagnosable from the JSON alone, not require a
+    * rerun (round-3 hygiene item).
     */
   def runQueries(spark: SparkSession, sfDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame] =
         SparkEntry.queries): (Seq[(String, Double)], Map[String, String]) = {
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // one CacheScope per query; it releases after the timed span closes
-    val results = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> graft.io.CacheScope {
-        val t0 = System.nanoTime()
-        // NonFatal only: an OutOfMemoryError/StackOverflowError must abort
-        // the whole bench (timings on a compromised JVM are not an
-        // artifact), not be recorded as a per-query -1 (round-4 ADVICE)
-        val ok = try { forceAll(fn(spark, sfDir)); true }
-          catch { case scala.util.control.NonFatal(e) =>
-            errors(name) =
-              s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}"
-                .take(300)
-            false
-          }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
+    val runs = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> SparkEntry.run(spark, sfDir, name, fn)(forceAll)
     }
-    (results, errors.toMap)
+    (runs.map { case (name, r) => name -> r.getOrElse(-1.0) },
+      runs.collect { case (name, Left(e)) => name -> e }.toMap)
   }
 
-  /** JSON string-body escape: backslash, quote, and EVERY control char
-    * (an exception message with a stray control byte must not break the
-    * driver's json.load — same rule Verify applies to oracle SQL).
+  /** JSON string-body escape, lossless: backslash, quote, and EVERY
+    * control char (<0x20) — a tab or CR in builder-authored oracle SQL or
+    * a stray control byte in an exception message would otherwise make
+    * the driver's json.load fail and silently zero the round.
     */
   private[graft] def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
+    case '"'  => "\\\""
     case '\\' => "\\\\"
-    case c if c < ' ' => " "
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }
 

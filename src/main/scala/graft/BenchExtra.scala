@@ -1,17 +1,17 @@
 package graft
 
-import graft.io.CacheScope
-
 /** Round-6 optimization harness (guide §1): isolate individual declared
   * queries — time each with the noop sink (same action Bench uses) over
-  * several repeats, and dump `.explain("formatted")` for plan-shape
-  * evidence. The driver-facing Bench is FROZEN; this main exists so
-  * per-query iteration does not need the full extraction windows.
+  * several repeats, each through `SparkEntry.run`, and dump
+  * `.explain("formatted")` for plan-shape evidence. The driver-facing
+  * Bench is FROZEN; this main exists so per-query iteration does not
+  * need the full extraction windows.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.BenchExtra [plans=<dir>] [reps=N] [q1 q2 ...]"
-  * With no query args, runs all declared queries. With plans=<dir>, also
+  * Queries run in name order; with no query args, all declared ones. A
+  * failed query prints its error and the run goes on. With plans=<dir>, also
   * writes <dir>/<query>.txt containing the formatted plan and then the
   * FINAL (post-execution, AQE-resolved) plan with its reused and shuffle
   * query-stage counts: the pre-execution explain shows duplicated
@@ -31,37 +31,39 @@ object BenchExtra {
     val names = args.filterNot(a =>
       a.startsWith("plans=") || a.startsWith("reps="))
     val spark = Bench.makeSpark(cpus)
-    val qs =
-      if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
-      else names.toSeq.map(n => n -> SparkEntry.queries(n))
+    val all = SparkEntry.queries
+    val qs = (if (names.isEmpty) all.keys else names.toSeq)
+      .toSeq.sorted.map(n => n -> all(n))
     plansDir.foreach(d => new java.io.File(d).mkdirs())
-    val out = qs.map { case (name, fn) =>
-      spark.sparkContext.setJobDescription(s"bench-extra: $name")
-      plansDir.foreach { d => CacheScope {
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        // run THIS QueryExecution so its adaptive plan reaches its final form
-        df.collect()
-        val fin = df.queryExecution.executedPlan.toString
-        val reused = fin.linesIterator.count(_.contains("ReusedQueryStage"))
-        val stages = fin.linesIterator.count(_.contains("ShuffleQueryStage"))
-        val w = new java.io.PrintWriter(s"$d/$name.txt")
-        try w.write(plan + "\n== Final Plan (post-execution) ==\n" +
-          s"reusedStages=$reused shuffleStages=$stages\n" + fin)
-        finally w.close()
-      }}
-      // one CacheScope per run, released outside the timed span
-      val times = (1 to reps).map { _ => CacheScope {
-        val t0 = System.nanoTime()
-        Bench.forceAll(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }}
-      println(f"[bx] $name%-18s min=${times.min}%7.3f  all=" +
-        times.map(t => f"$t%.3f").mkString(","))
-      name -> times.min
+    val out = qs.flatMap { case (name, fn) =>
+      val planned = plansDir.map(d =>
+        SparkEntry.run(spark, sfDir, name, fn) { df =>
+          val plan = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          // run THIS QueryExecution so its adaptive plan reaches its final form
+          df.collect()
+          val fin = df.queryExecution.executedPlan.toString
+          val reused = fin.linesIterator.count(_.contains("ReusedQueryStage"))
+          val stages = fin.linesIterator.count(_.contains("ShuffleQueryStage"))
+          val w = new java.io.PrintWriter(s"$d/$name.txt")
+          try w.write(plan + "\n== Final Plan (post-execution) ==\n" +
+            s"reusedStages=$reused shuffleStages=$stages\n" + fin)
+          finally w.close()
+        })
+      val runs = if (planned.exists(_.isLeft)) planned.toSeq
+        else (1 to reps).map(_ =>
+          SparkEntry.run(spark, sfDir, name, fn)(Bench.forceAll))
+      runs.collectFirst { case Left(e) => e } match {
+        case Some(e) =>
+          println(s"[bx] $name failed: $e")
+          None
+        case None =>
+          val times = runs.flatMap(_.toOption)
+          println(f"[bx] $name%-18s min=${times.min}%7.3f  all=" +
+            times.map(t => f"$t%.3f").mkString(","))
+          Some(name -> times.min)
+      }
     }
-    spark.sparkContext.setJobDescription(null)
     println("[bx-summary] total_min=" + f"${out.map(_._2).sum}%.3f")
     spark.stop()
   }

@@ -8,9 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** Query contract (SURVEY.md §7): `entry`, `transcripts`, and the named
-  * queries that Verify and Bench run, each with its DuckDB oracle.
+  * queries that Verify, Bench and BenchExtra run through `run`, each
+  * with its DuckDB oracle.
   *
   * Each query is ONE `Query` declaration: its name, the dumps it needs,
   * its Spark builder and the DuckDB SQL its Verify output is
@@ -1356,6 +1358,29 @@ object SparkEntry {
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
         |ORDER BY l_returnflag, l_linestatus""".stripMargin)
   )
+
+  /** The one way to run a driver query: `build` (its dumps, then its
+    * frame) and `use` of the frame, every job they start tagged `name`
+    * (the caller's job description restored after), inside one
+    * CacheScope. Right is the seconds of needs + build + use, the clock
+    * stopped before the scope releases. A NonFatal failure is Left
+    * ("Class: message", first 300 chars); an Error such as
+    * OutOfMemoryError or StackOverflowError aborts the caller's run, whose
+    * timings on a compromised JVM would be no artifact.
+    */
+  def run(spark: SparkSession, dir: String, name: String,
+      build: (SparkSession, String) => DataFrame)(
+      use: DataFrame => Unit): Either[String, Double] =
+    DedupOps.described(spark.sparkContext, name) {
+      try CacheScope {
+        val t0 = System.nanoTime()
+        use(build(spark, dir))
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case NonFatal(e) =>
+        Left(s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}"
+          .take(300))
+      }
+    }
 
   /** Every query's builder, keyed by name. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -1,8 +1,6 @@
 package graft
-import graft.io.CacheScope
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -21,28 +19,12 @@ object Verify {
     // Dumps.ensure, and the DuckDB oracle reads them — a stale dump from
     // an older kernel revision must never survive into a driver run
     Dumps.clean(sfDir)
-    // one CacheScope per query releases its caches once its output is
-    // written. NonFatal only: an OutOfMemoryError or StackOverflowError
-    // aborts the run instead of passing as one failed query (Bench's rule)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try CacheScope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name"))
-      catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      SparkEntry.run(spark, sfDir, name, fn)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        .left.foreach(e => System.err.println(s"[verify] $name failed: $e"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = "\"" + Bench.jsonEscape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

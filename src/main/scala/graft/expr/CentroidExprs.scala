@@ -77,19 +77,6 @@ object CentroidKernel {
     bestCid
   }
 
-  /** Best cosine to any centroid (the spherical k-means objective term). */
-  def bestCos(emb: ArrayData, c: Centroids): Double = {
-    val x = emb.toFloatArray()
-    var best = -2.0
-    var j = 0
-    while (j < c.n) {
-      val cs = cosAt(x, c, j)
-      if (cs > best) best = cs
-      j += 1
-    }
-    best
-  }
-
   /** The nProbe nearest centroid ids, ordered (cos desc, cid asc) — the
     * literal recipe's array_sort over struct(-cos, cid) replicated.
     * Primitive insertion top-k (O(n*k), k tiny): no boxed tuples on the
@@ -166,20 +153,6 @@ case class NearestCentroid(child: Expression,
     CentroidKernel.nearest(v.asInstanceOf[ArrayData], bc.value)
   def kernelCall(c: String, cents: String): String =
     s"graft.expr.CentroidKernel$$.MODULE$$.nearest($c, $cents)"
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** best_centroid_cos(embedding) -> double (assignment objective). */
-case class BestCentroidCos(child: Expression,
-    bc: Broadcast[CentroidKernel.Centroids])
-    extends CentroidBroadcastExpr {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName = "best_centroid_cos"
-  override def nullSafeEval(v: Any): Any =
-    CentroidKernel.bestCos(v.asInstanceOf[ArrayData], bc.value)
-  def kernelCall(c: String, cents: String): String =
-    s"graft.expr.CentroidKernel$$.MODULE$$.bestCos($c, $cents)"
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

@@ -184,12 +184,6 @@ object TableIO {
     cum.zip(cum.tail).map { case (a, b) => b - a }
   }
 
-  /** Read back a manifested table (data files only; manifests are
-    * side-band).
-    */
-  def read(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
-
   /** The per-partition metrics table (FIXTURES.md §5) from manifests on
     * disk — (bucket, rows, convs, digest, wallMs, attempt, turnsPerSec).
     */

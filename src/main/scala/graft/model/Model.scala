@@ -61,15 +61,3 @@ final case class Span(start: Int, end: Int, kind: String)
   * @param text  decoded, normalized block text
   */
 final case class Block(span: Span, btype: String, score: Double, text: String)
-
-/** Final extractor output for one turn. `rn` is the stable order rank from
-  * Window.partitionBy(conv_id).orderBy(turn_idx, ts) per the north rule.
-  */
-final case class ExtractedTurn(
-    conv_id: String,
-    turn_idx: Int,
-    rn: Int,
-    kind: String,
-    text: String,
-    spans: Seq[Span],
-    blocks: Seq[Block])

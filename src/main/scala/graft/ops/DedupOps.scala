@@ -487,10 +487,11 @@ object DedupOps {
     Runtime.getRuntime.maxMemory / 4 / DriverBytesPerEdge
 
   /** `body` with the jobs it starts tagged `desc` (it may retag them),
-    * the caller's job description restored after.
+    * the caller's job description restored after. The one job-tag
+    * helper: `SparkEntry.run` tags each driver query's jobs with it.
     */
-  private def described[A](sc: org.apache.spark.SparkContext, desc: String)(
-      body: => A): A = {
+  private[graft] def described[A](sc: org.apache.spark.SparkContext,
+      desc: String)(body: => A): A = {
     val caller = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
     try body finally sc.setJobDescription(caller)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.expr.{BestCentroidCos, CentroidKernel, NearestCentroid, ProbeCentroids}
+import graft.expr.{CentroidKernel, NearestCentroid, ProbeCentroids}
 import graft.expr.Functions.cosine_sim
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -82,88 +82,6 @@ object SimilarityOps {
   def probeCentroids(emb: Column, bc: Broadcast[CentroidKernel.Centroids],
       nProbe: Int): Column =
     ColumnBridge.column(ProbeCentroids(ColumnBridge.expression(emb), bc, nProbe))
-
-  /** Sum of DIRECTION vectors (v/|v|) per group — the partial-aggregate/
-    * final-merge shape of spherical k-means: the normalized-mean
-    * direction maximizes the sum of cosines to the cluster's members.
-    * Map-side partials are one double[dim] per (partition, cluster); only
-    * k summed directions ever reach the driver.
-    */
-  private class DirSumAgg(dim: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Long, Array[Float]), Array[Double], Array[Float]] {
-    def zero: Array[Double] = new Array[Double](dim)
-    def reduce(b: Array[Double], row: (Long, Array[Float])): Array[Double] = {
-      val v = row._2
-      var nrm = 0.0
-      var i = 0
-      while (i < v.length) { nrm += v(i).toDouble * v(i); i += 1 }
-      if (nrm > 0) {
-        val inv = 1.0 / math.sqrt(nrm)
-        i = 0
-        while (i < v.length && i < dim) { b(i) += v(i) * inv; i += 1 }
-      }
-      b
-    }
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      var i = 0
-      while (i < dim) { a(i) += b(i); i += 1 }
-      a
-    }
-    def finish(b: Array[Double]): Array[Float] = b.map(_.toFloat)
-    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Float]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]()
-  }
-
-  /** Spherical k-means refinement of the centroid set (Lloyd iterations):
-    * assign map-side (fold over the centroid literal), recompute each
-    * cluster's direction with the typed aggregator, repeat. Empty
-    * clusters keep their previous centroid. Cosine is scale-invariant in
-    * the centroid, so the un-normalized direction sum IS the new
-    * centroid. The corpus never collects; per iteration the driver sees
-    * k vectors.
-    */
-  def refineCentroids(spark: SparkSession, corpus: DataFrame,
-      cents: Array[(Long, Array[Float])],
-      iters: Int): Array[(Long, Array[Float])] = {
-    import spark.implicits._
-    if (cents.isEmpty || iters <= 0) return cents
-    val dim = cents.head._2.length
-    var cur = cents
-    for (_ <- 1 to iters) {
-      val bc = broadcastCentroids(spark, cur)
-      val assigned = corpus
-        .select(nearestCentroid(col("embedding"), bc).as("cid"),
-          col("embedding"))
-        .as[(Long, Array[Float])]
-      val sums = assigned.groupByKey(_._1)
-        .agg(new DirSumAgg(dim).toColumn.name("dir"))
-        .collect().toMap
-      // each Lloyd iteration ships a fresh centroid set; release the
-      // previous one eagerly instead of waiting on the ContextCleaner
-      bc.destroy()
-      cur = cur.map { case (cid, old) =>
-        sums.get(cid) match {
-          case Some(dir) if dir.exists(_ != 0f) => (cid, dir)
-          case _ => (cid, old)
-        }
-      }
-    }
-    cur
-  }
-
-  /** Mean cosine of every corpus vector to its assigned centroid — the
-    * spherical k-means objective (used to assert refinement helps).
-    */
-  def assignmentObjective(corpus: DataFrame,
-      cents: Array[(Long, Array[Float])]): Double = {
-    val bc = broadcastCentroids(corpus.sparkSession, cents)
-    val best = ColumnBridge.column(
-      BestCentroidCos(ColumnBridge.expression(col("embedding")), bc))
-    corpus.select(avg(best)).head().getDouble(0)
-  }
 
   // --- the IVF index artifact ------------------------------------------
   //

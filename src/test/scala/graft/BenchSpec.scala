@@ -33,6 +33,8 @@ class BenchSpec extends AnyFunSuite {
     // must parse as a JSON string body
     assert(!esc.exists(_ < ' '))
     assert(esc.contains("\\\"") && esc.contains("\\\\"))
+    // lossless: each control char keeps its own escape
+    assert(esc == "path \\\"C:\\\\tmp\\\"\\nline2\\tcol\\u0001end")
     // wrapping in quotes yields valid JSON (no unescaped quote remains)
     val body = "\"" + esc + "\""
     assert(!body.drop(1).dropRight(1)

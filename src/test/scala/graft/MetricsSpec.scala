@@ -70,35 +70,32 @@ class MetricsSpec extends AnyFunSuite {
     assert(r2.getAs[Long]("matched") == 0L)
   }
 
-  test("typed Aggregator (combine_results recast): partials merge to P/R/hmean") {
+  test("span overlap report: partials of 3 partitions merge to P/R/hmean") {
     import spark.implicits._
-    import graft.metrics.SpanMetricsAggregator.RowCounts
-    // 3 rows of partials across partitions: matched 3, pred 4, gold 6
-    val ds = Seq(RowCounts(1, 2, 2), RowCounts(2, 2, 3), RowCounts(0, 0, 1))
-      .toDS().repartition(3)
-    val m = ds.select(graft.metrics.SpanMetricsAggregator.column).collect()(0)
-    assert(m.matched == 3 && m.nPred == 4 && m.nGold == 6)
-    assert(m.precision == 0.75 && m.recall == 0.5)
-    assert(math.abs(m.hmean - 0.6) < 1e-12)
-  }
-
-  test("typed Aggregator agrees with the SQL-agg spanOverlapReport") {
-    import spark.implicits._
-    val e = extracted.cache()
-    val sqlReport = Quality.spanOverlapReport(e, e).collect()(0)
-    val p = e.select(col("conv_id"), col("rn"), col("spans").as("pred_spans"))
-    val g = e.select(col("conv_id"), col("rn"), col("spans").as("gold_spans"))
-    val counts = p.join(g, Seq("conv_id", "rn"))
-      .select(
-        Quality.spanMatches(col("pred_spans"), col("gold_spans"))
-          .cast("long").as("matched"),
-        size(col("pred_spans")).cast("long").as("nPred"),
-        size(col("gold_spans")).cast("long").as("nGold"))
-      .as[graft.metrics.SpanMetricsAggregator.RowCounts]
-    val m = counts.select(graft.metrics.SpanMetricsAggregator.column).collect()(0)
-    assert(m.matched == sqlReport.getAs[Long]("matched"))
-    assert(m.precision == sqlReport.getAs[Double]("precision"))
-    assert(m.hmean == sqlReport.getAs[Double]("hmean"))
+    // the combine_results partial-update/final-merge contract
+    // (eval_det_iou.py:178-202) over hand-built partials:
+    // one turn per partition; per turn (matched, pred, gold) is (1, 2, 2),
+    // (2, 2, 3) and (0, 0, 1): matched 3, pred 4, gold 6 in all
+    def spans(rows: Seq[(String, Seq[(Int, Int)])]) =
+      spark.sparkContext.parallelize(rows, rows.size).toDF("conv_id", "raw")
+        .select(col("conv_id"), lit(1).as("rn"),
+          transform(col("raw"), s => struct(s.getField("_1").as("start"),
+            s.getField("_2").as("end"))).as("spans"))
+    val pred = spans(Seq(
+      "a" -> Seq((0, 100), (500, 600)),
+      "b" -> Seq((0, 100), (200, 300)),
+      "c" -> Seq.empty))
+    val gold = spans(Seq(
+      "a" -> Seq((0, 100), (200, 300)),
+      "b" -> Seq((0, 100), (200, 300), (400, 500)),
+      "c" -> Seq((0, 10))))
+    assert(pred.rdd.getNumPartitions >= 2 && gold.rdd.getNumPartitions >= 2)
+    val r = Quality.spanOverlapReport(pred, gold).collect()(0)
+    assert(r.getAs[Long]("matched") == 3L)
+    assert(r.getAs[Long]("n_pred") == 4L && r.getAs[Long]("n_gold") == 6L)
+    assert(r.getAs[Double]("precision") == 0.75)
+    assert(r.getAs[Double]("recall") == 0.5)
+    assert(math.abs(r.getAs[Double]("hmean") - 0.6) < 1e-12)
   }
 
   test("smoothed median (TrainingStats recast): constant series unchanged") {

@@ -25,7 +25,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   private def contentOf(dir: String): Set[(String, Int, Int, String)] =
-    TableIO.read(spark, dir)
+    spark.read.parquet(dir)
       .select("conv_id", "turn_idx", "rn", "text")
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3)))
